@@ -6,7 +6,8 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in ``kp_crypto_market_analytics_spark``; this
-module only adapts the registry to the driver's interface.
+module only adapts the registry to the driver's interface, handing it
+over least-recently-verified first (see ``_ordered``).
 """
 
 from __future__ import annotations
@@ -24,258 +25,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's per-round correctness run covers a registration-order
-# PREFIX (~50 entries), so the registry is ordered oldest-debt-first:
-# queries with no green driver row yet, oldest round first, then
-# already-green queries.  The green set is derived from the
-# CORRECTNESS_r*.json files on disk — it updates itself when a new
-# round's results land, no hand-maintained lists to go stale.
-
-# Round in which each query was first registered, for queries added
-# AFTER round 1 (everything absent from this map is round-1 vintage).
-# Older debt outranks newer debt in the driver prefix.
-_FIRST_SEEN_ROUND = {
-    n: 2
-    for n in (
-        "sim_ivf_trained", "t_decontaminate", "t_repetition",
-        "t_source_overlap", "t_corpus_filter", "e_quantize_int8",
-        "a_grouped_quantiles", "a_rollup_cascade", "t_stratified_sample",
-        "mm_frame_sample", "mm_resize_geometry", "p_zorder_stats",
-        "t_weighted_sample", "a_skew_profile", "sim_pq_topk",
-        "sim_pq_rerank", "w_resample_ffill", "a_incremental_rollup",
-        "w_rolling_corr", "dedup_canonical", "t_textrank",
-        "a_user_growth", "a_retention_cohorts", "a_funnel_steps",
-        "ti_bollinger", "ti_rsi", "ti_macd", "ti_drawdown",
-        "ti_stochastic", "ti_vwap", "ti_obv", "cdc_snapshot_diff",
-        "ti_acf", "w_cusum", "t_unigram_logprob", "ti_backtest",
-        "t_paragraph_dedup", "dedup_substring", "t_word_entropy",
-        "t_bigram_logprob", "t_quality_deciles", "dedup_incremental",
-        "j_asof_tolerance", "t_vocab_table", "t_bpe_merges", "t_oov_rate",
-        "cdc_apply", "t_countmin_hh", "e_pca_power", "mm_shard_manifest",
-        "dedup_lsh_recall", "w_streaks", "t_doc_report",
-    )
-}
-_FIRST_SEEN_ROUND.update(
-    {n: 3 for n in (
-        "sim_ivf_recall", "sim_pq_recall", "w_skew_split", "t_chunk_overlap",
-        "a_hll_distinct", "j_bloom_prune", "a_hll_merge", "a_hll_overlap",
-        "dq_constraints", "a_ddsketch_quantiles", "a_ddsketch_merge",
-        "a_grouping_sets", "g_triangle_count", "g_assoc_rules",
-        "e_covariance", "cdc_scd2", "g_pagerank", "g_degree_stats",
-        "g_label_prop", "dq_drift_psi", "a_benford", "t_zipf_fit", "w_gapfill_interp",
-        "e_jl_projection", "a_kmv_overlap", "mm_audio_windows", "t_hashed_features",
-        "g_jaccard_sim", "a_markov_transition", "q_rank_movers", "g_kcore",
-        "q_yoy_growth", "j_scd2_lookup", "w_stl_decompose", "q_abc_pareto", "a_funnel_windowed",
-        "t_keyphrase_rake", "a_cohort_ltv", "g_bfs_distance", "a_active_users", "a_lorenz_gini", "e_matryoshka_prefix", "q_customer_rfm",
-        "a_order_intervals", "w_seasonal_naive_forecast", "e_embedding_drift",
-    )}
-)
-_FIRST_SEEN_ROUND.update({n: 4 for n in ("a_hll_stream_parity",)})
-_FIRST_SEEN_ROUND.update(
-    {n: 6 for n in (
-        "dedup_lsh_bucket_cap", "dedup_stream_parity", "dedup_semantic",
-        "dq_k_anonymity", "j_interval_overlap", "p_compaction_plan",
-        "dedup_containment", "t_mg_stream_parity", "w_session_native",
-        "mm_phash_neardup", "a_trimmed_stats", "dedup_url_canon",
-        "t_bm25_topk", "q_skyline_frontier", "a_attribution",
-        "w_interval_merge", "ti_twap", "dq_dataset_checksum",
-        "dq_join_cardinality", "e_quantile_normalize", "t_rrf_fusion",
-        "g_ppr", "t_ndcg_eval", "a_mutual_info", "dq_fk_discovery",
-        "ti_realized_vol", "dq_ks_test", "e_knn_eval",
-        "p_pruning_sim", "a_kmv_difference",
-        "w_des_forecast", "a_bitmap_sets", "p_unpivot_metrics",
-        "a_session_paths", "ti_var_cvar", "g_modularity",
-    )}
-)
-_FIRST_SEEN_ROUND.update(
-    {
-        n: 5
-        for n in (
-            "a_ddsketch_stream_parity",
-            "t_countmin_stream_parity",
-            "e_label_centroid_audit",
-            "e_fisher_separation",
-            "a_kmv_stream_parity",
-        )
-    }
-)
-
-_FIRST_SEEN_ROUND.update(
-    {n: 7 for n in (
-        "t_train_split", "t_split_leakage", "t_mix_weights",
-        "t_tokenizer_fertility", "dq_column_profile",
-        "w_ewma_truncated", "t_ngram_novelty", "a_open_orders_sweep",
-        "g_hits", "a_bootstrap_ci", "t_epoch_shuffle",
-        "w_rolling_median", "mm_scene_cut",
-        "a_chi_square", "a_welch_ttest", "ti_sharpe", "ti_amihud",
-        "dq_outlier_iqr",
-        "a_anova_f", "w_theil_sen", "t_quality_logreg", "t_rouge_eval",
-        "a_survival_km", "a_info_gain_split",
-        "w_runs_test", "a_mann_kendall", "t_gopher_rules",
-        "a_kruskal_wallis", "a_spearman_corr", "ti_ljung_box",
-        "t_js_divergence",
-        "e_silhouette", "a_ab_lift", "a_did_estimator", "er_name_match",
-        "g_adamic_adar", "w_pettitt_change", "a_mann_whitney",
-        "a_cohens_kappa",
-    )}
-)
-
-_FIRST_SEEN_ROUND.update(
-    {n: 8 for n in (
-        "t_corpus_pipeline", "a_welch_stream_parity",
-        "ti_donchian", "ti_ulcer_index", "ti_beta", "ti_parkinson",
-        "a_levene_bf", "a_tukey_hsd", "a_hodges_lehmann",
-        "w_page_hinkley",
-        "dq_sequence_gaps", "g_preferential_attachment",
-        "g_clustering_coeff", "t_dsir_weights", "e_isotropy",
-        "a_jarque_bera", "dq_pk_uniqueness", "t_vocab_coverage",
-        "ti_sortino", "ti_calmar", "t_msttr", "mm_dedup_bytes",
-    )}
-)
-
-_FIRST_SEEN_ROUND.update(
-    {n: 9 for n in (
-        "w_rollstd_stream_parity", "j_stream_enrich_parity",
-        "dedup_ngram_jaccard_sampled",
-        "ti_atr", "ti_williams_r", "ti_mfi", "ti_adx",
-        "a_kendall_tau", "a_cramers_v", "a_grubbs",
-        "sim_mips_topk", "t_interleave_schedule", "o7_hash_reservoir",
-        "a_hurst_exponent", "a_evt_gumbel", "dq_freshness",
-        "dedup_est_calibration", "a_seasonality_strength",
-        "ti_kyle_lambda", "ti_roll_spread", "ti_corwin_schultz", "a_vpin",
-        "a_yule_walker_ar2", "a_durbin_watson", "a_newey_west",
-        "a_engle_granger", "a_tail_dependence", "t_coleman_liau",
-        "dq_l_diversity",
-        "a_granger_causality", "a_partial_corr", "a_cross_corr_leadlag",
-        "ti_kaufman_er", "ti_cmf", "a_markov_entropy_rate",
-        "a_vpin_stream_parity",
-        "t_naive_bayes", "a_cuped", "a_quantile_lift", "ti_ichimoku",
-        "ti_aroon",
-    )}
-)
-
-_FIRST_SEEN_ROUND.update(
-    {n: 10 for n in (
-        "dedup_lsh_stream_parity",
-        "ti_garman_klass", "ti_rogers_satchell", "ti_yang_zhang",
-        "ti_vortex", "ti_chande_momentum", "ti_cci", "ti_force_index",
-        "ti_eom",
-        "a_auc_roc", "a_brier_score", "a_ece_calibration", "a_cohens_d",
-        "a_cliffs_delta", "a_mcnemar", "a_cochran_q", "a_friedman_test",
-        "a_theil_u", "a_smape_mase",
-        "dq_orphan_rate", "t_group_kfold", "t_poisson_bootstrap",
-        "t_temporal_split_embargo", "t_lang_confusion",
-        "w_rolling_skewkurt",
-        "w_hampel_filter", "ti_pacf", "t_perplexity_buckets",
-        "t_cdc_chunking", "ti_keltner", "o8_systematic_sample",
-        "a_rank_ic", "a_variance_ratio", "a_transfer_entropy",
-    )}
-)
-
-_FIRST_SEEN_ROUND.update(
-    {n: 11 for n in (
-        "sim_ivf_stream_parity", "t_pii_redact",
-        "ti_dpo", "ti_vpt", "ti_nvi", "ti_coppock",
-        "a_sign_test", "a_wilcoxon_signed_rank", "a_page_trend",
-        "a_mood_median", "a_somers_d",
-        "t_yule_k", "t_readability", "t_code_detection",
-        "t_importance_sample", "t_curriculum_schedule",
-        "g_degree_assortativity", "g_rich_club", "e_hubness",
-        "a_fleiss_kappa",
-        "ti_trix", "a_quade_test", "a_log_rank",
-        "t_lexical_density", "t_term_dispersion",
-        "ti_fisher_transform", "w_tes_forecast",
-        # second round-11 wave (queries_r11b)
-        # (the r11 prefix budget: these two waves total 49 pending —
-        # the third wave below is therefore SCHEDULED into the
-        # round-12 driver prefix; see the vintage-12 block.)
-        "ti_ultimate_oscillator", "ti_awesome_oscillator", "ti_kst",
-        "ti_pivot_points", "ti_choppiness", "ti_bop",
-        "a_bartlett", "a_jonckheere_terpstra", "a_cochran_armitage",
-        "a_odds_ratio", "a_chow_test", "a_breusch_pagan",
-        "a_dagostino_k2", "a_cramer_von_mises",
-        "w_permutation_entropy", "w_sample_entropy",
-        "t_hapax_richness", "t_distinct_n",
-        "e_participation_ratio", "e_cka",
-        "g_bipartite_projection", "dq_fd_discovery",
-    )}
-)
-
-# Third round-11 wave (queries_r11c): AUTHORED in round 11, but the
-# round-11 driver prefix (50 pending max per round) was already
-# consumed by the first two waves (49 queries), so this wave is
-# explicitly SCHEDULED into the round-12 prefix — vintage 12 here is
-# a verification-scheduling date, not an authorship date.  All 33
-# carry committed full-sweep verification (tools/verify_local.py,
-# exact at both SFs) from round 11; the driver's green rows land in
-# CORRECTNESS_r12.  The budget test (tests/test_entry.py) gates each
-# vintage's pending set against the 50-entry prefix.
-_FIRST_SEEN_ROUND.update(
-    {n: 12 for n in (
-        "ti_hma", "ti_vwma", "ti_stoch_rsi", "ti_elder_ray",
-        "ti_omega_ratio", "ti_treynor", "ti_dd_duration",
-        "a_wasserstein_1d", "a_kuiper", "a_energy_distance",
-        "a_ansari_bradley", "a_gk_gamma", "a_pr_auc",
-        "a_matthews_corr", "a_log_loss", "a_fdr_bh",
-        "a_cronbach_alpha", "a_icc", "a_hill_tail",
-        "t_heaps_law", "t_collocation_pmi", "t_simpson_diversity",
-        "t_burstiness", "t_map_eval",
-        "g_katz", "g_harmonic", "g_wcc",
-        "e_lid", "e_rsa",
-        "dq_order_reconciliation", "dq_date_sanity",
-        "w_savitzky_golay", "w_zscore_peaks",
-        "ti_dema_tema", "ti_tsi", "a_jackknife_gini",
-        "e_triplet_violations", "g_eigenvector", "a_cohen_h",
-        "a_qq_deciles",
-        "ti_rvi", "a_wald_wolfowitz", "ti_ma_cross",
-        "a_capture_recapture", "a_two_proportion_z", "ti_chaikin_osc",
-    )}
-)
-
-# Semantically CHANGED in round N after earlier rows landed: rows from
-# rounds BEFORE N are stale evidence and must not count as green.  A
-# fresh green row from round >= N clears the entry automatically.
-_CHANGED_IN_ROUND = {
-    # re-windowed in round 2 (vacuous-gate fix):
-    "j_anti_customers": 2,
-    # round 9: the production LSH detector was re-parameterized
-    # (VERDICT r8 ask #1 — threshold-derived 64×16 banding over
-    # df-capped shingle sets, star-routed bucket cap), changing the
-    # signature table, pair sets, census, and recall columns; pre-r9
-    # green rows are stale evidence for all five.
-    # round 9: t_corpus_pipeline gained stage 7 (pack-and-shard census
-    # columns); round 10: stage 8 (mixture-weighted epoch deal columns
-    # epoch_target_packs / n_epoch_packs / epoch_tokens).
-    "t_corpus_pipeline": 10,
-    # round 9: the five sketch-parity folds trimmed 4 -> 3 unrolled
-    # micro-batches (bench ask #5; the parity property is
-    # per-emission) — 3-row outputs, so pre-r9 rows are stale.
-    "t_mg_stream_parity": 9,
-    "a_hll_stream_parity": 9,
-    "t_countmin_stream_parity": 9,
-    "a_ddsketch_stream_parity": 9,
-    "a_kmv_stream_parity": 9,
-    "dedup_minhash_sig": 9,
-    "dedup_minhash_lsh": 9,
-    "dedup_incremental": 9,
-    "dedup_lsh_recall": 9,
-    "dedup_lsh_bucket_cap": 9,
-    # round 9: e_isotropy bin edges recomputed as exact int/10 doubles
-    # (the 0.2-literal decimal-vs-double 1-ULP divergence); pre-r9
-    # rows hash the old edges.
-    "e_isotropy": 9,
-    # round 10: efficiency gains the single-state NULL guard (ADVICE
-    # r9 low — ln(1)=0 divide diverges between engines); values only
-    # change on degenerate tapes, but the column semantics did change.
-    "a_markov_entropy_rate": 10,
-}
+# PREFIX (~50 entries), so the registry is handed over least-recently-
+# verified first: queries whose latest CORRECTNESS_r*.json row is not a
+# full match (or that have no row) lead, then green queries by the
+# round of their latest row, oldest first; ties keep registry order.
+# Each round's prefix thus re-verifies the queries checked longest ago,
+# and the order updates itself when a new round's results land.
 
 
-def _driver_green(root: str | None = None) -> frozenset[str]:
-    """Queries whose LATEST CORRECTNESS_r*.json row fully matches.
-
-    Latest-round-wins: a green r01 row superseded by a FAIL in a later
-    round re-queues the query; a _CHANGED_IN_ROUND entry discounts rows
-    older than the change, but a post-change green row counts."""
+def _driver_green(root: str | None = None) -> dict[str, int]:
+    """Round of each query's latest CORRECTNESS_r*.json row, for the
+    queries whose latest row fully matches (a later FAIL drops an
+    earlier green row)."""
     import glob
     import json
     import os
@@ -302,33 +63,13 @@ def _driver_green(root: str | None = None) -> frozenset[str]:
             )
             if name not in latest or rnd > latest[name][0]:
                 latest[name] = (rnd, ok)
-    return frozenset(
-        name
-        for name, (rnd, ok) in latest.items()
-        if ok and rnd >= _CHANGED_IN_ROUND.get(name, 0)
-    )
+    return {name: rnd for name, (rnd, ok) in latest.items() if ok}
 
 
-def _ordered(names: list[str]) -> list[str]:
-    green = _driver_green()
-
-    def tier(n: str) -> int:
-        if n in green:
-            return 1000  # verified: after every pending query
-        # A stale-green re-queue's debt dates from the CHANGE round,
-        # not its first registration — and it has SOME evidence (its
-        # old row was value-exact pre-change), so never-verified debt
-        # of the same vintage outranks it.  Before round 9 the base
-        # used the first-seen round, which let old-vintage re-queues
-        # crowd brand-new queries out of the ~50-entry prefix.
-        if n in _CHANGED_IN_ROUND:
-            vintage = max(
-                _FIRST_SEEN_ROUND.get(n, 1), _CHANGED_IN_ROUND[n]
-            )
-            return 10 * vintage + 5
-        return 10 * _FIRST_SEEN_ROUND.get(n, 1)  # oldest debt first
-
-    return sorted(names, key=lambda n: (tier(n), names.index(n)))
+def _ordered(names: list[str], root: str | None = None) -> list[str]:
+    green = _driver_green(root)
+    # sorted() is stable, so equal rounds keep registry order.
+    return sorted(names, key=lambda n: green.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -338,4 +79,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query (same column names)."""
-    return {n: ORACLES[n] for n in _ordered(list(QUERIES)) if n in ORACLES}
+    return {n: ORACLES[n] for n in _ordered(list(ORACLES))}

@@ -22,11 +22,6 @@ def ms_to_timestamp(col: Column | str) -> Column:
     return F.timestamp_millis(F.col(col).cast("long") if isinstance(col, str) else col.cast("long"))
 
 
-def timestamp_to_ms(col: Column | str) -> Column:
-    """Inverse of :func:`ms_to_timestamp` (src/binance/api.py:19-22)."""
-    return F.unix_millis(F.col(col) if isinstance(col, str) else col)
-
-
 def heuristic_time_parse(col: Column | str) -> Column:
     """F2 — tolerant time parse: numeric-looking ⇒ epoch-ms, else ISO.
 

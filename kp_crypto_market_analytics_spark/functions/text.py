@@ -50,18 +50,6 @@ def token_count(text: Column | str) -> Column:
     )
 
 
-def word_token_count_bpe_ish(text: Column | str) -> Column:
-    """Token count under a BPE-ish regex: words, numbers, or single
-    non-space symbols — approximates subword tokenizer pre-splitting."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(
-        F.filter(
-            F.split(c, r"(?<=\W)|(?=\W)"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def stopword_hits(text: Column | str, words: list[str] | None = None) -> Column:
     """Total occurrences of stopwords as space-delimited tokens."""
     c = F.col(text) if isinstance(text, str) else text
@@ -103,6 +91,69 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
                 score = score + occurrence_count(padded, m)
         out[lang] = score
     return out
+
+
+def quality_score_sql() -> str:
+    """DuckDB oracle for ``quality_score`` and ``stopword_hits`` over
+    ``documents``: (doc_id, n_tokens, stopword_hits, stopword_ratio,
+    quality_score), the t_quality_score rows."""
+    hit_terms = " + ".join(
+        f"CAST((length(p) - length(replace(p, ' {w} ', ''))) / {len(w) + 2} AS BIGINT)"
+        for w in STOPWORDS
+    )
+    return f"""
+WITH norm AS (
+  SELECT doc_id, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t FROM documents
+), base AS (
+  SELECT doc_id, t, ' ' || lower(t) || ' ' AS p,
+    CASE WHEN length(t) = 0 THEN 0
+         ELSE CAST(length(t) - length(replace(t, ' ', '')) AS BIGINT) + 1 END AS n_tokens
+  FROM norm
+), hits AS (
+  SELECT doc_id, n_tokens, {hit_terms} AS stopword_hits FROM base
+)
+SELECT doc_id, n_tokens, stopword_hits,
+  round(CASE WHEN n_tokens > 0 THEN CAST(stopword_hits AS DOUBLE) / n_tokens END, 6) AS stopword_ratio,
+  round(least(n_tokens / 100.0, 1.0) * 0.5
+      + least(CASE WHEN n_tokens > 0 THEN CAST(stopword_hits AS DOUBLE) / n_tokens END * 5, 1.0) * 0.5, 6) AS quality_score
+FROM hits ORDER BY doc_id
+"""
+
+
+def lang_id_sql() -> str:
+    """DuckDB oracle for the ``lang_scores`` argmax over ``documents``:
+    per-language scores, the predicted language and whether it matches
+    the label, the t_lang_id rows."""
+    langs = list(LANG_MARKERS)
+    score_exprs = []
+    for lang in langs:
+        terms = []
+        for m in LANG_MARKERS[lang]:
+            needle = f" {m} " if m.isascii() else m
+            esc = needle.replace("'", "''")
+            terms.append(
+                f"CAST((length(p) - length(replace(p, '{esc}', ''))) / {len(needle)} AS BIGINT)"
+            )
+        score_exprs.append(" + ".join(terms) + f" AS score_{lang}")
+    case_branches = []
+    for lang in langs:
+        conds = " AND ".join(
+            f"score_{lang} >= score_{o}" for o in langs if o != lang
+        )
+        case_branches.append(f"WHEN {conds} THEN '{lang}'")
+    case_sql = "CASE " + " ".join(case_branches) + " END"
+    return f"""
+WITH base AS (
+  SELECT doc_id, lang, ' ' || lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) || ' ' AS p
+  FROM documents
+), scored AS (
+  SELECT doc_id, lang, {', '.join(score_exprs)} FROM base
+)
+SELECT doc_id, lang, {', '.join('score_' + x for x in langs)},
+  {case_sql} AS pred_lang,
+  {case_sql} = lang AS correct
+FROM scored ORDER BY doc_id
+"""
 
 
 def fingerprint_md5(text: Column | str) -> Column:

@@ -95,13 +95,3 @@ def quantize_symmetric(a: Column, scale: Column) -> Column:
 
 def dequantize(q: Column, scale: Column) -> Column:
     return F.transform(q, lambda x: x * scale)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

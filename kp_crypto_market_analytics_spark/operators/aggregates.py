@@ -115,24 +115,6 @@ def exact_stddev_samp(col: str | Column) -> Column:
     return F.when(n > 1, F.sqrt((sx2 - sx * sx / n) / (n - F.lit(1))))
 
 
-def symbol_metrics(df: DataFrame, symbol_col: str, price_cols: tuple[str, str, str, str],
-                   volume_col: str, trades_col: str) -> DataFrame:
-    """A1 — per-symbol market metrics (reference src/analytics/metrics.py:15-24):
-    AVG(ohlc4), STDDEV(close), SUM(volume), SUM(num_trades), rounded."""
-    o, h, l, c = price_cols
-    ohlc4 = (F.col(o) + F.col(h) + F.col(l) + F.col(c)) / F.lit(4.0)
-    return (
-        df.groupBy(symbol_col)
-        .agg(
-            F.round(F.avg(ohlc4), 2).alias("avg_price"),
-            F.round(F.stddev_samp(c), 2).alias("volatility"),
-            F.round(exact_sum(volume_col), 2).alias("total_volume"),
-            F.sum(trades_col).alias("total_trades"),
-        )
-        .orderBy(symbol_col)
-    )
-
-
 def daily_summary(df: DataFrame, ts: str, value: str, extra: dict[str, Column] | None = None) -> DataFrame:
     """A2 — per-day summary (binance_analysis.py:655-667)."""
     aggs = [

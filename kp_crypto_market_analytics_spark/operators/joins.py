@@ -11,29 +11,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def minute_equijoin(
-    facts: DataFrame,
-    minutes: DataFrame,
-    fact_ts: str,
-    minute_ts: str,
-    extra_keys: list[tuple[str, str]] | None = None,
-    how: str = "left",
-    broadcast_minutes: bool = True,
-) -> DataFrame:
-    """J1 — map each fact row to its minute-bucket row (the reference's
-    `pos` dict lookup over candle minutes, binance_analysis.py:392-397).
-
-    The minute side is small by construction (1,440 rows/day/symbol) →
-    broadcast hash join, no shuffle of the fact table.  Set
-    broadcast_minutes=False when joining years × thousands of symbols,
-    where the minute side itself is large."""
-    cond = F.date_trunc("minute", facts[fact_ts]) == minutes[minute_ts]
-    for lk, rk in extra_keys or []:
-        cond = cond & (facts[lk] == minutes[rk])
-    right = F.broadcast(minutes) if broadcast_minutes else minutes
-    return facts.join(right, cond, how)
-
-
 def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:
     """Rows of ``left`` with a match in ``right`` (no right columns).
     left_semi short-circuits per key — cheaper than inner+distinct."""

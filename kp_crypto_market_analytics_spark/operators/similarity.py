@@ -192,102 +192,6 @@ def neardup_pairs_blocked(
     )
 
 
-def brute_force_topk_blocked(
-    corpus: DataFrame,
-    queries_path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    query_ids_below: int = 10,
-    dim: int = 64,
-) -> DataFrame:
-    """:func:`brute_force_topk` with the |corpus|×|queries| scoring
-    stage vectorized: every task computes one BLOCK of the cosine
-    matrix in NumPy instead of evaluating the HOF dot per scored row
-    in the JVM (guide §4.2; same pattern as
-    :func:`neardup_pairs_blocked`).  The query side (``vec_id <
-    query_ids_below`` rows of the corpus table) is read from storage
-    inside each task — no broadcast build job, no collect.
-
-    BIT-EXACT to the HOF form by the :func:`neardup_pairs_blocked`
-    argument: dots and norms accumulate one dimension at a time in
-    the identical left-associated IEEE order, the divide matches
-    :func:`cosine_with_norms` operation for operation, and zero-norm
-    pairs yield NULL cosine exactly like the ``F.when`` guard (they
-    stay in the scored set and sort last under the descending rank
-    order, as in the join form).  Ranking and 6dp rounding stay in
-    Spark — the window expression is the same one
-    :func:`brute_force_topk` uses.  Pinned by
-    tests/test_operators.py::test_brute_force_topk_blocked_matches_hof.
-
-    r12 MEASURED RESULT at sf0.1 (2000×64 corpus): warm
-    single-session A/B alternating variants at |q|∈{10,100,200} put
-    this form at parity-to-slower than the HOF join (0.69-1.4s vs
-    0.57-1.3s) — at ≤400k dots the per-task query-table read plus the
-    Arrow round trip costs more than the JVM HOF dot saves, so NO
-    registry query uses it at current scale.  It becomes the right
-    form when |q|·|corpus| grows a few orders of magnitude (the
-    neardup_pairs_blocked regime, where it measured 2×)."""
-    out_schema = "query_id bigint, neighbor_id bigint, cos double"
-    c = ensure_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            to_double_array(vec_col).alias("cvec"),
-        )
-    )
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        tb = pq.read_table(queries_path, columns=[id_col, vec_col])
-        ids_all = tb.column(id_col).to_numpy()
-        sel = ids_all < query_ids_below
-        ids_q = ids_all[sel]
-        mat_q = np.asarray(tb.column(vec_col).to_pylist(), dtype=np.float64)[sel]
-        nq = np.zeros(len(ids_q))
-        for d in range(mat_q.shape[1]):
-            nq += mat_q[:, d] * mat_q[:, d]
-        nq = np.sqrt(nq)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat_c = np.asarray(pdf["cvec"].to_list(), dtype=np.float64)
-            ids_c = pdf["neighbor_id"].to_numpy()
-            nc = np.zeros(len(ids_c))
-            for d in range(mat_c.shape[1]):
-                nc += mat_c[:, d] * mat_c[:, d]
-            nc = np.sqrt(nc)
-            acc = np.zeros((len(ids_c), len(ids_q)))
-            for d in range(mat_c.shape[1]):
-                acc += mat_c[:, d : d + 1] * mat_q[None, :, d]
-            denom = nc[:, None] * nq[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            pair = ids_c[:, None] != ids_q[None, :]
-            ii, jj = np.nonzero(pair)
-            vals = cos[ii, jj].astype(object)
-            # F.when((na>0)&(nb>0), ...) yields NULL, not NaN/Inf, on a
-            # zero-norm side — keep the row, null the score.
-            bad = ~((nc[ii] > 0) & (nq[jj] > 0))
-            if bad.any():
-                vals[bad] = None
-            yield pd.DataFrame(
-                {"query_id": ids_q[jj], "neighbor_id": ids_c[ii], "cos": vals}
-            )
-
-    scored = c.mapInPandas(run, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-    )
-
-
 def neardup_pairs_lsh(
     df: DataFrame,
     vec_col: str = "embedding",

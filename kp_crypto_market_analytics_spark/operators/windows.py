@@ -18,13 +18,6 @@ def series_window(partition: str | list[str], order: str | list[str]) -> WindowS
     return Window.partitionBy(*parts).orderBy(*orders)
 
 
-def lag_diff(df: DataFrame, partition, order, value: str, out: str = "diff") -> DataFrame:
-    """W1 — per-group first difference: x − lag(x)
-    (reference groupby('symbol').diff(), binance_analysis.py:220)."""
-    w = series_window(partition, order)
-    return df.withColumn(out, F.col(value) - F.lag(value, 1).over(w))
-
-
 def log_return(df: DataFrame, partition, order, value: str, out: str = "log_ret") -> DataFrame:
     """W1 variant — log-return: log(x) − lag(log(x)); null on nonpositive."""
     w = series_window(partition, order)
@@ -58,18 +51,6 @@ def rolling_std(
     if scale is not None:
         expr = expr * F.lit(scale)
     return df.withColumn(out, expr)
-
-
-def forward_return(
-    df: DataFrame, partition, order, value: str, k: int, out: str | None = None
-) -> DataFrame:
-    """W3/J2 — forward log-return log(x[t+k]/x[t]) with edge/nonpositive
-    guards (binance_analysis.py:404-415).  lead() over the dense series
-    replaces the reference's positional self-join — no join, one sort."""
-    w = series_window(partition, order)
-    led = F.lead(value, k).over(w)
-    ret = F.when((F.col(value) > 0) & (led > 0), F.log(led / F.col(value)))
-    return df.withColumn(out or f"fwd_ret_{k}", ret)
 
 
 def rank_levels(

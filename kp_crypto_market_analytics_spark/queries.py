@@ -2,7 +2,17 @@
 (spark_fn, oracle_sql) pair.
 
 Each Spark callable takes (spark, sf_dir) and returns a DataFrame; the
-oracle is ANSI SQL DuckDB runs on the same parquet.  Determinism rules
+oracle is ANSI SQL DuckDB runs on the same parquet.  Each query module
+(this one and the ``queries_*`` modules) ends with one ``REGISTRY``
+tuple of ``(query_fn, oracle_sql)`` pairs; ``QUERIES`` and ``ORACLES``
+key them on ``query_fn.__name__``, module by module in the order listed
+at the bottom of this file, and a name declared twice raises.
+
+To add a query: define ``my_query(spark, sf_dir)`` and its oracle SQL in
+a query module, then append one line ``(my_query, MY_QUERY_SQL),`` to
+that module's ``REGISTRY``.  Registry order is load-bearing (benchmark
+sampling and the driver's verification order follow it), so append
+rather than insert.  Determinism rules
 (SURVEY.md §5 oracle-parity caveats):
 
 - Sums/avgs of doubles accumulate in DECIMAL(18,6) (order-independent,
@@ -30,11 +40,29 @@ oracle is ANSI SQL DuckDB runs on the same parquet.  Determinism rules
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kp_crypto_market_analytics_spark import (
+    queries_corpus,
+    queries_ext,
+    queries_graph,
+    queries_indicators,
+    queries_mining,
+    queries_quality,
+    queries_r10,
+    queries_r11,
+    queries_r11b,
+    queries_r11c,
+    queries_r7,
+    queries_r8,
+    queries_r9,
+    queries_r9b,
+    queries_r9c,
+    queries_tpch,
+)
 from kp_crypto_market_analytics_spark.functions.market import (
     heuristic_time_parse,
     minute_bucket,
@@ -43,11 +71,12 @@ from kp_crypto_market_analytics_spark.functions.market import (
 )
 from kp_crypto_market_analytics_spark.functions.text import (
     LANG_MARKERS,
-    STOPWORDS,
     char_shingles,
     fingerprint_md5,
+    lang_id_sql,
     lang_scores,
     occurrence_count,
+    quality_score_sql,
     stopword_hits,
     token_count,
 )
@@ -70,6 +99,8 @@ from kp_crypto_market_analytics_spark.operators.windows import (
     top_k_per_group,
 )
 from kp_crypto_market_analytics_spark.session import ensure_parallelism, load_tables
+
+Query = Callable[[SparkSession, str], DataFrame]
 
 # ---------------------------------------------------------------- helpers
 
@@ -1018,31 +1049,6 @@ def t_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _t_quality_sql() -> str:
-    pads = " || ' '"
-    hit_terms = " + ".join(
-        f"CAST((length(p) - length(replace(p, ' {w} ', ''))) / {len(w) + 2} AS BIGINT)"
-        for w in STOPWORDS
-    )
-    return f"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t FROM documents
-), base AS (
-  SELECT doc_id, t, ' ' || lower(t) || ' ' AS p,
-    CASE WHEN length(t) = 0 THEN 0
-         ELSE CAST(length(t) - length(replace(t, ' ', '')) AS BIGINT) + 1 END AS n_tokens
-  FROM norm
-), hits AS (
-  SELECT doc_id, n_tokens, {hit_terms} AS stopword_hits FROM base
-)
-SELECT doc_id, n_tokens, stopword_hits,
-  round(CASE WHEN n_tokens > 0 THEN CAST(stopword_hits AS DOUBLE) / n_tokens END, 6) AS stopword_ratio,
-  round(least(n_tokens / 100.0, 1.0) * 0.5
-      + least(CASE WHEN n_tokens > 0 THEN CAST(stopword_hits AS DOUBLE) / n_tokens END * 5, 1.0) * 0.5, 6) AS quality_score
-FROM hits ORDER BY doc_id
-"""
-
-
 def t_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: marker-lexicon hit scores, argmax with a
     fixed tie order; compares against the labeled lang column."""
@@ -1071,39 +1077,6 @@ def t_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         pred.alias("pred_lang"),
         (pred == F.col("lang")).alias("correct"),
     ).orderBy("doc_id")
-
-
-def _t_lang_sql() -> str:
-    langs = list(LANG_MARKERS)
-    score_exprs = []
-    for lang in langs:
-        terms = []
-        for m in LANG_MARKERS[lang]:
-            needle = f" {m} " if m.isascii() else m
-            esc = needle.replace("'", "''")
-            terms.append(
-                f"CAST((length(p) - length(replace(p, '{esc}', ''))) / {len(needle)} AS BIGINT)"
-            )
-        score_exprs.append(" + ".join(terms) + f" AS score_{lang}")
-    case_branches = []
-    for lang in langs:
-        conds = " AND ".join(
-            f"score_{lang} >= score_{o}" for o in langs if o != lang
-        )
-        case_branches.append(f"WHEN {conds} THEN '{lang}'")
-    case_sql = "CASE " + " ".join(case_branches) + " END"
-    return f"""
-WITH base AS (
-  SELECT doc_id, lang, ' ' || lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) || ' ' AS p
-  FROM documents
-), scored AS (
-  SELECT doc_id, lang, {', '.join(score_exprs)} FROM base
-)
-SELECT doc_id, lang, {', '.join('score_' + x for x in langs)},
-  {case_sql} AS pred_lang,
-  {case_sql} = lang AS correct
-FROM scored ORDER BY doc_id
-"""
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,14 +1167,10 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id < 10: corpus
     scan × broadcast queries, scored with built-in zip_with/aggregate
     (JVM-side), per-query top-k on the ROUNDED score so ordering agrees
-    with the oracle bit-for-bit.
-
-    r12 A/B note: the blocked NumPy kernel
-    (brute_force_topk_blocked, bit-parity-tested) was measured warm in
-    one session alternating variants at |q|∈{10,100,200}: HOF
-    0.57-1.3s vs blocked 0.69-1.4s — at ≤400k dots the Python
-    boundary costs more than the JVM HOF saves, so the join form
-    stays (guide §1.3: at the floor, stop)."""
+    with the oracle bit-for-bit.  A blocked NumPy scorer measured no
+    faster (0.69-1.4 s vs 0.57-1.3 s at |q| in {10, 100, 200}): at
+    <= 400k dots the Python boundary costs more than the JVM HOF
+    saves."""
     from kp_crypto_market_analytics_spark.operators.similarity import brute_force_topk
 
     t = load_tables(spark, sf_dir, ["embeddings"])
@@ -1260,138 +1229,82 @@ ORDER BY id_a, id_b
 
 # ============================================================= registry
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier": q5_local_supplier,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "a1_symbol_metrics": a1_symbol_metrics,
-    "a2_daily_summary": a2_daily_summary,
-    "a3_monthly_rollup": a3_monthly_rollup,
-    "a4_hourly_profile": a4_hourly_profile,
-    "a5_dow_profile": a5_dow_profile,
-    "a6_weekday_hour_pivot": a6_weekday_hour_pivot,
-    "a7_overall_stats": a7_overall_stats,
-    "a8_large_events": a8_large_events,
-    "a9_corr_matrix": a9_corr_matrix,
-    "a11_coverage": a11_coverage,
-    "a12_best_spread": a12_best_spread,
-    "a13_depth_topn": a13_depth_topn,
-    "a14_distinct_types": a14_distinct_types,
-    "a15_health_probe": a15_health_probe,
-    "w1_lag_diff": w1_lag_diff,
-    "w2_rolling_std": w2_rolling_std,
-    "w3_forward_return": w3_forward_return,
-    "w4_level_rank": w4_level_rank,
-    "j1_minute_equijoin": j1_minute_equijoin,
-    "j_semi_customers": j_semi_customers,
-    "j_anti_customers": j_anti_customers,
-    "j4_union_sides": j4_union_sides,
-    "set_intersect_parts": set_intersect_parts,
-    "set_except_parts": set_except_parts,
-    "p_props_extract": p_props_extract,
-    "f2_heuristic_time_parse": f2_heuristic_time_parse,
-    "stream_candles_1m": stream_candles_1m,
-    "t_token_stats": t_token_stats,
-    "t_quality_score": t_quality_score,
-    "t_lang_id": t_lang_id,
-    "dedup_exact": dedup_exact,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_minhash_sig": dedup_minhash_sig,
-    "sim_bruteforce_topk": sim_bruteforce_topk,
-    "sim_neardup_pairs": sim_neardup_pairs,
-}
+REGISTRY = (
+    (q1_pricing_summary, Q1_SQL),
+    (q3_shipping_priority, Q3_SQL),
+    (q5_local_supplier, Q5_SQL),
+    (q6_forecast_revenue, Q6_SQL),
+    (a1_symbol_metrics, A1_SQL),
+    (a2_daily_summary, A2_SQL),
+    (a3_monthly_rollup, A3_SQL),
+    (a4_hourly_profile, A4_SQL),
+    (a5_dow_profile, A5_SQL),
+    (a6_weekday_hour_pivot, _a6_sql()),
+    (a7_overall_stats, A7_SQL),
+    (a8_large_events, A8_SQL),
+    (a9_corr_matrix, A9_SQL),
+    (a11_coverage, A11_SQL),
+    (a12_best_spread, A12_SQL),
+    (a13_depth_topn, A13_SQL),
+    (a14_distinct_types, A14_SQL),
+    (a15_health_probe, A15_SQL),
+    (w1_lag_diff, W1_SQL),
+    (w2_rolling_std, W2_SQL),
+    (w3_forward_return, W3_SQL),
+    (w4_level_rank, W4_SQL),
+    (j1_minute_equijoin, J1_SQL),
+    (j_semi_customers, J_SEMI_SQL),
+    (j_anti_customers, J_ANTI_SQL),
+    (j4_union_sides, J4_SQL),
+    (set_intersect_parts, SET_INTERSECT_SQL),
+    (set_except_parts, SET_EXCEPT_SQL),
+    (p_props_extract, P_PROPS_SQL),
+    (f2_heuristic_time_parse, F2_SQL),
+    (stream_candles_1m, STREAM_CANDLES_SQL),
+    (t_token_stats, T_TOKEN_SQL),
+    (t_quality_score, quality_score_sql()),
+    (t_lang_id, lang_id_sql()),
+    (dedup_exact, DEDUP_EXACT_SQL),
+    (dedup_ngram_jaccard, DEDUP_NGRAM_SQL),
+    (dedup_minhash_sig, _minhash_sql()),
+    (sim_bruteforce_topk, SIM_BRUTE_SQL),
+    (sim_neardup_pairs, SIM_NEARDUP_SQL),
+)
 
-ORACLES: dict[str, str] = {
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q5_local_supplier": Q5_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "a1_symbol_metrics": A1_SQL,
-    "a2_daily_summary": A2_SQL,
-    "a3_monthly_rollup": A3_SQL,
-    "a4_hourly_profile": A4_SQL,
-    "a5_dow_profile": A5_SQL,
-    "a6_weekday_hour_pivot": _a6_sql(),
-    "a7_overall_stats": A7_SQL,
-    "a8_large_events": A8_SQL,
-    "a9_corr_matrix": A9_SQL,
-    "a11_coverage": A11_SQL,
-    "a12_best_spread": A12_SQL,
-    "a13_depth_topn": A13_SQL,
-    "a14_distinct_types": A14_SQL,
-    "a15_health_probe": A15_SQL,
-    "w1_lag_diff": W1_SQL,
-    "w2_rolling_std": W2_SQL,
-    "w3_forward_return": W3_SQL,
-    "w4_level_rank": W4_SQL,
-    "j1_minute_equijoin": J1_SQL,
-    "j_semi_customers": J_SEMI_SQL,
-    "j_anti_customers": J_ANTI_SQL,
-    "j4_union_sides": J4_SQL,
-    "set_intersect_parts": SET_INTERSECT_SQL,
-    "set_except_parts": SET_EXCEPT_SQL,
-    "p_props_extract": P_PROPS_SQL,
-    "f2_heuristic_time_parse": F2_SQL,
-    "stream_candles_1m": STREAM_CANDLES_SQL,
-    "t_token_stats": T_TOKEN_SQL,
-    "t_quality_score": _t_quality_sql(),
-    "t_lang_id": _t_lang_sql(),
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "dedup_ngram_jaccard": DEDUP_NGRAM_SQL,
-    "dedup_minhash_sig": _minhash_sql(),
-    "sim_bruteforce_topk": SIM_BRUTE_SQL,
-    "sim_neardup_pairs": SIM_NEARDUP_SQL,
-}
 
-# Extension registries (LSH/SimHash/winnowing, ANN variants, multimodal,
-# rollup/distinct/sample extras; TPC-H-shaped scale queries).
-from kp_crypto_market_analytics_spark.queries_corpus import CORPUS_QUERIES, corpus_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_ext import EXT_ORACLES, EXT_QUERIES  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_indicators import IND_ORACLES, IND_QUERIES  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_graph import GRAPH_ORACLES, GRAPH_QUERIES  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_mining import MINING_ORACLES, MINING_QUERIES  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r7 import R7_QUERIES, r7_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r8 import R8_QUERIES, r8_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r9 import R9_QUERIES, r9_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r9b import R9B_QUERIES, r9b_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r9c import R9C_QUERIES, r9c_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r10 import R10_QUERIES, r10_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r11 import R11_QUERIES, r11_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r11b import R11B_QUERIES, r11b_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_r11c import R11C_QUERIES, r11c_oracles  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_quality import QUALITY_ORACLES, QUALITY_QUERIES  # noqa: E402
-from kp_crypto_market_analytics_spark.queries_tpch import TPCH_ORACLES, TPCH_QUERIES  # noqa: E402
+def build_registry(
+    tables: Iterable[tuple[tuple[Query, str], ...]],
+) -> tuple[dict[str, Query], dict[str, str]]:
+    """Key every ``(query, oracle_sql)`` pair of ``tables`` on the
+    query's ``__name__``, in table order; a name declared twice raises."""
+    queries: dict[str, Query] = {}
+    oracles: dict[str, str] = {}
+    for table in tables:
+        for fn, sql in table:
+            name = fn.__name__
+            if name in queries:
+                raise ValueError(f"query {name!r} is declared twice")
+            queries[name] = fn
+            oracles[name] = sql
+    return queries, oracles
 
-QUERIES.update(EXT_QUERIES)
-QUERIES.update(TPCH_QUERIES)
-QUERIES.update(IND_QUERIES)
-QUERIES.update(CORPUS_QUERIES)
-QUERIES.update(QUALITY_QUERIES)
-QUERIES.update(GRAPH_QUERIES)
-QUERIES.update(MINING_QUERIES)
-QUERIES.update(R7_QUERIES)
-QUERIES.update(R8_QUERIES)
-QUERIES.update(R9_QUERIES)
-QUERIES.update(R9B_QUERIES)
-QUERIES.update(R9C_QUERIES)
-QUERIES.update(R10_QUERIES)
-QUERIES.update(R11_QUERIES)
-QUERIES.update(R11B_QUERIES)
-QUERIES.update(R11C_QUERIES)
-ORACLES.update(EXT_ORACLES)
-ORACLES.update(TPCH_ORACLES)
-ORACLES.update(IND_ORACLES)
-ORACLES.update(corpus_oracles())
-ORACLES.update(QUALITY_ORACLES)
-ORACLES.update(GRAPH_ORACLES)
-ORACLES.update(MINING_ORACLES)
-ORACLES.update(r7_oracles())
-ORACLES.update(r8_oracles())
-ORACLES.update(r9_oracles())
-ORACLES.update(r9b_oracles())
-ORACLES.update(r9c_oracles())
-ORACLES.update(r10_oracles())
-ORACLES.update(r11_oracles())
-ORACLES.update(r11b_oracles())
-ORACLES.update(r11c_oracles())
+
+QUERIES, ORACLES = build_registry((
+    REGISTRY,
+    queries_ext.REGISTRY,
+    queries_tpch.REGISTRY,
+    queries_indicators.REGISTRY,
+    queries_corpus.REGISTRY,
+    queries_quality.REGISTRY,
+    queries_graph.REGISTRY,
+    queries_mining.REGISTRY,
+    queries_r7.REGISTRY,
+    queries_r8.REGISTRY,
+    queries_r9.REGISTRY,
+    queries_r9b.REGISTRY,
+    queries_r9c.REGISTRY,
+    queries_r10.REGISTRY,
+    queries_r11.REGISTRY,
+    queries_r11b.REGISTRY,
+    queries_r11c.REGISTRY,
+))

@@ -35,11 +35,10 @@ query carries an exact DuckDB oracle verified at sf0.01 AND sf0.1.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kp_crypto_market_analytics_spark.functions.text import quality_score_sql
 from kp_crypto_market_analytics_spark.operators.aggregates import (
     DEC,
     round_mean_micro,
@@ -763,8 +762,6 @@ def t_doc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t_doc_report_sql() -> str:
-    from kp_crypto_market_analytics_spark.queries import _t_quality_sql
-
     return f"""
 SELECT e.doc_id, e.n_tokens, e.n_types, e.entropy, e.ttr,
   p.n_dup_chunks, p.dup_frac, r.n_shared, r.shared_frac,
@@ -772,7 +769,7 @@ SELECT e.doc_id, e.n_tokens, e.n_types, e.entropy, e.ttr,
 FROM ({T_WORD_ENTROPY_SQL.replace("ORDER BY doc_id", "")}) e
 JOIN ({T_PARAGRAPH_SQL.replace("ORDER BY doc_id", "")}) p USING (doc_id)
 JOIN ({DEDUP_SUBSTRING_SQL.replace("ORDER BY n.doc_id", "")}) r USING (doc_id)
-JOIN ({_t_quality_sql().replace("ORDER BY doc_id", "")}) q USING (doc_id)
+JOIN ({quality_score_sql().replace("ORDER BY doc_id", "")}) q USING (doc_id)
 ORDER BY doc_id
 """
 
@@ -1509,9 +1506,7 @@ def t_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t_quality_deciles_sql() -> str:
-    from kp_crypto_market_analytics_spark.queries import _t_quality_sql
-
-    base = _t_quality_sql().strip().rstrip()
+    base = quality_score_sql().strip().rstrip()
     # Reuse the t_quality_score oracle as a subquery: (doc_id, n_tokens,
     # stopword_hits, stopword_ratio, quality_score) per doc.
     inner = base.replace("ORDER BY doc_id", "")
@@ -1602,52 +1597,22 @@ FROM c ORDER BY doc_id, chunk_idx
 """
 
 
-CORPUS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_paragraph_dedup": t_paragraph_dedup,
-    "dedup_substring": dedup_substring,
-    "t_word_entropy": t_word_entropy,
-    "t_bigram_logprob": t_bigram_logprob,
-    "t_quality_deciles": t_quality_deciles,
-    "dedup_incremental": dedup_incremental,
-    "t_vocab_table": t_vocab_table,
-    "t_bpe_merges": t_bpe_merges,
-    "t_oov_rate": t_oov_rate,
-    "t_countmin_hh": t_countmin_hh,
-    "t_countmin_stream_parity": t_countmin_stream_parity,
-    "e_pca_power": e_pca_power,
-    "mm_shard_manifest": mm_shard_manifest,
-    "dedup_lsh_recall": dedup_lsh_recall,
-    "w_streaks": w_streaks,
-    "t_doc_report": t_doc_report,
-    "t_chunk_overlap": t_chunk_overlap,
-}
-
-CORPUS_ORACLES: dict[str, str] = {
-    "t_paragraph_dedup": T_PARAGRAPH_SQL,
-    "dedup_substring": DEDUP_SUBSTRING_SQL,
-    "t_word_entropy": T_WORD_ENTROPY_SQL,
-    "t_bigram_logprob": _bigram_logprob_sql(),
-    "t_vocab_table": T_VOCAB_TABLE_SQL,
-    "t_countmin_hh": _t_countmin_sql(),
-    "t_countmin_stream_parity": _t_countmin_stream_parity_sql(),
-    "e_pca_power": _e_pca_sql(),
-    "mm_shard_manifest": MM_SHARD_SQL,
-    "dedup_lsh_recall": _dedup_lsh_recall_sql(),
-    "w_streaks": W_STREAKS_SQL,
-    "t_chunk_overlap": T_CHUNK_OVERLAP_SQL,
-}
-
-
-def corpus_oracles() -> dict[str, str]:
-    """Full oracle map.  ``t_quality_deciles`` reuses the
-    t_quality_score oracle subquery defined in queries.py, so its SQL
-    must be built lazily (queries.py imports this module at its tail —
-    a module-scope call would re-enter it partially initialized)."""
-    return {
-        **CORPUS_ORACLES,
-        "t_quality_deciles": _t_quality_deciles_sql(),
-        "dedup_incremental": _dedup_incremental_sql(),
-        "t_bpe_merges": _bpe_merges_sql(),
-        "t_doc_report": _t_doc_report_sql(),
-        "t_oov_rate": _t_oov_rate_sql(),
-    }
+REGISTRY = (
+    (t_paragraph_dedup, T_PARAGRAPH_SQL),
+    (dedup_substring, DEDUP_SUBSTRING_SQL),
+    (t_word_entropy, T_WORD_ENTROPY_SQL),
+    (t_bigram_logprob, _bigram_logprob_sql()),
+    (t_quality_deciles, _t_quality_deciles_sql()),
+    (dedup_incremental, _dedup_incremental_sql()),
+    (t_vocab_table, T_VOCAB_TABLE_SQL),
+    (t_bpe_merges, _bpe_merges_sql()),
+    (t_oov_rate, _t_oov_rate_sql()),
+    (t_countmin_hh, _t_countmin_sql()),
+    (t_countmin_stream_parity, _t_countmin_stream_parity_sql()),
+    (e_pca_power, _e_pca_sql()),
+    (mm_shard_manifest, MM_SHARD_SQL),
+    (dedup_lsh_recall, _dedup_lsh_recall_sql()),
+    (w_streaks, W_STREAKS_SQL),
+    (t_doc_report, _t_doc_report_sql()),
+    (t_chunk_overlap, T_CHUNK_OVERLAP_SQL),
+)

@@ -10,8 +10,6 @@ left-associated IEEE addition in the identical order on both engines.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -6008,188 +6006,95 @@ FROM flags
 """
 
 
-EXT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_unigram_logprob": t_unigram_logprob,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_lsh_bucket_cap": dedup_lsh_bucket_cap,
-    "dedup_semantic": dedup_semantic,
-    "dedup_clusters": dedup_clusters,
-    "dedup_ngram_capped": dedup_ngram_capped,
-    "dedup_containment": dedup_containment,
-    "dedup_simhash": dedup_simhash,
-    "dedup_simhash_pairs": dedup_simhash_pairs,
-    "t_fingerprint_winnow": t_fingerprint_winnow,
-    "sim_lsh_topk": sim_lsh_topk,
-    "sim_ivf_topk": sim_ivf_topk,
-    "sim_ivf_trained": sim_ivf_trained,
-    "e_quantize_int8": e_quantize_int8,
-    "sim_neardup_lsh": sim_neardup_lsh,
-    "stream_candles_5m": stream_candles_5m,
-    "mm_binary_meta": mm_binary_meta,
-    "mm_decode_stats": mm_decode_stats,
-    "mm_phash_neardup": mm_phash_neardup,
-    "mm_frame_sample": mm_frame_sample,
-    "mm_resize_geometry": mm_resize_geometry,
-    "t_vocab_topk": t_vocab_topk,
-    "t_bpe_tokens": t_bpe_tokens,
-    "t_tfidf_topk": t_tfidf_topk,
-    "t_bm25_topk": t_bm25_topk,
-    "t_rrf_fusion": t_rrf_fusion,
-    "t_ndcg_eval": t_ndcg_eval,
-    "p_pruning_sim": p_pruning_sim,
-    "p_unpivot_metrics": p_unpivot_metrics,
-    "w3_multi_horizon": w3_multi_horizon,
-    "e3_anomaly_pipeline": e3_anomaly_pipeline,
-    "e4_large_trade_impact": e4_large_trade_impact,
-    "j2_asof_enrich": j2_asof_enrich,
-    "j_asof_tolerance": j_asof_tolerance,
-    "j_range_windows": j_range_windows,
-    "j_interval_overlap": j_interval_overlap,
-    "w_sessionize": w_sessionize,
-    "w_session_native": w_session_native,
-    "a10_scalar_corr": a10_scalar_corr,
-    "o6_seeded_sample": o6_seeded_sample,
-    "a_rollup_daily": a_rollup_daily,
-    "a_distinct_users": a_distinct_users,
-    "a_salted_type_stats": a_salted_type_stats,
-    "j_salted_dim": j_salted_dim,
-    "w_rank_family": w_rank_family,
-    "w_range_frame": w_range_frame,
-    "a_cube_counts": a_cube_counts,
-    "dedup_edit_distance": dedup_edit_distance,
-    "a_moments": a_moments,
-    "p_array_stats": p_array_stats,
-    "a_regression": a_regression,
-    "w_ewma_trunc": w_ewma_trunc,
-    "t_pack_sequences": t_pack_sequences,
-    "t_split_assign": t_split_assign,
-    "t_bigram_topk": t_bigram_topk,
-    "t_decontaminate": t_decontaminate,
-    "t_repetition": t_repetition,
-    "t_source_overlap": t_source_overlap,
-    "t_corpus_filter": t_corpus_filter,
-    "a_grouped_quantiles": a_grouped_quantiles,
-    "a_rollup_cascade": a_rollup_cascade,
-    "t_stratified_sample": t_stratified_sample,
-    "p_profile_columns": p_profile_columns,
-    "a_histogram": a_histogram,
-    "t_pii_scan": t_pii_scan,
-    "t_mixture_sample": t_mixture_sample,
-    "p_zorder_stats": p_zorder_stats,
-    "p_compaction_plan": p_compaction_plan,
-    "a_trimmed_stats": a_trimmed_stats,
-    "dedup_url_canon": dedup_url_canon,
-    "t_weighted_sample": t_weighted_sample,
-    "a_skew_profile": a_skew_profile,
-    "sim_pq_topk": sim_pq_topk,
-    "sim_pq_rerank": sim_pq_rerank,
-    "w_resample_ffill": w_resample_ffill,
-    "a_incremental_rollup": a_incremental_rollup,
-    "w_rolling_corr": w_rolling_corr,
-    "dedup_canonical": dedup_canonical,
-    "t_textrank": t_textrank,
-    "a_user_growth": a_user_growth,
-    "a_retention_cohorts": a_retention_cohorts,
-    "a_funnel_steps": a_funnel_steps,
-    "sim_ivf_recall": sim_ivf_recall,
-    "sim_pq_recall": sim_pq_recall,
-    "w_skew_split": w_skew_split,
-    "a_hll_distinct": a_hll_distinct,
-    "a_hll_merge": a_hll_merge,
-    "a_hll_overlap": a_hll_overlap,
-    "a_hll_stream_parity": a_hll_stream_parity,
-    "j_bloom_prune": j_bloom_prune,
-}
-
-EXT_ORACLES: dict[str, str] = {
-    "t_unigram_logprob": T_UNIGRAM_SQL,
-    "dedup_minhash_lsh": DEDUP_MINHASH_LSH_SQL,
-    "dedup_lsh_bucket_cap": DEDUP_LSH_BUCKET_CAP_SQL,
-    "dedup_semantic": _semantic_dedup_sql(),
-    "dedup_clusters": DEDUP_CLUSTERS_SQL,
-    "dedup_ngram_capped": DEDUP_NGRAM_CAPPED_SQL,
-    "dedup_containment": _dedup_containment_sql(),
-    "dedup_simhash": DEDUP_SIMHASH_SQL,
-    "dedup_simhash_pairs": DEDUP_SIMHASH_PAIRS_SQL,
-    "t_fingerprint_winnow": T_WINNOW_SQL,
-    "sim_lsh_topk": _lsh_sql(),
-    "sim_ivf_topk": SIM_IVF_SQL,
-    "sim_ivf_trained": _ivf_trained_sql(),
-    "e_quantize_int8": E_QUANTIZE_SQL,
-    "sim_neardup_lsh": _neardup_lsh_sql(),
-    "stream_candles_5m": STREAM_CANDLES_5M_SQL,
-    "mm_binary_meta": MM_BINARY_SQL,
-    "mm_decode_stats": _mm_decode_sql(),
-    "mm_frame_sample": _mm_frames_sql(),
-    "mm_resize_geometry": _mm_resize_sql(),
-    "t_vocab_topk": T_VOCAB_SQL,
-    "t_bpe_tokens": T_BPE_SQL,
-    "t_tfidf_topk": T_TFIDF_SQL,
-    "t_bm25_topk": _t_bm25_sql(),
-    "t_rrf_fusion": _t_rrf_fusion_sql(),
-    "t_ndcg_eval": _t_ndcg_eval_sql(),
-    "p_pruning_sim": _p_pruning_sim_sql(),
-    "p_unpivot_metrics": _p_unpivot_sql(),
-    "w3_multi_horizon": W3_MULTI_SQL,
-    "e3_anomaly_pipeline": E3_ANOMALY_SQL,
-    "e4_large_trade_impact": E4_LARGE_SQL,
-    "j2_asof_enrich": J2_ASOF_SQL,
-    "j_asof_tolerance": J_ASOF_TOL_SQL,
-    "j_range_windows": J_RANGE_SQL,
-    "j_interval_overlap": J_INTERVAL_OVERLAP_SQL,
-    "p_compaction_plan": P_COMPACTION_SQL,
-    "w_session_native": W_SESSION_NATIVE_SQL,
-    "mm_phash_neardup": MM_PHASH_SQL,
-    "a_trimmed_stats": _a_trimmed_stats_sql(),
-    "dedup_url_canon": DEDUP_URL_SQL,
-    "w_sessionize": W_SESSION_SQL,
-    "a10_scalar_corr": A10_SQL,
-    "o6_seeded_sample": O6_SQL,
-    "a_rollup_daily": A_ROLLUP_SQL,
-    "a_distinct_users": A_DISTINCT_SQL,
-    "a_salted_type_stats": A_SALTED_SQL,
-    "j_salted_dim": J_SALTED_SQL,
-    "w_rank_family": W_RANK_SQL,
-    "w_range_frame": W_RANGE_SQL,
-    "a_cube_counts": A_CUBE_SQL,
-    "dedup_edit_distance": DEDUP_EDIT_SQL,
-    "a_moments": A_MOMENTS_SQL,
-    "p_array_stats": P_ARRAY_SQL,
-    "a_regression": A_REGR_SQL,
-    "w_ewma_trunc": W_EWMA_SQL,
-    "t_pack_sequences": T_PACK_SQL,
-    "t_split_assign": T_SPLIT_SQL,
-    "t_bigram_topk": T_BIGRAM_SQL,
-    "t_decontaminate": T_DECON_SQL,
-    "t_repetition": T_REPETITION_SQL,
-    "t_source_overlap": T_SOURCE_OVERLAP_SQL,
-    "t_corpus_filter": _t_corpus_filter_sql(),
-    "a_grouped_quantiles": A_GROUPED_Q_SQL,
-    "a_rollup_cascade": A_ROLLUP_CASCADE_SQL,
-    "t_stratified_sample": T_STRATIFIED_SQL,
-    "p_profile_columns": P_PROFILE_SQL,
-    "a_histogram": A_HIST_SQL,
-    "t_pii_scan": T_PII_SQL,
-    "t_mixture_sample": T_MIX_SQL,
-    "p_zorder_stats": _p_zorder_sql(),
-    "t_weighted_sample": T_WEIGHTED_SQL,
-    "a_skew_profile": A_SKEW_SQL,
-    "sim_pq_topk": _pq_sql(),
-    "sim_pq_rerank": _pq_rerank_sql(),
-    "w_resample_ffill": W_RESAMPLE_SQL,
-    "a_incremental_rollup": A_INCREMENTAL_SQL,
-    "w_rolling_corr": W_ROLLING_CORR_SQL,
-    "dedup_canonical": _dedup_canonical_sql(),
-    "t_textrank": _t_textrank_sql(),
-    "a_user_growth": A_GROWTH_SQL,
-    "a_retention_cohorts": A_RETENTION_SQL,
-    "a_funnel_steps": A_FUNNEL_SQL,
-    "sim_ivf_recall": _ann_recall_sql(_ivf_trained_sql(), IVF_RECALL_FLOOR_PCT),
-    "sim_pq_recall": _ann_recall_sql(_pq_rerank_sql(), PQ_RECALL_FLOOR_PCT),
-    "w_skew_split": W_SKEW_SPLIT_SQL,
-    "a_hll_distinct": _hll_sql(),
-    "a_hll_merge": _hll_merge_sql(),
-    "a_hll_overlap": _hll_overlap_sql(),
-    "a_hll_stream_parity": _hll_stream_parity_sql(),
-    "j_bloom_prune": _bloom_sql(),
-}
+REGISTRY = (
+    (t_unigram_logprob, T_UNIGRAM_SQL),
+    (dedup_minhash_lsh, DEDUP_MINHASH_LSH_SQL),
+    (dedup_lsh_bucket_cap, DEDUP_LSH_BUCKET_CAP_SQL),
+    (dedup_semantic, _semantic_dedup_sql()),
+    (dedup_clusters, DEDUP_CLUSTERS_SQL),
+    (dedup_ngram_capped, DEDUP_NGRAM_CAPPED_SQL),
+    (dedup_containment, _dedup_containment_sql()),
+    (dedup_simhash, DEDUP_SIMHASH_SQL),
+    (dedup_simhash_pairs, DEDUP_SIMHASH_PAIRS_SQL),
+    (t_fingerprint_winnow, T_WINNOW_SQL),
+    (sim_lsh_topk, _lsh_sql()),
+    (sim_ivf_topk, SIM_IVF_SQL),
+    (sim_ivf_trained, _ivf_trained_sql()),
+    (e_quantize_int8, E_QUANTIZE_SQL),
+    (sim_neardup_lsh, _neardup_lsh_sql()),
+    (stream_candles_5m, STREAM_CANDLES_5M_SQL),
+    (mm_binary_meta, MM_BINARY_SQL),
+    (mm_decode_stats, _mm_decode_sql()),
+    (mm_phash_neardup, MM_PHASH_SQL),
+    (mm_frame_sample, _mm_frames_sql()),
+    (mm_resize_geometry, _mm_resize_sql()),
+    (t_vocab_topk, T_VOCAB_SQL),
+    (t_bpe_tokens, T_BPE_SQL),
+    (t_tfidf_topk, T_TFIDF_SQL),
+    (t_bm25_topk, _t_bm25_sql()),
+    (t_rrf_fusion, _t_rrf_fusion_sql()),
+    (t_ndcg_eval, _t_ndcg_eval_sql()),
+    (p_pruning_sim, _p_pruning_sim_sql()),
+    (p_unpivot_metrics, _p_unpivot_sql()),
+    (w3_multi_horizon, W3_MULTI_SQL),
+    (e3_anomaly_pipeline, E3_ANOMALY_SQL),
+    (e4_large_trade_impact, E4_LARGE_SQL),
+    (j2_asof_enrich, J2_ASOF_SQL),
+    (j_asof_tolerance, J_ASOF_TOL_SQL),
+    (j_range_windows, J_RANGE_SQL),
+    (j_interval_overlap, J_INTERVAL_OVERLAP_SQL),
+    (w_sessionize, W_SESSION_SQL),
+    (w_session_native, W_SESSION_NATIVE_SQL),
+    (a10_scalar_corr, A10_SQL),
+    (o6_seeded_sample, O6_SQL),
+    (a_rollup_daily, A_ROLLUP_SQL),
+    (a_distinct_users, A_DISTINCT_SQL),
+    (a_salted_type_stats, A_SALTED_SQL),
+    (j_salted_dim, J_SALTED_SQL),
+    (w_rank_family, W_RANK_SQL),
+    (w_range_frame, W_RANGE_SQL),
+    (a_cube_counts, A_CUBE_SQL),
+    (dedup_edit_distance, DEDUP_EDIT_SQL),
+    (a_moments, A_MOMENTS_SQL),
+    (p_array_stats, P_ARRAY_SQL),
+    (a_regression, A_REGR_SQL),
+    (w_ewma_trunc, W_EWMA_SQL),
+    (t_pack_sequences, T_PACK_SQL),
+    (t_split_assign, T_SPLIT_SQL),
+    (t_bigram_topk, T_BIGRAM_SQL),
+    (t_decontaminate, T_DECON_SQL),
+    (t_repetition, T_REPETITION_SQL),
+    (t_source_overlap, T_SOURCE_OVERLAP_SQL),
+    (t_corpus_filter, _t_corpus_filter_sql()),
+    (a_grouped_quantiles, A_GROUPED_Q_SQL),
+    (a_rollup_cascade, A_ROLLUP_CASCADE_SQL),
+    (t_stratified_sample, T_STRATIFIED_SQL),
+    (p_profile_columns, P_PROFILE_SQL),
+    (a_histogram, A_HIST_SQL),
+    (t_pii_scan, T_PII_SQL),
+    (t_mixture_sample, T_MIX_SQL),
+    (p_zorder_stats, _p_zorder_sql()),
+    (p_compaction_plan, P_COMPACTION_SQL),
+    (a_trimmed_stats, _a_trimmed_stats_sql()),
+    (dedup_url_canon, DEDUP_URL_SQL),
+    (t_weighted_sample, T_WEIGHTED_SQL),
+    (a_skew_profile, A_SKEW_SQL),
+    (sim_pq_topk, _pq_sql()),
+    (sim_pq_rerank, _pq_rerank_sql()),
+    (w_resample_ffill, W_RESAMPLE_SQL),
+    (a_incremental_rollup, A_INCREMENTAL_SQL),
+    (w_rolling_corr, W_ROLLING_CORR_SQL),
+    (dedup_canonical, _dedup_canonical_sql()),
+    (t_textrank, _t_textrank_sql()),
+    (a_user_growth, A_GROWTH_SQL),
+    (a_retention_cohorts, A_RETENTION_SQL),
+    (a_funnel_steps, A_FUNNEL_SQL),
+    (sim_ivf_recall, _ann_recall_sql(_ivf_trained_sql(), IVF_RECALL_FLOOR_PCT)),
+    (sim_pq_recall, _ann_recall_sql(_pq_rerank_sql(), PQ_RECALL_FLOOR_PCT)),
+    (w_skew_split, W_SKEW_SPLIT_SQL),
+    (a_hll_distinct, _hll_sql()),
+    (a_hll_merge, _hll_merge_sql()),
+    (a_hll_overlap, _hll_overlap_sql()),
+    (a_hll_stream_parity, _hll_stream_parity_sql()),
+    (j_bloom_prune, _bloom_sql()),
+)

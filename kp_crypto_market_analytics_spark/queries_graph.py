@@ -43,8 +43,6 @@ bounded by the edge count, never by |V|².
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -575,20 +573,11 @@ ORDER BY n_members DESC, community ASC LIMIT 10
     return "".join(parts)
 
 
-GRAPH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "g_pagerank": g_pagerank,
-    "g_degree_stats": g_degree_stats,
-    "g_label_prop": g_label_prop,
-    "g_bfs_distance": g_bfs_distance,
-    "g_ppr": g_ppr,
-    "g_modularity": g_modularity,
-}
-
-GRAPH_ORACLES: dict[str, str] = {
-    "g_pagerank": _g_pagerank_sql(),
-    "g_degree_stats": _g_degree_stats_sql(),
-    "g_label_prop": _g_label_prop_sql(),
-    "g_bfs_distance": _g_bfs_distance_sql(),
-    "g_ppr": _g_ppr_sql(),
-    "g_modularity": _g_modularity_sql(),
-}
+REGISTRY = (
+    (g_pagerank, _g_pagerank_sql()),
+    (g_degree_stats, _g_degree_stats_sql()),
+    (g_label_prop, _g_label_prop_sql()),
+    (g_bfs_distance, _g_bfs_distance_sql()),
+    (g_ppr, _g_ppr_sql()),
+    (g_modularity, _g_modularity_sql()),
+)

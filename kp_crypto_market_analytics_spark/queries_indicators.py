@@ -18,8 +18,6 @@ see operators/indicators.py for the determinism rules.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1137,40 +1135,21 @@ ORDER BY v.event_type
 """
 
 
-IND_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ti_bollinger": ti_bollinger,
-    "ti_rsi": ti_rsi,
-    "ti_macd": ti_macd,
-    "ti_drawdown": ti_drawdown,
-    "ti_stochastic": ti_stochastic,
-    "ti_vwap": ti_vwap,
-    "ti_obv": ti_obv,
-    "ti_acf": ti_acf,
-    "ti_backtest": ti_backtest,
-    "w_cusum": w_cusum,
-    "cdc_snapshot_diff": cdc_snapshot_diff,
-    "cdc_apply": cdc_apply,
-    "ti_twap": ti_twap,
-    "ti_realized_vol": ti_realized_vol,
-    "w_des_forecast": w_des_forecast,
-    "ti_var_cvar": ti_var_cvar,
-}
-
-IND_ORACLES: dict[str, str] = {
-    "ti_bollinger": TI_BOLLINGER_SQL,
-    "ti_rsi": TI_RSI_SQL,
-    "ti_macd": TI_MACD_SQL,
-    "ti_drawdown": TI_DRAWDOWN_SQL,
-    "ti_stochastic": TI_STOCH_SQL,
-    "ti_vwap": TI_VWAP_SQL,
-    "ti_obv": TI_OBV_SQL,
-    "ti_acf": TI_ACF_SQL,
-    "ti_backtest": TI_BACKTEST_SQL,
-    "w_cusum": W_CUSUM_SQL,
-    "cdc_snapshot_diff": CDC_SNAPSHOT_SQL,
-    "cdc_apply": CDC_APPLY_SQL,
-    "ti_twap": TI_TWAP_SQL,
-    "ti_realized_vol": TI_REALIZED_VOL_SQL,
-    "w_des_forecast": _w_des_forecast_sql(),
-    "ti_var_cvar": TI_VAR_CVAR_SQL,
-}
+REGISTRY = (
+    (ti_bollinger, TI_BOLLINGER_SQL),
+    (ti_rsi, TI_RSI_SQL),
+    (ti_macd, TI_MACD_SQL),
+    (ti_drawdown, TI_DRAWDOWN_SQL),
+    (ti_stochastic, TI_STOCH_SQL),
+    (ti_vwap, TI_VWAP_SQL),
+    (ti_obv, TI_OBV_SQL),
+    (ti_acf, TI_ACF_SQL),
+    (ti_backtest, TI_BACKTEST_SQL),
+    (w_cusum, W_CUSUM_SQL),
+    (cdc_snapshot_diff, CDC_SNAPSHOT_SQL),
+    (cdc_apply, CDC_APPLY_SQL),
+    (ti_twap, TI_TWAP_SQL),
+    (ti_realized_vol, TI_REALIZED_VOL_SQL),
+    (w_des_forecast, _w_des_forecast_sql()),
+    (ti_var_cvar, TI_VAR_CVAR_SQL),
+)

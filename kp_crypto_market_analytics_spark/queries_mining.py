@@ -37,8 +37,6 @@ partkey."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1888,48 +1886,25 @@ FROM islands GROUP BY event_type ORDER BY event_type
 """
 
 
-MINING_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_hashed_features": t_hashed_features,
-    "g_jaccard_sim": g_jaccard_sim,
-    "a_markov_transition": a_markov_transition,
-    "q_rank_movers": q_rank_movers,
-    "g_kcore": g_kcore,
-    "q_yoy_growth": q_yoy_growth,
-    "j_scd2_lookup": j_scd2_lookup,
-    "w_stl_decompose": w_stl_decompose,
-    "q_abc_pareto": q_abc_pareto,
-    "a_funnel_windowed": a_funnel_windowed,
-    "t_keyphrase_rake": t_keyphrase_rake,
-    "a_cohort_ltv": a_cohort_ltv,
-    "a_active_users": a_active_users,
-    "q_customer_rfm": q_customer_rfm,
-    "a_order_intervals": a_order_intervals,
-    "q_skyline_frontier": q_skyline_frontier,
-    "a_attribution": a_attribution,
-    "w_interval_merge": w_interval_merge,
-    "a_mutual_info": a_mutual_info,
-    "a_session_paths": a_session_paths,
-}
-
-MINING_ORACLES: dict[str, str] = {
-    "t_hashed_features": _t_hashed_features_sql(),
-    "g_jaccard_sim": _g_jaccard_sim_sql(),
-    "a_markov_transition": _a_markov_transition_sql(),
-    "q_rank_movers": _q_rank_movers_sql(),
-    "g_kcore": _g_kcore_sql(),
-    "q_yoy_growth": _q_yoy_growth_sql(),
-    "j_scd2_lookup": _j_scd2_lookup_sql(),
-    "w_stl_decompose": _w_stl_decompose_sql(),
-    "q_abc_pareto": _q_abc_pareto_sql(),
-    "a_funnel_windowed": _a_funnel_windowed_sql(),
-    "t_keyphrase_rake": _t_keyphrase_rake_sql(),
-    "a_cohort_ltv": _a_cohort_ltv_sql(),
-    "a_active_users": _a_active_users_sql(),
-    "q_customer_rfm": _q_customer_rfm_sql(),
-    "a_order_intervals": _a_order_intervals_sql(),
-    "q_skyline_frontier": _Q_SKYLINE_SQL,
-    "a_attribution": _a_attribution_sql(),
-    "w_interval_merge": _W_INTERVAL_MERGE_SQL,
-    "a_mutual_info": _a_mutual_info_sql(),
-    "a_session_paths": _A_SESSION_PATHS_SQL,
-}
+REGISTRY = (
+    (t_hashed_features, _t_hashed_features_sql()),
+    (g_jaccard_sim, _g_jaccard_sim_sql()),
+    (a_markov_transition, _a_markov_transition_sql()),
+    (q_rank_movers, _q_rank_movers_sql()),
+    (g_kcore, _g_kcore_sql()),
+    (q_yoy_growth, _q_yoy_growth_sql()),
+    (j_scd2_lookup, _j_scd2_lookup_sql()),
+    (w_stl_decompose, _w_stl_decompose_sql()),
+    (q_abc_pareto, _q_abc_pareto_sql()),
+    (a_funnel_windowed, _a_funnel_windowed_sql()),
+    (t_keyphrase_rake, _t_keyphrase_rake_sql()),
+    (a_cohort_ltv, _a_cohort_ltv_sql()),
+    (a_active_users, _a_active_users_sql()),
+    (q_customer_rfm, _q_customer_rfm_sql()),
+    (a_order_intervals, _a_order_intervals_sql()),
+    (q_skyline_frontier, _Q_SKYLINE_SQL),
+    (a_attribution, _a_attribution_sql()),
+    (w_interval_merge, _W_INTERVAL_MERGE_SQL),
+    (a_mutual_info, _a_mutual_info_sql()),
+    (a_session_paths, _A_SESSION_PATHS_SQL),
+)

@@ -33,8 +33,6 @@ engines, rounded where a division could differ.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1458,9 +1456,10 @@ def w_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape (same as resample_ffill): one map-side-combined bucket
     agg, a skinny bounds agg whose sequence() explode generates the
-    grid shuffle-free, one left join, then TWO frame windows (prev /
-    next) riding a single per-key sort — Spark evaluates both frames
-    in one Window exec, so the grid is sorted once.
+    grid shuffle-free, one left join, then TWO running-frame windows:
+    prev over ``b`` ascending, next over ``b`` descending.  Spark
+    re-evaluates a currentRow → unboundedFollowing frame on every row
+    (O(n²) per event type), so "next" is the reversed running frame.
     """
     t = load_tables(spark, sf_dir, ["events"])
     step = 300
@@ -1485,14 +1484,14 @@ def w_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wn = (
         Window.partitionBy("event_type")
-        .orderBy("b")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.col("b").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     ob = F.when(F.col("avg_value").isNotNull(), F.col("b"))
     pv = F.last("avg_value", ignorenulls=True).over(wp)
     pb = F.last(ob, ignorenulls=True).over(wp)
-    nv = F.first("avg_value", ignorenulls=True).over(wn)
-    nb = F.first(ob, ignorenulls=True).over(wn)
+    nv = F.last("avg_value", ignorenulls=True).over(wn)
+    nb = F.last(ob, ignorenulls=True).over(wn)
     # Exact integer micro-unit interpolation: pv/nv are 6-dp values, so
     # pv + (nv−pv)·gap_frac lands on .5e-6 rounding ties STRUCTURALLY
     # (e.g. odd-micro diff halved); double round() then diverges
@@ -4046,76 +4045,39 @@ FROM m ORDER BY dim
 """
 
 
-QUALITY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dq_constraints": dq_constraints,
-    "dq_k_anonymity": dq_k_anonymity,
-    "a_ddsketch_quantiles": a_ddsketch_quantiles,
-    "a_ddsketch_merge": a_ddsketch_merge,
-    "a_ddsketch_stream_parity": a_ddsketch_stream_parity,
-    "a_kmv_stream_parity": a_kmv_stream_parity,
-    "dedup_stream_parity": dedup_stream_parity,
-    "t_mg_stream_parity": t_mg_stream_parity,
-    "a_grouping_sets": a_grouping_sets,
-    "g_triangle_count": g_triangle_count,
-    "g_assoc_rules": g_assoc_rules,
-    "e_covariance": e_covariance,
-    "cdc_scd2": cdc_scd2,
-    "dq_drift_psi": dq_drift_psi,
-    "a_benford": a_benford,
-    "t_zipf_fit": t_zipf_fit,
-    "w_gapfill_interp": w_gapfill_interp,
-    "e_jl_projection": e_jl_projection,
-    "a_kmv_overlap": a_kmv_overlap,
-    "mm_audio_windows": mm_audio_windows,
-    "a_lorenz_gini": a_lorenz_gini,
-    "e_matryoshka_prefix": e_matryoshka_prefix,
-    "w_seasonal_naive_forecast": w_seasonal_naive_forecast,
-    "e_embedding_drift": e_embedding_drift,
-    "e_label_centroid_audit": e_label_centroid_audit,
-    "e_fisher_separation": e_fisher_separation,
-    "dq_dataset_checksum": dq_dataset_checksum,
-    "dq_join_cardinality": dq_join_cardinality,
-    "e_quantile_normalize": e_quantile_normalize,
-    "dq_fk_discovery": dq_fk_discovery,
-    "dq_ks_test": dq_ks_test,
-    "a_kmv_difference": a_kmv_difference,
-    "a_bitmap_sets": a_bitmap_sets,
-    "e_knn_eval": e_knn_eval,
-}
-
-QUALITY_ORACLES: dict[str, str] = {
-    "dq_constraints": _dq_constraints_sql(),
-    "dq_k_anonymity": _dq_k_anonymity_sql(),
-    "a_ddsketch_quantiles": _dds_quantiles_sql(),
-    "a_ddsketch_merge": _dds_merge_sql(),
-    "a_ddsketch_stream_parity": _dds_stream_parity_sql(),
-    "a_kmv_stream_parity": _kmv_stream_parity_sql(),
-    "dedup_stream_parity": _dedup_stream_parity_sql(),
-    "t_mg_stream_parity": _mg_stream_parity_sql(),
-    "a_grouping_sets": _grouping_sets_sql(),
-    "g_triangle_count": _triangle_count_sql(),
-    "g_assoc_rules": _assoc_rules_sql(),
-    "e_covariance": _e_covariance_sql(),
-    "cdc_scd2": _cdc_scd2_sql(),
-    "dq_drift_psi": _dq_drift_psi_sql(),
-    "a_benford": _a_benford_sql(),
-    "t_zipf_fit": _t_zipf_fit_sql(),
-    "w_gapfill_interp": _w_gapfill_interp_sql(),
-    "e_jl_projection": _e_jl_projection_sql(),
-    "a_kmv_overlap": _a_kmv_overlap_sql(),
-    "mm_audio_windows": _mm_audio_sql(),
-    "a_lorenz_gini": _a_lorenz_gini_sql(),
-    "e_matryoshka_prefix": _e_matryoshka_sql(),
-    "w_seasonal_naive_forecast": _w_seasonal_naive_sql(),
-    "e_embedding_drift": _e_embedding_drift_sql(),
-    "e_label_centroid_audit": _e_label_centroid_sql(),
-    "e_fisher_separation": _e_fisher_sql(),
-    "dq_dataset_checksum": _dq_dataset_checksum_sql(),
-    "dq_join_cardinality": _DQ_JOIN_CARD_SQL,
-    "e_quantile_normalize": _e_quantile_normalize_sql(),
-    "dq_fk_discovery": _dq_fk_discovery_sql(),
-    "dq_ks_test": _DQ_KS_SQL,
-    "a_kmv_difference": _a_kmv_difference_sql(),
-    "a_bitmap_sets": _A_BITMAP_SQL,
-    "e_knn_eval": _E_KNN_SQL,
-}
+REGISTRY = (
+    (dq_constraints, _dq_constraints_sql()),
+    (dq_k_anonymity, _dq_k_anonymity_sql()),
+    (a_ddsketch_quantiles, _dds_quantiles_sql()),
+    (a_ddsketch_merge, _dds_merge_sql()),
+    (a_ddsketch_stream_parity, _dds_stream_parity_sql()),
+    (a_kmv_stream_parity, _kmv_stream_parity_sql()),
+    (dedup_stream_parity, _dedup_stream_parity_sql()),
+    (t_mg_stream_parity, _mg_stream_parity_sql()),
+    (a_grouping_sets, _grouping_sets_sql()),
+    (g_triangle_count, _triangle_count_sql()),
+    (g_assoc_rules, _assoc_rules_sql()),
+    (e_covariance, _e_covariance_sql()),
+    (cdc_scd2, _cdc_scd2_sql()),
+    (dq_drift_psi, _dq_drift_psi_sql()),
+    (a_benford, _a_benford_sql()),
+    (t_zipf_fit, _t_zipf_fit_sql()),
+    (w_gapfill_interp, _w_gapfill_interp_sql()),
+    (e_jl_projection, _e_jl_projection_sql()),
+    (a_kmv_overlap, _a_kmv_overlap_sql()),
+    (mm_audio_windows, _mm_audio_sql()),
+    (a_lorenz_gini, _a_lorenz_gini_sql()),
+    (e_matryoshka_prefix, _e_matryoshka_sql()),
+    (w_seasonal_naive_forecast, _w_seasonal_naive_sql()),
+    (e_embedding_drift, _e_embedding_drift_sql()),
+    (e_label_centroid_audit, _e_label_centroid_sql()),
+    (e_fisher_separation, _e_fisher_sql()),
+    (dq_dataset_checksum, _dq_dataset_checksum_sql()),
+    (dq_join_cardinality, _DQ_JOIN_CARD_SQL),
+    (e_quantile_normalize, _e_quantile_normalize_sql()),
+    (dq_fk_discovery, _dq_fk_discovery_sql()),
+    (dq_ks_test, _DQ_KS_SQL),
+    (a_kmv_difference, _a_kmv_difference_sql()),
+    (a_bitmap_sets, _A_BITMAP_SQL),
+    (e_knn_eval, _E_KNN_SQL),
+)

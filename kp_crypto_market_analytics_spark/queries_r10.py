@@ -21,18 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kp_crypto_market_analytics_spark.functions.text import lang_id_sql
 from kp_crypto_market_analytics_spark.operators.aggregates import DEC
 from kp_crypto_market_analytics_spark.session import (
     ensure_parallelism,
     load_tables,
 )
-
-R10_QUERIES: dict = {}
-_R10_ORACLES: dict = {}
-
-
-def r10_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R10_ORACLES.items()}
 
 
 # --------------------------------------------- dedup_lsh_stream_parity
@@ -286,10 +280,6 @@ ORDER BY batch, doc_a, doc_b
 """
 
 
-R10_QUERIES["dedup_lsh_stream_parity"] = dedup_lsh_stream_parity
-_R10_ORACLES["dedup_lsh_stream_parity"] = _dedup_lsh_stream_parity_sql
-
-
 # ------------------------------------------- daily OHLC bars with open
 #
 # The r9 daily-bar toolkit (queries_r9._daily_bars_df) carries H/L/C;
@@ -412,10 +402,6 @@ FROM g ORDER BY event_type
 """
 
 
-R10_QUERIES["ti_garman_klass"] = ti_garman_klass
-_R10_ORACLES["ti_garman_klass"] = _ti_garman_klass_sql
-
-
 # ------------------------------------------------- ti_rogers_satchell
 
 
@@ -466,10 +452,6 @@ SELECT event_type, n_days,
     THEN round(sqrt(sn / 1e9 / n_days), 6) END AS rs_daily_vol
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["ti_rogers_satchell"] = ti_rogers_satchell
-_R10_ORACLES["ti_rogers_satchell"] = _ti_rogers_satchell_sql
 
 
 # ----------------------------------------------------- ti_yang_zhang
@@ -585,10 +567,6 @@ FROM g ORDER BY event_type
 """
 
 
-R10_QUERIES["ti_yang_zhang"] = ti_yang_zhang
-_R10_ORACLES["ti_yang_zhang"] = _ti_yang_zhang_sql
-
-
 # --------------------------------------------------------- ti_vortex
 
 _VTX_N = 14
@@ -661,10 +639,6 @@ ORDER BY event_type, day
 """
 
 
-R10_QUERIES["ti_vortex"] = ti_vortex
-_R10_ORACLES["ti_vortex"] = _ti_vortex_sql
-
-
 # ------------------------------------------------- ti_chande_momentum
 
 _CMO_N = 14
@@ -720,10 +694,6 @@ SELECT event_type, day,
   END AS cmo
 FROM s ORDER BY event_type, day
 """
-
-
-R10_QUERIES["ti_chande_momentum"] = ti_chande_momentum
-_R10_ORACLES["ti_chande_momentum"] = _ti_chande_momentum_sql
 
 
 # ------------------------------------------------------------ ti_cci
@@ -834,10 +804,6 @@ ORDER BY g.event_type, g.day
 """
 
 
-R10_QUERIES["ti_cci"] = ti_cci
-_R10_ORACLES["ti_cci"] = _ti_cci_sql
-
-
 # ---------------------------------------------------- ti_force_index
 
 _FI_N = 13
@@ -908,10 +874,6 @@ SELECT event_type, day,
   END AS force_index_sma13
 FROM s ORDER BY event_type, day
 """
-
-
-R10_QUERIES["ti_force_index"] = ti_force_index
-_R10_ORACLES["ti_force_index"] = _ti_force_index_sql
 
 
 # ------------------------------------------------------------ ti_eom
@@ -989,10 +951,6 @@ FROM b
 WINDOW w AS ({_WD_SQL} ROWS BETWEEN {_EOM_N - 1} PRECEDING AND CURRENT ROW)
 ORDER BY event_type, day
 """
-
-
-R10_QUERIES["ti_eom"] = ti_eom
-_R10_ORACLES["ti_eom"] = _ti_eom_sql
 
 
 # ---------------------------------------------------- classifier-eval
@@ -1128,10 +1086,6 @@ FROM g
 """
 
 
-R10_QUERIES["a_auc_roc"] = a_auc_roc
-_R10_ORACLES["a_auc_roc"] = _a_auc_roc_sql
-
-
 # ------------------------------------------------------ a_brier_score
 
 
@@ -1188,10 +1142,6 @@ SELECT n, np AS n_pos,
   END AS brier_skill
 FROM g
 """
-
-
-R10_QUERIES["a_brier_score"] = a_brier_score
-_R10_ORACLES["a_brier_score"] = _a_brier_score_sql
 
 
 # -------------------------------------------------- a_ece_calibration
@@ -1259,10 +1209,6 @@ SELECT bin, n_docs,
   round(n_docs * abs({conf} - {acc}) / (nt * 1e6), 6) AS ece_term
 FROM g CROSS JOIN tot ORDER BY bin
 """
-
-
-R10_QUERIES["a_ece_calibration"] = a_ece_calibration
-_R10_ORACLES["a_ece_calibration"] = _a_ece_calibration_sql
 
 
 # --------------------------------------------------------- a_cohens_d
@@ -1341,10 +1287,6 @@ SELECT event_type, na AS n_weekend, nb AS n_weekday,
     THEN round({dd} * {corr}, 6) + 0.0 END AS hedges_g
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["a_cohens_d"] = a_cohens_d
-_R10_ORACLES["a_cohens_d"] = _a_cohens_d_sql
 
 
 # ------------------------------------------------------ a_cliffs_delta
@@ -1451,10 +1393,6 @@ FROM g ORDER BY event_type
 """
 
 
-R10_QUERIES["a_cliffs_delta"] = a_cliffs_delta
-_R10_ORACLES["a_cliffs_delta"] = _a_cliffs_delta_sql
-
-
 # ---------------------------------------------------------- a_mcnemar
 
 
@@ -1556,10 +1494,6 @@ SELECT n_both, n_len_only, n_quality_only, n_neither,
   END AS mcnemar_chi2_cc
 FROM g
 """
-
-
-R10_QUERIES["a_mcnemar"] = a_mcnemar
-_R10_ORACLES["a_mcnemar"] = _a_mcnemar_sql
 
 
 # --------------------------------------------------------- a_cochran_q
@@ -1678,10 +1612,6 @@ FROM g
 """
 
 
-R10_QUERIES["a_cochran_q"] = a_cochran_q
-_R10_ORACLES["a_cochran_q"] = _a_cochran_q_sql
-
-
 # ------------------------------------------------------ a_friedman_test
 
 
@@ -1795,10 +1725,6 @@ FROM g
 """
 
 
-R10_QUERIES["a_friedman_test"] = a_friedman_test
-_R10_ORACLES["a_friedman_test"] = _a_friedman_test_sql
-
-
 # ---------------------------------------------------------- a_theil_u
 
 
@@ -1870,10 +1796,6 @@ SELECT event_type, n AS n_days,
   END AS theil_u1
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["a_theil_u"] = a_theil_u
-_R10_ORACLES["a_theil_u"] = _a_theil_u_sql
 
 
 # -------------------------------------------------------- a_smape_mase
@@ -1974,10 +1896,6 @@ FROM g ORDER BY event_type
 """
 
 
-R10_QUERIES["a_smape_mase"] = a_smape_mase
-_R10_ORACLES["a_smape_mase"] = _a_smape_mase_sql
-
-
 # ------------------------------------------------------ dq_orphan_rate
 
 
@@ -2053,10 +1971,6 @@ def _dq_orphan_rate_sql() -> str:
     return "\n  SELECT * FROM (\n" + "\n  UNION ALL\n".join(sel) + "\n) ORDER BY fk"
 
 
-R10_QUERIES["dq_orphan_rate"] = dq_orphan_rate
-_R10_ORACLES["dq_orphan_rate"] = _dq_orphan_rate_sql
-
-
 # ------------------------------------------------------- t_group_kfold
 
 _KFOLD_K = 5
@@ -2116,10 +2030,6 @@ SELECT fold, n_events, n_users, n_types,
   (n_events * 1000000) // nt AS event_share_ppm
 FROM g CROSS JOIN tot ORDER BY fold
 """
-
-
-R10_QUERIES["t_group_kfold"] = t_group_kfold
-_R10_ORACLES["t_group_kfold"] = _t_group_kfold_sql
 
 
 # -------------------------------------------------- t_poisson_bootstrap
@@ -2198,10 +2108,6 @@ SELECT event_type,
   round(SUM(w) / CAST(COUNT(*) AS DOUBLE), 6) AS resample_ratio
 FROM wtd GROUP BY 1 ORDER BY event_type
 """
-
-
-R10_QUERIES["t_poisson_bootstrap"] = t_poisson_bootstrap
-_R10_ORACLES["t_poisson_bootstrap"] = _t_poisson_bootstrap_sql
 
 
 # --------------------------------------------- t_temporal_split_embargo
@@ -2329,10 +2235,6 @@ FROM cnt JOIN ov USING (event_type) ORDER BY event_type
 """
 
 
-R10_QUERIES["t_temporal_split_embargo"] = t_temporal_split_embargo
-_R10_ORACLES["t_temporal_split_embargo"] = _t_temporal_split_embargo_sql
-
-
 # ------------------------------------------------------ t_lang_confusion
 
 
@@ -2366,9 +2268,7 @@ def t_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t_lang_confusion_sql() -> str:
-    from kp_crypto_market_analytics_spark.queries import _t_lang_sql
-
-    inner = _t_lang_sql().replace("ORDER BY doc_id", "")
+    inner = lang_id_sql().replace("ORDER BY doc_id", "")
     return f"""
 WITH pred AS ({inner}), g AS (
   SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -2381,10 +2281,6 @@ SELECT lang, pred_lang, n_docs,
   lang = pred_lang AS is_correct
 FROM g JOIN wtot USING (lang) ORDER BY lang, pred_lang
 """
-
-
-R10_QUERIES["t_lang_confusion"] = t_lang_confusion
-_R10_ORACLES["t_lang_confusion"] = _t_lang_confusion_sql
 
 
 # --------------------------------------------------- w_rolling_skewkurt
@@ -2478,10 +2374,6 @@ SELECT event_type, ts, event_id,
     round({m4} / ({m2} * {m2}) - 3, 6) + 0.0 END AS roll_kurt
 FROM fin ORDER BY event_type, ts, event_id
 """
-
-
-R10_QUERIES["w_rolling_skewkurt"] = w_rolling_skewkurt
-_R10_ORACLES["w_rolling_skewkurt"] = _w_rolling_skewkurt_sql
 
 
 # ------------------------------------------------------ w_hampel_filter
@@ -2580,10 +2472,6 @@ SELECT event_type, day, n_windows, n_outliers,
   (n_outliers * 1000000) // n_windows AS outlier_ppm
 FROM g ORDER BY event_type, day
 """
-
-
-R10_QUERIES["w_hampel_filter"] = w_hampel_filter
-_R10_ORACLES["w_hampel_filter"] = _w_hampel_filter_sql
 
 
 # ------------------------------------------------------------ ti_pacf
@@ -2685,10 +2573,6 @@ SELECT event_type,
     THEN round({p33}, 6) + 0.0 END AS pacf_3
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["ti_pacf"] = ti_pacf
-_R10_ORACLES["ti_pacf"] = _ti_pacf_sql
 
 
 # ------------------------------------------------- t_perplexity_buckets
@@ -2818,10 +2702,6 @@ FROM g CROSS JOIN tot ORDER BY logprob_band
 """
 
 
-R10_QUERIES["t_perplexity_buckets"] = t_perplexity_buckets
-_R10_ORACLES["t_perplexity_buckets"] = _t_perplexity_buckets_sql
-
-
 # ------------------------------------------------------ t_cdc_chunking
 
 _CDC_WIN = 8      # rolling-window width for the boundary hash
@@ -2940,10 +2820,6 @@ FROM g ORDER BY source
 """
 
 
-R10_QUERIES["t_cdc_chunking"] = t_cdc_chunking
-_R10_ORACLES["t_cdc_chunking"] = _t_cdc_chunking_sql
-
-
 # -------------------------------------------------------- ti_keltner
 
 _KC_EWMA_LAGS = 8   # truncated EWMA depth (alpha = 1/2 -> /255)
@@ -3049,10 +2925,6 @@ FROM fin ORDER BY event_type, day
 """
 
 
-R10_QUERIES["ti_keltner"] = ti_keltner
-_R10_ORACLES["ti_keltner"] = _ti_keltner_sql
-
-
 # ------------------------------------------------- o8_systematic_sample
 
 _SYS_K = 97  # prime stride decorrelates from any periodic layout
@@ -3122,10 +2994,6 @@ SELECT event_type, n_orig, n_sample,
   coalesce(svs, 0) AS sample_vm_sum
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["o8_systematic_sample"] = o8_systematic_sample
-_R10_ORACLES["o8_systematic_sample"] = _o8_systematic_sample_sql
 
 
 # ----------------------------------------------------------- a_rank_ic
@@ -3277,10 +3145,6 @@ FROM g
 """
 
 
-R10_QUERIES["a_rank_ic"] = a_rank_ic
-_R10_ORACLES["a_rank_ic"] = _a_rank_ic_sql
-
-
 # ---------------------------------------------------- a_variance_ratio
 
 _VR_Q = 5
@@ -3371,10 +3235,6 @@ SELECT event_type, n1 AS n_returns,
     THEN round(({vr} - 1) / {se}, 6) + 0.0 END AS vr_z
 FROM g ORDER BY event_type
 """
-
-
-R10_QUERIES["a_variance_ratio"] = a_variance_ratio
-_R10_ORACLES["a_variance_ratio"] = _a_variance_ratio_sql
 
 
 # -------------------------------------------------- a_transfer_entropy
@@ -3548,5 +3408,39 @@ FROM te_xy CROSS JOIN te_yx
 """
 
 
-R10_QUERIES["a_transfer_entropy"] = a_transfer_entropy
-_R10_ORACLES["a_transfer_entropy"] = _a_transfer_entropy_sql
+REGISTRY = (
+    (dedup_lsh_stream_parity, _dedup_lsh_stream_parity_sql()),
+    (ti_garman_klass, _ti_garman_klass_sql()),
+    (ti_rogers_satchell, _ti_rogers_satchell_sql()),
+    (ti_yang_zhang, _ti_yang_zhang_sql()),
+    (ti_vortex, _ti_vortex_sql()),
+    (ti_chande_momentum, _ti_chande_momentum_sql()),
+    (ti_cci, _ti_cci_sql()),
+    (ti_force_index, _ti_force_index_sql()),
+    (ti_eom, _ti_eom_sql()),
+    (a_auc_roc, _a_auc_roc_sql()),
+    (a_brier_score, _a_brier_score_sql()),
+    (a_ece_calibration, _a_ece_calibration_sql()),
+    (a_cohens_d, _a_cohens_d_sql()),
+    (a_cliffs_delta, _a_cliffs_delta_sql()),
+    (a_mcnemar, _a_mcnemar_sql()),
+    (a_cochran_q, _a_cochran_q_sql()),
+    (a_friedman_test, _a_friedman_test_sql()),
+    (a_theil_u, _a_theil_u_sql()),
+    (a_smape_mase, _a_smape_mase_sql()),
+    (dq_orphan_rate, _dq_orphan_rate_sql()),
+    (t_group_kfold, _t_group_kfold_sql()),
+    (t_poisson_bootstrap, _t_poisson_bootstrap_sql()),
+    (t_temporal_split_embargo, _t_temporal_split_embargo_sql()),
+    (t_lang_confusion, _t_lang_confusion_sql()),
+    (w_rolling_skewkurt, _w_rolling_skewkurt_sql()),
+    (w_hampel_filter, _w_hampel_filter_sql()),
+    (ti_pacf, _ti_pacf_sql()),
+    (t_perplexity_buckets, _t_perplexity_buckets_sql()),
+    (t_cdc_chunking, _t_cdc_chunking_sql()),
+    (ti_keltner, _ti_keltner_sql()),
+    (o8_systematic_sample, _o8_systematic_sample_sql()),
+    (a_rank_ic, _a_rank_ic_sql()),
+    (a_variance_ratio, _a_variance_ratio_sql()),
+    (a_transfer_entropy, _a_transfer_entropy_sql()),
+)

@@ -29,13 +29,6 @@ from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.session import load_tables
 
-R11_QUERIES: dict = {}
-_R11_ORACLES: dict = {}
-
-
-def r11_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R11_ORACLES.items()}
-
 
 # ----------------------------------------------- sim_ivf_stream_parity
 
@@ -95,10 +88,6 @@ def _sim_ivf_stream_parity_sql() -> str:
 SELECT CAST(nid % {nb} AS BIGINT) AS batch, nid AS vec_id, centroid_id
 FROM cassign
 ORDER BY batch, vec_id"""
-
-
-R11_QUERIES["sim_ivf_stream_parity"] = sim_ivf_stream_parity
-_R11_ORACLES["sim_ivf_stream_parity"] = _sim_ivf_stream_parity_sql
 
 
 # ------------------------------------------------------- t_pii_redact
@@ -197,10 +186,6 @@ ORDER BY doc_id
 """
 
 
-R11_QUERIES["t_pii_redact"] = t_pii_redact
-_R11_ORACLES["t_pii_redact"] = _t_pii_redact_sql
-
-
 # ----------------------------------------------------------- ti_dpo
 #
 # Daily-bar indicators continue the r9/r10 exact-integer contract:
@@ -266,10 +251,6 @@ WINDOW d AS ({_WD_SQL}),
   w AS ({_WD_SQL} ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW)
 ORDER BY event_type, day
 """
-
-
-R11_QUERIES["ti_dpo"] = ti_dpo
-_R11_ORACLES["ti_dpo"] = _ti_dpo_sql
 
 
 # ----------------------------------------------------------- ti_vpt
@@ -377,10 +358,6 @@ ORDER BY event_type, day
 """
 
 
-R11_QUERIES["ti_vpt"] = ti_vpt
-_R11_ORACLES["ti_vpt"] = _ti_vpt_sql
-
-
 # ----------------------------------------------------------- ti_nvi
 
 
@@ -463,10 +440,6 @@ FROM t
 WINDOW c AS ({_WD_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ORDER BY event_type, day
 """
-
-
-R11_QUERIES["ti_nvi"] = ti_nvi
-_R11_ORACLES["ti_nvi"] = _ti_nvi_sql
 
 
 # -------------------------------------------------------- ti_coppock
@@ -576,10 +549,6 @@ FROM s
 WINDOW d AS ({_WD_SQL})
 ORDER BY event_type, day
 """
-
-
-R11_QUERIES["ti_coppock"] = ti_coppock
-_R11_ORACLES["ti_coppock"] = _ti_coppock_sql
 
 
 # ------------------------------------------- paired rank statistics
@@ -699,10 +668,6 @@ FROM g
 """
 
 
-R11_QUERIES["a_sign_test"] = a_sign_test
-_R11_ORACLES["a_sign_test"] = _a_sign_test_sql
-
-
 def a_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilcoxon signed-rank test on the same paired daily design: rank
     the non-zero |differences| (midranks for ties), sum ranks of the
@@ -792,10 +757,6 @@ SELECT n,
   END AS wilcoxon_z
 FROM g, ties
 """
-
-
-R11_QUERIES["a_wilcoxon_signed_rank"] = a_wilcoxon_signed_rank
-_R11_ORACLES["a_wilcoxon_signed_rank"] = _a_wilcoxon_signed_rank_sql
 
 
 def a_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,10 +865,6 @@ FROM g
 """
 
 
-R11_QUERIES["a_page_trend"] = a_page_trend
-_R11_ORACLES["a_page_trend"] = _a_page_trend_sql
-
-
 def a_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mood's median test on the click-vs-view daily values: count
     each group's days above/below the pooled median (equal-to-median
@@ -979,10 +936,6 @@ SELECT a_above, a_below, b_above, b_below,
   END AS mood_chi2
 FROM counts
 """
-
-
-R11_QUERIES["a_mood_median"] = a_mood_median
-_R11_ORACLES["a_mood_median"] = _a_mood_median_sql
 
 
 def a_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,10 +1039,6 @@ FROM g
 """
 
 
-R11_QUERIES["a_somers_d"] = a_somers_d
-_R11_ORACLES["a_somers_d"] = _a_somers_d_sql
-
-
 # ----------------------------------------------------------- t_yule_k
 
 
@@ -1165,10 +1114,6 @@ SELECT source, n_tokens, n_types,
   END AS yule_k
 FROM g ORDER BY source
 """
-
-
-R11_QUERIES["t_yule_k"] = t_yule_k
-_R11_ORACLES["t_yule_k"] = _t_yule_k_sql
 
 
 # ------------------------------------------------------ t_readability
@@ -1299,10 +1244,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
   {mean('fog6')} AS avg_fog
 FROM perdoc GROUP BY source ORDER BY source
 """
-
-
-R11_QUERIES["t_readability"] = t_readability
-_R11_ORACLES["t_readability"] = _t_readability_sql
 
 
 # --------------------------------------------------- t_code_detection
@@ -1502,10 +1443,6 @@ FROM g ORDER BY source
 """
 
 
-R11_QUERIES["t_importance_sample"] = t_importance_sample
-_R11_ORACLES["t_importance_sample"] = _t_importance_sample_sql
-
-
 # --------------------------------------------- t_curriculum_schedule
 
 _CURR_STAGES = 3
@@ -1564,10 +1501,6 @@ SELECT source, stage, CAST(COUNT(*) AS BIGINT) AS n_docs,
   MIN(ntok) AS min_tokens, MAX(ntok) AS max_tokens
 FROM staged GROUP BY source, stage ORDER BY source, stage
 """
-
-
-R11_QUERIES["t_curriculum_schedule"] = t_curriculum_schedule
-_R11_ORACLES["t_curriculum_schedule"] = _t_curriculum_schedule_sql
 
 
 # ------------------------------------------- g_degree_assortativity
@@ -1664,10 +1597,6 @@ SELECT n_pts,
   END AS assortativity
 FROM g
 """
-
-
-R11_QUERIES["g_degree_assortativity"] = g_degree_assortativity
-_R11_ORACLES["g_degree_assortativity"] = _g_degree_assortativity_sql
 
 
 # ------------------------------------------------------- g_rich_club
@@ -1771,10 +1700,6 @@ ORDER BY k
 """
 
 
-R11_QUERIES["g_rich_club"] = g_rich_club
-_R11_ORACLES["g_rich_club"] = _g_rich_club_sql
-
-
 # --------------------------------------------------------- e_hubness
 
 _HUB_PROBES = 200
@@ -1831,10 +1756,6 @@ WITH q AS (
 SELECT in_degree, CAST(COUNT(*) AS BIGINT) AS n_vectors
 FROM indeg GROUP BY in_degree ORDER BY in_degree
 """
-
-
-R11_QUERIES["e_hubness"] = e_hubness
-_R11_ORACLES["e_hubness"] = _e_hubness_sql
 
 
 # ----------------------------------------------------- a_fleiss_kappa
@@ -1941,10 +1862,6 @@ FROM g
 """
 
 
-R11_QUERIES["a_fleiss_kappa"] = a_fleiss_kappa
-_R11_ORACLES["a_fleiss_kappa"] = _a_fleiss_kappa_sql
-
-
 # ----------------------------------------------------------- ti_trix
 
 _TRIX_ALPHA = 0.25
@@ -2032,10 +1949,6 @@ FROM b3
 WINDOW d AS ({_WD_SQL})
 ORDER BY event_type, day
 """
-
-
-R11_QUERIES["ti_trix"] = ti_trix
-_R11_ORACLES["ti_trix"] = _ti_trix_sql
 
 
 # -------------------------------------------------------- a_quade_test
@@ -2178,10 +2091,6 @@ SELECT n AS n_days, k AS n_types,
   END AS quade_f
 FROM g
 """
-
-
-R11_QUERIES["a_quade_test"] = a_quade_test
-_R11_ORACLES["a_quade_test"] = _a_quade_test_sql
 
 
 # --------------------------------------------------------- a_log_rank
@@ -2421,10 +2330,6 @@ FROM folded
 """
 
 
-R11_QUERIES["a_log_rank"] = a_log_rank
-_R11_ORACLES["a_log_rank"] = _a_log_rank_sql
-
-
 # --------------------------------------------------- t_lexical_density
 
 
@@ -2515,10 +2420,6 @@ FROM d GROUP BY source ORDER BY source
 """
 
 
-R11_QUERIES["t_lexical_density"] = t_lexical_density
-_R11_ORACLES["t_lexical_density"] = _t_lexical_density_sql
-
-
 # --------------------------------------------------- t_term_dispersion
 
 _DISP_TOP = 20
@@ -2601,10 +2502,6 @@ SELECT tok, tf, df,
 FROM byterm, nd
 ORDER BY tf DESC, tok ASC LIMIT {_DISP_TOP}
 """
-
-
-R11_QUERIES["t_term_dispersion"] = t_term_dispersion
-_R11_ORACLES["t_term_dispersion"] = _t_term_dispersion_sql
 
 
 # ------------------------------------------------- ti_fisher_transform
@@ -2693,10 +2590,6 @@ SELECT event_type, day,
 FROM base
 ORDER BY event_type, day
 """
-
-
-R11_QUERIES["ti_fisher_transform"] = ti_fisher_transform
-_R11_ORACLES["ti_fisher_transform"] = _ti_fisher_transform_sql
 
 
 # ----------------------------------------------------- w_tes_forecast
@@ -2817,9 +2710,32 @@ ORDER BY event_type, day
 """
 
 
-R11_QUERIES["w_tes_forecast"] = w_tes_forecast
-_R11_ORACLES["w_tes_forecast"] = _w_tes_forecast_sql
-
-
-R11_QUERIES["t_code_detection"] = t_code_detection
-_R11_ORACLES["t_code_detection"] = _t_code_detection_sql
+REGISTRY = (
+    (sim_ivf_stream_parity, _sim_ivf_stream_parity_sql()),
+    (t_pii_redact, _t_pii_redact_sql()),
+    (ti_dpo, _ti_dpo_sql()),
+    (ti_vpt, _ti_vpt_sql()),
+    (ti_nvi, _ti_nvi_sql()),
+    (ti_coppock, _ti_coppock_sql()),
+    (a_sign_test, _a_sign_test_sql()),
+    (a_wilcoxon_signed_rank, _a_wilcoxon_signed_rank_sql()),
+    (a_page_trend, _a_page_trend_sql()),
+    (a_mood_median, _a_mood_median_sql()),
+    (a_somers_d, _a_somers_d_sql()),
+    (t_yule_k, _t_yule_k_sql()),
+    (t_readability, _t_readability_sql()),
+    (t_importance_sample, _t_importance_sample_sql()),
+    (t_curriculum_schedule, _t_curriculum_schedule_sql()),
+    (g_degree_assortativity, _g_degree_assortativity_sql()),
+    (g_rich_club, _g_rich_club_sql()),
+    (e_hubness, _e_hubness_sql()),
+    (a_fleiss_kappa, _a_fleiss_kappa_sql()),
+    (ti_trix, _ti_trix_sql()),
+    (a_quade_test, _a_quade_test_sql()),
+    (a_log_rank, _a_log_rank_sql()),
+    (t_lexical_density, _t_lexical_density_sql()),
+    (t_term_dispersion, _t_term_dispersion_sql()),
+    (ti_fisher_transform, _ti_fisher_transform_sql()),
+    (w_tes_forecast, _w_tes_forecast_sql()),
+    (t_code_detection, _t_code_detection_sql()),
+)

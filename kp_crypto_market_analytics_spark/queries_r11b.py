@@ -29,13 +29,6 @@ from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.session import load_tables
 
-R11B_QUERIES: dict = {}
-_R11B_ORACLES: dict = {}
-
-
-def r11b_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R11B_ORACLES.items()}
-
 
 # ------------------------------------------- ti_ultimate_oscillator
 
@@ -149,10 +142,6 @@ ORDER BY event_type, day
 """
 
 
-R11B_QUERIES["ti_ultimate_oscillator"] = ti_ultimate_oscillator
-_R11B_ORACLES["ti_ultimate_oscillator"] = _ti_ultimate_oscillator_sql
-
-
 # ------------------------------------------- ti_awesome_oscillator
 
 _AO_FAST = 5
@@ -245,10 +234,6 @@ SELECT event_type, day,
 FROM p
 ORDER BY event_type, day
 """
-
-
-R11B_QUERIES["ti_awesome_oscillator"] = ti_awesome_oscillator
-_R11B_ORACLES["ti_awesome_oscillator"] = _ti_awesome_oscillator_sql
 
 
 # ------------------------------------------------------------ ti_kst
@@ -393,10 +378,6 @@ ORDER BY event_type, day
 """
 
 
-R11B_QUERIES["ti_kst"] = ti_kst
-_R11B_ORACLES["ti_kst"] = _ti_kst_sql
-
-
 # --------------------------------------------------- ti_pivot_points
 
 
@@ -468,10 +449,6 @@ SELECT event_type, day,
 FROM p
 ORDER BY event_type, day
 """
-
-
-R11B_QUERIES["ti_pivot_points"] = ti_pivot_points
-_R11B_ORACLES["ti_pivot_points"] = _ti_pivot_points_sql
 
 
 # ---------------------------------------------------- ti_choppiness
@@ -552,10 +529,6 @@ SELECT event_type, day,
 FROM s
 ORDER BY event_type, day
 """
-
-
-R11B_QUERIES["ti_choppiness"] = ti_choppiness
-_R11B_ORACLES["ti_choppiness"] = _ti_choppiness_sql
 
 
 # ------------------------------------------------------------ ti_bop
@@ -665,10 +638,6 @@ SELECT event_type, day,
 FROM s
 ORDER BY event_type, day
 """
-
-
-R11B_QUERIES["ti_bop"] = ti_bop
-_R11B_ORACLES["ti_bop"] = _ti_bop_sql
 
 
 # ------------------------------------------------- stats battery
@@ -843,10 +812,6 @@ FROM u
 """
 
 
-R11B_QUERIES["a_bartlett"] = a_bartlett
-_R11B_ORACLES["a_bartlett"] = _a_bartlett_sql
-
-
 # ------------------------------------- a_jonckheere_terpstra
 
 
@@ -942,10 +907,6 @@ FROM u CROSS JOIN m
 """
 
 
-R11B_QUERIES["a_jonckheere_terpstra"] = a_jonckheere_terpstra
-_R11B_ORACLES["a_jonckheere_terpstra"] = _a_jonckheere_terpstra_sql
-
-
 # --------------------------------------- a_cochran_armitage
 
 
@@ -1029,10 +990,6 @@ SELECT n_days, x_succ,
   END AS ca_z
 FROM t
 """
-
-
-R11B_QUERIES["a_cochran_armitage"] = a_cochran_armitage
-_R11B_ORACLES["a_cochran_armitage"] = _a_cochran_armitage_sql
 
 
 # ------------------------------------------------ a_odds_ratio
@@ -1141,10 +1098,6 @@ SELECT a, b, c, d,
   END AS log_or_hi
 FROM t
 """
-
-
-R11B_QUERIES["a_odds_ratio"] = a_odds_ratio
-_R11B_ORACLES["a_odds_ratio"] = _a_odds_ratio_sql
 
 
 # --------------------------------------------------- a_chow_test
@@ -1318,10 +1271,6 @@ FROM q
 """
 
 
-R11B_QUERIES["a_chow_test"] = a_chow_test
-_R11B_ORACLES["a_chow_test"] = _a_chow_test_sql
-
-
 # ----------------------------------------------- a_breusch_pagan
 
 
@@ -1442,10 +1391,6 @@ SELECT n AS n_days,
   END AS bp_lm
 FROM t
 """
-
-
-R11B_QUERIES["a_breusch_pagan"] = a_breusch_pagan
-_R11B_ORACLES["a_breusch_pagan"] = _a_breusch_pagan_sql
 
 
 # ---------------------------------------------- a_dagostino_k2
@@ -1595,10 +1540,6 @@ FROM t
 """
 
 
-R11B_QUERIES["a_dagostino_k2"] = a_dagostino_k2
-_R11B_ORACLES["a_dagostino_k2"] = _a_dagostino_k2_sql
-
-
 # ------------------------------------------ a_cramer_von_mises
 
 
@@ -1709,10 +1650,6 @@ FROM t
 """
 
 
-R11B_QUERIES["a_cramer_von_mises"] = a_cramer_von_mises
-_R11B_ORACLES["a_cramer_von_mises"] = _a_cramer_von_mises_sql
-
-
 # ------------------------------------------ w_permutation_entropy
 
 
@@ -1817,10 +1754,6 @@ SELECT event_type, n_windows, n_patterns,
 FROM g
 ORDER BY event_type
 """
-
-
-R11B_QUERIES["w_permutation_entropy"] = w_permutation_entropy
-_R11B_ORACLES["w_permutation_entropy"] = _w_permutation_entropy_sql
 
 
 # --------------------------------------------- w_sample_entropy
@@ -1981,10 +1914,6 @@ ORDER BY event_type
 """
 
 
-R11B_QUERIES["w_sample_entropy"] = w_sample_entropy
-_R11B_ORACLES["w_sample_entropy"] = _w_sample_entropy_sql
-
-
 # ------------------------------------------- t_hapax_richness
 
 
@@ -2081,10 +2010,6 @@ SELECT source, n_tokens, n_types, v1, v2,
   END AS honore_r
 FROM g ORDER BY source
 """
-
-
-R11B_QUERIES["t_hapax_richness"] = t_hapax_richness
-_R11B_ORACLES["t_hapax_richness"] = _t_hapax_richness_sql
 
 
 # ----------------------------------------------- t_distinct_n
@@ -2206,10 +2131,6 @@ SELECT source, n1 AS n_tokens,
 FROM uni JOIN big USING (source) JOIN tri USING (source)
 ORDER BY source
 """
-
-
-R11B_QUERIES["t_distinct_n"] = t_distinct_n
-_R11B_ORACLES["t_distinct_n"] = _t_distinct_n_sql
 
 
 # --------------------------------- embedding geometry (shared core)
@@ -2373,10 +2294,6 @@ FROM t
 """
 
 
-R11B_QUERIES["e_participation_ratio"] = e_participation_ratio
-_R11B_ORACLES["e_participation_ratio"] = _e_participation_ratio_sql
-
-
 # ------------------------------------------------------- e_cka
 
 _CKA_SPLIT = _EMB_D // 2
@@ -2438,10 +2355,6 @@ SELECT n AS n_vectors, CAST({s} AS BIGINT) AS dim_split,
   END AS cka_linear
 FROM t
 """
-
-
-R11B_QUERIES["e_cka"] = e_cka
-_R11B_ORACLES["e_cka"] = _e_cka_sql
 
 
 # ------------------------------------- g_bipartite_projection
@@ -2506,10 +2419,6 @@ FROM w
 ORDER BY n_orders DESC, p1 ASC, p2 ASC
 LIMIT 20
 """
-
-
-R11B_QUERIES["g_bipartite_projection"] = g_bipartite_projection
-_R11B_ORACLES["g_bipartite_projection"] = _g_bipartite_projection_sql
 
 
 # --------------------------------------------- dq_fd_discovery
@@ -2601,5 +2510,27 @@ ORDER BY tbl, det, dep
 """
 
 
-R11B_QUERIES["dq_fd_discovery"] = dq_fd_discovery
-_R11B_ORACLES["dq_fd_discovery"] = _dq_fd_discovery_sql
+REGISTRY = (
+    (ti_ultimate_oscillator, _ti_ultimate_oscillator_sql()),
+    (ti_awesome_oscillator, _ti_awesome_oscillator_sql()),
+    (ti_kst, _ti_kst_sql()),
+    (ti_pivot_points, _ti_pivot_points_sql()),
+    (ti_choppiness, _ti_choppiness_sql()),
+    (ti_bop, _ti_bop_sql()),
+    (a_bartlett, _a_bartlett_sql()),
+    (a_jonckheere_terpstra, _a_jonckheere_terpstra_sql()),
+    (a_cochran_armitage, _a_cochran_armitage_sql()),
+    (a_odds_ratio, _a_odds_ratio_sql()),
+    (a_chow_test, _a_chow_test_sql()),
+    (a_breusch_pagan, _a_breusch_pagan_sql()),
+    (a_dagostino_k2, _a_dagostino_k2_sql()),
+    (a_cramer_von_mises, _a_cramer_von_mises_sql()),
+    (w_permutation_entropy, _w_permutation_entropy_sql()),
+    (w_sample_entropy, _w_sample_entropy_sql()),
+    (t_hapax_richness, _t_hapax_richness_sql()),
+    (t_distinct_n, _t_distinct_n_sql()),
+    (e_participation_ratio, _e_participation_ratio_sql()),
+    (e_cka, _e_cka_sql()),
+    (g_bipartite_projection, _g_bipartite_projection_sql()),
+    (dq_fd_discovery, _dq_fd_discovery_sql()),
+)

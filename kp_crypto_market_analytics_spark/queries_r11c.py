@@ -39,13 +39,6 @@ from kp_crypto_market_analytics_spark.session import (
     load_tables,
 )
 
-R11C_QUERIES: dict = {}
-_R11C_ORACLES: dict = {}
-
-
-def r11c_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R11C_ORACLES.items()}
-
 
 # ----------------------------------------------------------- ti_hma
 
@@ -148,10 +141,6 @@ ORDER BY event_type, day
 """
 
 
-R11C_QUERIES["ti_hma"] = ti_hma
-_R11C_ORACLES["ti_hma"] = _ti_hma_sql
-
-
 # ---------------------------------------------------------- ti_vwma
 
 _VWMA_N = 10
@@ -219,10 +208,6 @@ SELECT event_type, day,
 FROM s
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_vwma"] = ti_vwma
-_R11C_ORACLES["ti_vwma"] = _ti_vwma_sql
 
 
 # ----------------------------------------------------- ti_stoch_rsi
@@ -310,10 +295,6 @@ ORDER BY event_type, day
 """
 
 
-R11C_QUERIES["ti_stoch_rsi"] = ti_stoch_rsi
-_R11C_ORACLES["ti_stoch_rsi"] = _ti_stoch_rsi_sql
-
-
 # --------------------------------------------------- ti_elder_ray
 
 _ER_ALPHA = 2.0 / 14.0
@@ -383,10 +364,6 @@ SELECT event_type, day, ema13,
 FROM e
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_elder_ray"] = ti_elder_ray
-_R11C_ORACLES["ti_elder_ray"] = _ti_elder_ray_sql
 
 
 # ------------------------------------------------- ti_omega_ratio
@@ -459,10 +436,6 @@ SELECT event_type, CAST(n AS BIGINT) AS n_days,
        THEN round(CAST(gain_u AS DOUBLE) / loss_u, 6) + 0.0 END AS omega
 FROM agg ORDER BY event_type
 """
-
-
-R11C_QUERIES["ti_omega_ratio"] = ti_omega_ratio
-_R11C_ORACLES["ti_omega_ratio"] = _ti_omega_ratio_sql
 
 
 # ---------------------------------------------------- ti_treynor
@@ -583,10 +556,6 @@ FROM m ORDER BY event_type
 """
 
 
-R11C_QUERIES["ti_treynor"] = ti_treynor
-_R11C_ORACLES["ti_treynor"] = _ti_treynor_sql
-
-
 # ------------------------------------------------ ti_dd_duration
 
 def ti_dd_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,10 +623,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
   MAX(dd) + 0.0 AS max_drawdown
 FROM q GROUP BY event_type ORDER BY event_type
 """
-
-
-R11C_QUERIES["ti_dd_duration"] = ti_dd_duration
-_R11C_ORACLES["ti_dd_duration"] = _ti_dd_duration_sql
 
 
 # ------------------------------------------------ a_wasserstein_1d
@@ -775,10 +740,6 @@ FROM tot
 """
 
 
-R11C_QUERIES["a_wasserstein_1d"] = a_wasserstein_1d
-_R11C_ORACLES["a_wasserstein_1d"] = _a_wasserstein_1d_sql
-
-
 # ---------------------------------------------------------- a_kuiper
 
 def a_kuiper(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,10 +850,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_kuiper"] = a_kuiper
-_R11C_ORACLES["a_kuiper"] = _a_kuiper_sql
-
-
 # -------------------------------------------------- a_energy_distance
 
 def a_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,10 +939,6 @@ SELECT CAST(n AS BIGINT) AS n_a, CAST(m AS BIGINT) AS n_b,
   END AS energy_distance
 FROM s
 """
-
-
-R11C_QUERIES["a_energy_distance"] = a_energy_distance
-_R11C_ORACLES["a_energy_distance"] = _a_energy_distance_sql
 
 
 # ------------------------------------------------- a_ansari_bradley
@@ -1102,10 +1055,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_ansari_bradley"] = a_ansari_bradley
-_R11C_ORACLES["a_ansari_bradley"] = _a_ansari_bradley_sql
-
-
 # ----------------------------------------------------------- a_pr_auc
 
 def a_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1188,10 +1137,6 @@ SELECT CAST(n AS BIGINT) AS n_docs, CAST(np AS BIGINT) AS n_pos,
   END AS avg_precision
 FROM g
 """
-
-
-R11C_QUERIES["a_pr_auc"] = a_pr_auc
-_R11C_ORACLES["a_pr_auc"] = _a_pr_auc_sql
 
 
 # ----------------------------------------------------- a_matthews_corr
@@ -1306,10 +1251,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_matthews_corr"] = a_matthews_corr
-_R11C_ORACLES["a_matthews_corr"] = _a_matthews_corr_sql
-
-
 # ----------------------------------------------------------- a_log_loss
 
 _LL_EPS_U = 1_000  # clip floor, micro units (p in [0.001, 0.999])
@@ -1368,10 +1309,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
     AS log_loss
 FROM t
 """
-
-
-R11C_QUERIES["a_log_loss"] = a_log_loss
-_R11C_ORACLES["a_log_loss"] = _a_log_loss_sql
 
 
 # ----------------------------------------------------------- a_fdr_bh
@@ -1537,10 +1474,6 @@ FROM k ORDER BY hr
 """
 
 
-R11C_QUERIES["a_fdr_bh"] = a_fdr_bh
-_R11C_ORACLES["a_fdr_bh"] = _a_fdr_bh_sql
-
-
 # ----------------------------------------------------- a_cronbach_alpha
 
 _CA_BANDS = 4  # four six-hour day-part "items"
@@ -1662,10 +1595,6 @@ FROM inum, tnum
 """
 
 
-R11C_QUERIES["a_cronbach_alpha"] = a_cronbach_alpha
-_R11C_ORACLES["a_cronbach_alpha"] = _a_cronbach_alpha_sql
-
-
 # -------------------------------------------------------------- a_icc
 
 def a_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1763,10 +1692,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_icc"] = a_icc
-_R11C_ORACLES["a_icc"] = _a_icc_sql
-
-
 # -------------------------------------------------------- a_hill_tail
 
 _HILL_K = 50
@@ -1861,10 +1786,6 @@ SELECT event_type, CAST(nk AS BIGINT) AS n_top,
   END AS tail_alpha
 FROM g ORDER BY event_type
 """
-
-
-R11C_QUERIES["a_hill_tail"] = a_hill_tail
-_R11C_ORACLES["a_hill_tail"] = _a_hill_tail_sql
 
 
 # -------------------------------------------------------- t_heaps_law
@@ -2001,10 +1922,6 @@ FROM g
 """
 
 
-R11C_QUERIES["t_heaps_law"] = t_heaps_law
-_R11C_ORACLES["t_heaps_law"] = _t_heaps_law_sql
-
-
 # -------------------------------------------------- t_collocation_pmi
 
 _PMI_MIN_COUNT = 5
@@ -2100,10 +2017,6 @@ LIMIT {_PMI_TOPK}
 """
 
 
-R11C_QUERIES["t_collocation_pmi"] = t_collocation_pmi
-_R11C_ORACLES["t_collocation_pmi"] = _t_collocation_pmi_sql
-
-
 # ------------------------------------------------ t_simpson_diversity
 
 def t_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2162,10 +2075,6 @@ SELECT CAST(vocab AS BIGINT) AS vocab, CAST(tt AS BIGINT) AS n_tokens,
   END AS diversity
 FROM g
 """
-
-
-R11C_QUERIES["t_simpson_diversity"] = t_simpson_diversity
-_R11C_ORACLES["t_simpson_diversity"] = _t_simpson_diversity_sql
 
 
 # ---------------------------------------------------- t_burstiness
@@ -2238,10 +2147,6 @@ FROM stats, nd
 ORDER BY coll_freq DESC, tok
 LIMIT {_BURST_TOPK}
 """
-
-
-R11C_QUERIES["t_burstiness"] = t_burstiness
-_R11C_ORACLES["t_burstiness"] = _t_burstiness_sql
 
 
 # ------------------------------------------------------- t_map_eval
@@ -2363,10 +2268,6 @@ FROM g ORDER BY term
 """
 
 
-R11C_QUERIES["t_map_eval"] = t_map_eval
-_R11C_ORACLES["t_map_eval"] = _t_map_eval_sql
-
-
 # ---------------------------------------------------------- a_gk_gamma
 
 _GKG_BANDS = 4
@@ -2478,10 +2379,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_gk_gamma"] = a_gk_gamma
-_R11C_ORACLES["a_gk_gamma"] = _a_gk_gamma_sql
-
-
 # ------------------------------------------------------------- g_katz
 
 _KATZ_ALPHA = 0.05
@@ -2568,10 +2465,6 @@ ORDER BY katz DESC, part
 LIMIT 20
 """)
     return "".join(parts)
-
-
-R11C_QUERIES["g_katz"] = g_katz
-_R11C_ORACLES["g_katz"] = _g_katz_sql
 
 
 # --------------------------------------------------------- g_harmonic
@@ -2693,10 +2586,6 @@ LIMIT 20
     return "".join(parts)
 
 
-R11C_QUERIES["g_harmonic"] = g_harmonic
-_R11C_ORACLES["g_harmonic"] = _g_harmonic_sql
-
-
 # --------------------------------------------------------------- g_wcc
 
 def g_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2760,10 +2649,6 @@ WITH {PAIRS_SQL}, sym AS (
 SELECT size, CAST(COUNT(*) AS BIGINT) AS n_components
 FROM sizes GROUP BY size ORDER BY size
 """
-
-
-R11C_QUERIES["g_wcc"] = g_wcc
-_R11C_ORACLES["g_wcc"] = _g_wcc_sql
 
 
 # --------------------------------------------------------------- e_lid
@@ -2875,10 +2760,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
   round(CAST(MAX(lu) AS DOUBLE) / 1e6, 6) AS max_lid
 FROM lids
 """
-
-
-R11C_QUERIES["e_lid"] = e_lid
-_R11C_ORACLES["e_lid"] = _e_lid_sql
 
 
 # --------------------------------------------------------------- e_rsa
@@ -2999,10 +2880,6 @@ FROM g
 """
 
 
-R11C_QUERIES["e_rsa"] = e_rsa
-_R11C_ORACLES["e_rsa"] = _e_rsa_sql
-
-
 # ------------------------------------------- dq_order_reconciliation
 
 def dq_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3086,10 +2963,6 @@ FROM j
 """
 
 
-R11C_QUERIES["dq_order_reconciliation"] = dq_order_reconciliation
-_R11C_ORACLES["dq_order_reconciliation"] = _dq_order_reconciliation_sql
-
-
 # ---------------------------------------------------- dq_date_sanity
 
 def dq_date_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3162,10 +3035,6 @@ FROM g
 """
 
 
-R11C_QUERIES["dq_date_sanity"] = dq_date_sanity
-_R11C_ORACLES["dq_date_sanity"] = _dq_date_sanity_sql
-
-
 # ------------------------------------------------- w_savitzky_golay
 
 _SG_DEN = 35_000_000.0  # 35 · 1e6 micro scale
@@ -3225,10 +3094,6 @@ FROM bars
 WINDOW d AS ({_WD_SQL})
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["w_savitzky_golay"] = w_savitzky_golay
-_R11C_ORACLES["w_savitzky_golay"] = _w_savitzky_golay_sql
 
 
 # --------------------------------------------------- w_zscore_peaks
@@ -3340,10 +3205,6 @@ ORDER BY event_type, day
 """
 
 
-R11C_QUERIES["w_zscore_peaks"] = w_zscore_peaks
-_R11C_ORACLES["w_zscore_peaks"] = _w_zscore_peaks_sql
-
-
 # --------------------------------------------------- ti_dema_tema
 
 _DT_ALPHA = 0.25
@@ -3431,10 +3292,6 @@ SELECT event_type, day,
 FROM b3
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_dema_tema"] = ti_dema_tema
-_R11C_ORACLES["ti_dema_tema"] = _ti_dema_tema_sql
 
 
 # ----------------------------------------------------------- ti_tsi
@@ -3528,10 +3385,6 @@ SELECT event_type, day,
 FROM b2
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_tsi"] = ti_tsi
-_R11C_ORACLES["ti_tsi"] = _ti_tsi_sql
 
 
 # ------------------------------------------------ a_jackknife_gini
@@ -3666,10 +3519,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_jackknife_gini"] = a_jackknife_gini
-_R11C_ORACLES["a_jackknife_gini"] = _a_jackknife_gini_sql
-
-
 # -------------------------------------------- e_triplet_violations
 
 _TRIP_ANCHORS = 50
@@ -3799,10 +3648,6 @@ FROM g
 """
 
 
-R11C_QUERIES["e_triplet_violations"] = e_triplet_violations
-_R11C_ORACLES["e_triplet_violations"] = _e_triplet_violations_sql
-
-
 # ------------------------------------------------- g_eigenvector
 
 _EIG_ITERS = 3
@@ -3899,10 +3744,6 @@ LIMIT 20
     return "".join(parts)
 
 
-R11C_QUERIES["g_eigenvector"] = g_eigenvector
-_R11C_ORACLES["g_eigenvector"] = _g_eigenvector_sql
-
-
 # ---------------------------------------------------- a_cohen_h
 
 def a_cohen_h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3989,10 +3830,6 @@ SELECT CAST(n1 AS BIGINT) AS n_weekend, CAST(n2 AS BIGINT) AS n_weekday,
   END AS cohens_h
 FROM x
 """
-
-
-R11C_QUERIES["a_cohen_h"] = a_cohen_h
-_R11C_ORACLES["a_cohen_h"] = _a_cohen_h_sql
 
 
 # ---------------------------------------------------- a_qq_deciles
@@ -4086,10 +3923,6 @@ SELECT CAST(d AS INT) AS d,
 FROM a FULL JOIN b USING (d)
 ORDER BY d
 """
-
-
-R11C_QUERIES["a_qq_deciles"] = a_qq_deciles
-_R11C_ORACLES["a_qq_deciles"] = _a_qq_deciles_sql
 
 
 # -------------------------------------------------------------- ti_rvi
@@ -4191,10 +4024,6 @@ FROM b
 WINDOW d AS ({_WD_SQL})
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_rvi"] = ti_rvi
-_R11C_ORACLES["ti_rvi"] = _ti_rvi_sql
 
 
 # ---------------------------------------------- a_wald_wolfowitz
@@ -4302,10 +4131,6 @@ FROM agg
 """
 
 
-R11C_QUERIES["a_wald_wolfowitz"] = a_wald_wolfowitz
-_R11C_ORACLES["a_wald_wolfowitz"] = _a_wald_wolfowitz_sql
-
-
 # ---------------------------------------------------- ti_ma_cross
 
 _MAC_FAST = 5
@@ -4390,10 +4215,6 @@ FROM s
 WHERE dd IS NOT NULL
 ORDER BY event_type, day
 """
-
-
-R11C_QUERIES["ti_ma_cross"] = ti_ma_cross
-_R11C_ORACLES["ti_ma_cross"] = _ti_ma_cross_sql
 
 
 # ------------------------------------------- a_capture_recapture
@@ -4487,10 +4308,6 @@ FROM g
 """
 
 
-R11C_QUERIES["a_capture_recapture"] = a_capture_recapture
-_R11C_ORACLES["a_capture_recapture"] = _a_capture_recapture_sql
-
-
 # ---------------------------------------------- a_two_proportion_z
 
 def a_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4578,10 +4395,6 @@ SELECT CAST(n1 AS BIGINT) AS n_weekend, CAST(k1 AS BIGINT) AS k_weekend,
   END AS z
 FROM x
 """
-
-
-R11C_QUERIES["a_two_proportion_z"] = a_two_proportion_z
-_R11C_ORACLES["a_two_proportion_z"] = _a_two_proportion_z_sql
 
 
 # --------------------------------------------------- ti_chaikin_osc
@@ -4684,5 +4497,51 @@ ORDER BY event_type, day
 """
 
 
-R11C_QUERIES["ti_chaikin_osc"] = ti_chaikin_osc
-_R11C_ORACLES["ti_chaikin_osc"] = _ti_chaikin_osc_sql
+REGISTRY = (
+    (ti_hma, _ti_hma_sql()),
+    (ti_vwma, _ti_vwma_sql()),
+    (ti_stoch_rsi, _ti_stoch_rsi_sql()),
+    (ti_elder_ray, _ti_elder_ray_sql()),
+    (ti_omega_ratio, _ti_omega_ratio_sql()),
+    (ti_treynor, _ti_treynor_sql()),
+    (ti_dd_duration, _ti_dd_duration_sql()),
+    (a_wasserstein_1d, _a_wasserstein_1d_sql()),
+    (a_kuiper, _a_kuiper_sql()),
+    (a_energy_distance, _a_energy_distance_sql()),
+    (a_ansari_bradley, _a_ansari_bradley_sql()),
+    (a_pr_auc, _a_pr_auc_sql()),
+    (a_matthews_corr, _a_matthews_corr_sql()),
+    (a_log_loss, _a_log_loss_sql()),
+    (a_fdr_bh, _a_fdr_bh_sql()),
+    (a_cronbach_alpha, _a_cronbach_alpha_sql()),
+    (a_icc, _a_icc_sql()),
+    (a_hill_tail, _a_hill_tail_sql()),
+    (t_heaps_law, _t_heaps_law_sql()),
+    (t_collocation_pmi, _t_collocation_pmi_sql()),
+    (t_simpson_diversity, _t_simpson_diversity_sql()),
+    (t_burstiness, _t_burstiness_sql()),
+    (t_map_eval, _t_map_eval_sql()),
+    (a_gk_gamma, _a_gk_gamma_sql()),
+    (g_katz, _g_katz_sql()),
+    (g_harmonic, _g_harmonic_sql()),
+    (g_wcc, _g_wcc_sql()),
+    (e_lid, _e_lid_sql()),
+    (e_rsa, _e_rsa_sql()),
+    (dq_order_reconciliation, _dq_order_reconciliation_sql()),
+    (dq_date_sanity, _dq_date_sanity_sql()),
+    (w_savitzky_golay, _w_savitzky_golay_sql()),
+    (w_zscore_peaks, _w_zscore_peaks_sql()),
+    (ti_dema_tema, _ti_dema_tema_sql()),
+    (ti_tsi, _ti_tsi_sql()),
+    (a_jackknife_gini, _a_jackknife_gini_sql()),
+    (e_triplet_violations, _e_triplet_violations_sql()),
+    (g_eigenvector, _g_eigenvector_sql()),
+    (a_cohen_h, _a_cohen_h_sql()),
+    (a_qq_deciles, _a_qq_deciles_sql()),
+    (ti_rvi, _ti_rvi_sql()),
+    (a_wald_wolfowitz, _a_wald_wolfowitz_sql()),
+    (ti_ma_cross, _ti_ma_cross_sql()),
+    (a_capture_recapture, _a_capture_recapture_sql()),
+    (a_two_proportion_z, _a_two_proportion_z_sql()),
+    (ti_chaikin_osc, _ti_chaikin_osc_sql()),
+)

@@ -479,28 +479,6 @@ def _dq_column_profile_sql() -> str:
     return " UNION ALL ".join(parts) + " ORDER BY column_name"
 
 
-R7_QUERIES = {
-    "t_train_split": t_train_split,
-    "t_split_leakage": t_split_leakage,
-    "t_mix_weights": t_mix_weights,
-    "t_tokenizer_fertility": t_tokenizer_fertility,
-    "dq_column_profile": dq_column_profile,
-}
-
-
-def r7_oracles() -> dict[str, str]:
-    out = {
-        "t_train_split": _t_train_split_sql(),
-        "t_split_leakage": _t_split_leakage_sql(),
-        "t_mix_weights": T_MIX_WEIGHTS_SQL,
-        "t_tokenizer_fertility": T_TOKENIZER_FERTILITY_SQL,
-        "dq_column_profile": _dq_column_profile_sql(),
-    }
-    for name, fn in _R7_ORACLES_B2.items():
-        out[name] = fn()
-    return out
-
-
 # ------------------------------------------------------ w_ewma_truncated
 
 _EWMA_LAGS = 8  # alpha = 0.5 -> weights 2^(7-j)/255, exact rationals
@@ -818,20 +796,6 @@ FROM swept GROUP BY 1, 2 ORDER BY y, m
 """
 
 
-R7_QUERIES.update(
-    {
-        "w_ewma_truncated": w_ewma_truncated,
-        "t_ngram_novelty": t_ngram_novelty,
-        "a_open_orders_sweep": a_open_orders_sweep,
-    }
-)
-_R7_ORACLES_B2 = {
-    "w_ewma_truncated": _w_ewma_sql,
-    "t_ngram_novelty": lambda: T_NGRAM_NOVELTY_SQL,
-    "a_open_orders_sweep": lambda: A_OPEN_ORDERS_SWEEP_SQL,
-}
-
-
 # --------------------------------------------------------------- g_hits
 
 _HITS_TOP_HUBS = 10
@@ -991,9 +955,6 @@ h2 AS (
 )
 SELECT * FROM auth UNION ALL SELECT * FROM hub ORDER BY side, rank
 """
-
-R7_QUERIES["g_hits"] = g_hits
-_R7_ORACLES_B2["g_hits"] = lambda: G_HITS_SQL
 
 
 # --------------------------------------------------------- a_bootstrap_ci
@@ -1491,24 +1452,6 @@ SELECT CAST(n_cuts AS BIGINT) AS n_cuts, n_videos, n_with_cut,
   END AS mean_first_cut
 FROM census ORDER BY n_cuts
 """
-
-
-R7_QUERIES.update(
-    {
-        "a_bootstrap_ci": a_bootstrap_ci,
-        "t_epoch_shuffle": t_epoch_shuffle,
-        "w_rolling_median": w_rolling_median,
-        "mm_scene_cut": mm_scene_cut,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "a_bootstrap_ci": _a_bootstrap_ci_sql,
-        "t_epoch_shuffle": _t_epoch_shuffle_sql,
-        "w_rolling_median": lambda: W_ROLLING_MEDIAN_SQL,
-        "mm_scene_cut": _mm_scene_cut_sql,
-    }
-)
 
 
 # ---------------------------------------------------------- a_chi_square
@@ -2028,26 +1971,6 @@ GROUP BY 1 ORDER BY event_type
 """
 
 
-R7_QUERIES.update(
-    {
-        "a_chi_square": a_chi_square,
-        "a_welch_ttest": a_welch_ttest,
-        "ti_sharpe": ti_sharpe,
-        "ti_amihud": ti_amihud,
-        "dq_outlier_iqr": dq_outlier_iqr,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "a_chi_square": lambda: A_CHI_SQUARE_SQL,
-        "a_welch_ttest": _a_welch_ttest_sql,
-        "ti_sharpe": lambda: TI_SHARPE_SQL,
-        "ti_amihud": lambda: TI_AMIHUD_SQL,
-        "dq_outlier_iqr": lambda: DQ_OUTLIER_IQR_SQL,
-    }
-)
-
-
 # ------------------------------------------------------------- a_anova_f
 #
 # Round-7 batch 5: one-way ANOVA, Theil–Sen robust trend, a
@@ -2547,24 +2470,6 @@ FROM f GROUP BY 1 ORDER BY source
 """
 
 
-R7_QUERIES.update(
-    {
-        "a_anova_f": a_anova_f,
-        "w_theil_sen": w_theil_sen,
-        "t_quality_logreg": t_quality_logreg,
-        "t_rouge_eval": t_rouge_eval,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "a_anova_f": lambda: A_ANOVA_F_SQL,
-        "w_theil_sen": lambda: W_THEIL_SEN_SQL,
-        "t_quality_logreg": _t_quality_logreg_sql,
-        "t_rouge_eval": lambda: T_ROUGE_EVAL_SQL,
-    }
-)
-
-
 # ------------------------------------------------------------ a_survival_km
 #
 # Round-7 batch 6: survival analysis (Kaplan-Meier retention) and a
@@ -2873,20 +2778,6 @@ SELECT CAST(decile AS BIGINT) AS decile,
   round({gain}, 6) + 0.0 AS info_gain
 FROM g ORDER BY decile
 """
-
-
-R7_QUERIES.update(
-    {
-        "a_survival_km": a_survival_km,
-        "a_info_gain_split": a_info_gain_split,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "a_survival_km": _a_survival_km_sql,
-        "a_info_gain_split": _a_info_gain_split_sql,
-    }
-)
 
 
 # ------------------------------------------------------------ w_runs_test
@@ -3242,22 +3133,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
     AS pass_ppm
 FROM flags GROUP BY 1 ORDER BY source
 """
-
-
-R7_QUERIES.update(
-    {
-        "w_runs_test": w_runs_test,
-        "a_mann_kendall": a_mann_kendall,
-        "t_gopher_rules": t_gopher_rules,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "w_runs_test": lambda: W_RUNS_TEST_SQL,
-        "a_mann_kendall": lambda: A_MANN_KENDALL_SQL,
-        "t_gopher_rules": _t_gopher_rules_sql,
-    }
-)
 
 
 # --------------------------------------------------------- a_kruskal_wallis
@@ -3755,24 +3630,6 @@ SELECT source, CAST(MAX(src_toks) AS BIGINT) AS n_tokens,
   round(SUM(tu) / 1000000000000.0, 6) + 0.0 AS jsd_bits
 FROM terms GROUP BY 1 ORDER BY source
 """
-
-
-R7_QUERIES.update(
-    {
-        "a_kruskal_wallis": a_kruskal_wallis,
-        "a_spearman_corr": a_spearman_corr,
-        "ti_ljung_box": ti_ljung_box,
-        "t_js_divergence": t_js_divergence,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "a_kruskal_wallis": lambda: A_KRUSKAL_WALLIS_SQL,
-        "a_spearman_corr": lambda: A_SPEARMAN_CORR_SQL,
-        "ti_ljung_box": _ti_ljung_box_sql,
-        "t_js_divergence": lambda: T_JS_DIVERGENCE_SQL,
-    }
-)
 
 
 # ------------------------------------------------------------ e_silhouette
@@ -4319,24 +4176,6 @@ SELECT np.brand, CAST(n_parts AS BIGINT) AS n_parts,
 FROM np LEFT JOIN cen ON cen.brand = np.brand
 ORDER BY np.brand
 """
-
-
-R7_QUERIES.update(
-    {
-        "e_silhouette": e_silhouette,
-        "a_ab_lift": a_ab_lift,
-        "a_did_estimator": a_did_estimator,
-        "er_name_match": er_name_match,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "e_silhouette": lambda: E_SILHOUETTE_SQL,
-        "a_ab_lift": _a_ab_lift_sql,
-        "a_did_estimator": _a_did_estimator_sql,
-        "er_name_match": lambda: ER_NAME_MATCH_SQL,
-    }
-)
 
 
 # ---------------------------------------------------------- g_adamic_adar
@@ -4889,19 +4728,44 @@ FROM g
 """
 
 
-R7_QUERIES.update(
-    {
-        "g_adamic_adar": g_adamic_adar,
-        "w_pettitt_change": w_pettitt_change,
-        "a_mann_whitney": a_mann_whitney,
-        "a_cohens_kappa": a_cohens_kappa,
-    }
-)
-_R7_ORACLES_B2.update(
-    {
-        "g_adamic_adar": lambda: G_ADAMIC_ADAR_SQL,
-        "w_pettitt_change": lambda: W_PETTITT_CHANGE_SQL,
-        "a_mann_whitney": lambda: A_MANN_WHITNEY_SQL,
-        "a_cohens_kappa": _a_cohens_kappa_sql,
-    }
+REGISTRY = (
+    (t_train_split, _t_train_split_sql()),
+    (t_split_leakage, _t_split_leakage_sql()),
+    (t_mix_weights, T_MIX_WEIGHTS_SQL),
+    (t_tokenizer_fertility, T_TOKENIZER_FERTILITY_SQL),
+    (dq_column_profile, _dq_column_profile_sql()),
+    (w_ewma_truncated, _w_ewma_sql()),
+    (t_ngram_novelty, T_NGRAM_NOVELTY_SQL),
+    (a_open_orders_sweep, A_OPEN_ORDERS_SWEEP_SQL),
+    (g_hits, G_HITS_SQL),
+    (a_bootstrap_ci, _a_bootstrap_ci_sql()),
+    (t_epoch_shuffle, _t_epoch_shuffle_sql()),
+    (w_rolling_median, W_ROLLING_MEDIAN_SQL),
+    (mm_scene_cut, _mm_scene_cut_sql()),
+    (a_chi_square, A_CHI_SQUARE_SQL),
+    (a_welch_ttest, _a_welch_ttest_sql()),
+    (ti_sharpe, TI_SHARPE_SQL),
+    (ti_amihud, TI_AMIHUD_SQL),
+    (dq_outlier_iqr, DQ_OUTLIER_IQR_SQL),
+    (a_anova_f, A_ANOVA_F_SQL),
+    (w_theil_sen, W_THEIL_SEN_SQL),
+    (t_quality_logreg, _t_quality_logreg_sql()),
+    (t_rouge_eval, T_ROUGE_EVAL_SQL),
+    (a_survival_km, _a_survival_km_sql()),
+    (a_info_gain_split, _a_info_gain_split_sql()),
+    (w_runs_test, W_RUNS_TEST_SQL),
+    (a_mann_kendall, A_MANN_KENDALL_SQL),
+    (t_gopher_rules, _t_gopher_rules_sql()),
+    (a_kruskal_wallis, A_KRUSKAL_WALLIS_SQL),
+    (a_spearman_corr, A_SPEARMAN_CORR_SQL),
+    (ti_ljung_box, _ti_ljung_box_sql()),
+    (t_js_divergence, T_JS_DIVERGENCE_SQL),
+    (e_silhouette, E_SILHOUETTE_SQL),
+    (a_ab_lift, _a_ab_lift_sql()),
+    (a_did_estimator, _a_did_estimator_sql()),
+    (er_name_match, ER_NAME_MATCH_SQL),
+    (g_adamic_adar, G_ADAMIC_ADAR_SQL),
+    (w_pettitt_change, W_PETTITT_CHANGE_SQL),
+    (a_mann_whitney, A_MANN_WHITNEY_SQL),
+    (a_cohens_kappa, _a_cohens_kappa_sql()),
 )

@@ -29,13 +29,6 @@ from kp_crypto_market_analytics_spark.session import (
 H60 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 NORM_TEXT_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
-R8_QUERIES: dict = {}
-_R8_ORACLES: dict = {}
-
-
-def r8_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R8_ORACLES.items()}
-
 
 # ------------------------------------------------------ t_corpus_pipeline
 
@@ -603,10 +596,6 @@ ORDER BY source
 """
 
 
-R8_QUERIES["t_corpus_pipeline"] = t_corpus_pipeline
-_R8_ORACLES["t_corpus_pipeline"] = _t_corpus_pipeline_sql
-
-
 # -------------------------------------------------- a_welch_stream_parity
 
 _WELCH_BATCHES = 4
@@ -758,10 +747,6 @@ SELECT CAST(batch_idx AS BIGINT) AS batch_idx, event_type, na AS n_a,
   CASE WHEN {ok} THEN round({dof}, 6) + 0.0 END AS welch_dof
 FROM cum ORDER BY batch_idx, event_type
 """
-
-
-R8_QUERIES["a_welch_stream_parity"] = a_welch_stream_parity
-_R8_ORACLES["a_welch_stream_parity"] = _a_welch_stream_parity_sql
 
 
 # ----------------------------------------------------------- indicators
@@ -1084,24 +1069,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
       / ({_PK_4LN2} * COUNT(*) * 1e12)), 6) AS parkinson_vol
 FROM daily GROUP BY event_type ORDER BY event_type
 """
-
-
-R8_QUERIES.update(
-    {
-        "ti_donchian": ti_donchian,
-        "ti_ulcer_index": ti_ulcer_index,
-        "ti_beta": ti_beta,
-        "ti_parkinson": ti_parkinson,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "ti_donchian": lambda: TI_DONCHIAN_SQL,
-        "ti_ulcer_index": lambda: TI_ULCER_SQL,
-        "ti_beta": lambda: TI_BETA_SQL,
-        "ti_parkinson": lambda: TI_PARKINSON_SQL,
-    }
-)
 
 
 # ----------------------------------------------------------- statistics
@@ -1513,24 +1480,6 @@ WINDOW w AS ({_TICK_W_SQL}
 """
 
 
-R8_QUERIES.update(
-    {
-        "a_levene_bf": a_levene_bf,
-        "a_tukey_hsd": a_tukey_hsd,
-        "a_hodges_lehmann": a_hodges_lehmann,
-        "w_page_hinkley": w_page_hinkley,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "a_levene_bf": _a_levene_bf_sql,
-        "a_tukey_hsd": _a_tukey_hsd_sql,
-        "a_hodges_lehmann": _a_hodges_lehmann_sql,
-        "w_page_hinkley": _w_page_hinkley_sql,
-    }
-)
-
-
 # ------------------------------------------------- dq / graph batch C
 
 
@@ -1828,22 +1777,6 @@ WHERE deg >= 2
 ORDER BY coeff DESC, triangles DESC, node ASC
 LIMIT 30
 """
-
-
-R8_QUERIES.update(
-    {
-        "dq_sequence_gaps": dq_sequence_gaps,
-        "g_preferential_attachment": g_preferential_attachment,
-        "g_clustering_coeff": g_clustering_coeff,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "dq_sequence_gaps": lambda: DQ_SEQUENCE_GAPS_SQL,
-        "g_preferential_attachment": lambda: G_PREF_ATTACH_SQL,
-        "g_clustering_coeff": lambda: G_CLUSTERING_COEFF_SQL,
-    }
-)
 
 
 # ----------------------------------------------- t_dsir_weights (batch D)
@@ -2161,20 +2094,6 @@ GROUP BY bin, n, s, q ORDER BY bin
 """
 
 
-R8_QUERIES.update(
-    {
-        "t_dsir_weights": t_dsir_weights,
-        "e_isotropy": e_isotropy,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "t_dsir_weights": _t_dsir_weights_sql,
-        "e_isotropy": _e_isotropy_sql,
-    }
-)
-
-
 # ------------------------------------------------------------ batch E
 
 
@@ -2468,22 +2387,6 @@ SELECT top_k, n_types, occ AS occurrences, t_occ AS total_occurrences,
 FROM ({body}) CROSS JOIN tot
 ORDER BY top_k
 """
-
-
-R8_QUERIES.update(
-    {
-        "a_jarque_bera": a_jarque_bera,
-        "dq_pk_uniqueness": dq_pk_uniqueness,
-        "t_vocab_coverage": t_vocab_coverage,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "a_jarque_bera": lambda: A_JARQUE_BERA_SQL,
-        "dq_pk_uniqueness": _dq_pk_uniqueness_sql,
-        "t_vocab_coverage": _t_vocab_coverage_sql,
-    }
-)
 
 
 # ------------------------------------------------------------ batch F
@@ -2884,19 +2787,27 @@ FROM per_b ORDER BY size_digits
 """
 
 
-R8_QUERIES.update(
-    {
-        "ti_sortino": ti_sortino,
-        "ti_calmar": ti_calmar,
-        "t_msttr": t_msttr,
-        "mm_dedup_bytes": mm_dedup_bytes,
-    }
-)
-_R8_ORACLES.update(
-    {
-        "ti_sortino": lambda: TI_SORTINO_SQL,
-        "ti_calmar": lambda: TI_CALMAR_SQL,
-        "t_msttr": lambda: T_MSTTR_SQL,
-        "mm_dedup_bytes": _mm_dedup_bytes_sql,
-    }
+REGISTRY = (
+    (t_corpus_pipeline, _t_corpus_pipeline_sql()),
+    (a_welch_stream_parity, _a_welch_stream_parity_sql()),
+    (ti_donchian, TI_DONCHIAN_SQL),
+    (ti_ulcer_index, TI_ULCER_SQL),
+    (ti_beta, TI_BETA_SQL),
+    (ti_parkinson, TI_PARKINSON_SQL),
+    (a_levene_bf, _a_levene_bf_sql()),
+    (a_tukey_hsd, _a_tukey_hsd_sql()),
+    (a_hodges_lehmann, _a_hodges_lehmann_sql()),
+    (w_page_hinkley, _w_page_hinkley_sql()),
+    (dq_sequence_gaps, DQ_SEQUENCE_GAPS_SQL),
+    (g_preferential_attachment, G_PREF_ATTACH_SQL),
+    (g_clustering_coeff, G_CLUSTERING_COEFF_SQL),
+    (t_dsir_weights, _t_dsir_weights_sql()),
+    (e_isotropy, _e_isotropy_sql()),
+    (a_jarque_bera, A_JARQUE_BERA_SQL),
+    (dq_pk_uniqueness, _dq_pk_uniqueness_sql()),
+    (t_vocab_coverage, _t_vocab_coverage_sql()),
+    (ti_sortino, TI_SORTINO_SQL),
+    (ti_calmar, TI_CALMAR_SQL),
+    (t_msttr, T_MSTTR_SQL),
+    (mm_dedup_bytes, _mm_dedup_bytes_sql()),
 )

@@ -33,13 +33,6 @@ from kp_crypto_market_analytics_spark.session import (
     load_tables,
 )
 
-R9_QUERIES: dict = {}
-_R9_ORACLES: dict = {}
-
-
-def r9_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R9_ORACLES.items()}
-
 
 # ---------------------------------------------- w_rollstd_stream_parity
 
@@ -143,10 +136,6 @@ FROM em GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-R9_QUERIES["w_rollstd_stream_parity"] = w_rollstd_stream_parity
-_R9_ORACLES["w_rollstd_stream_parity"] = _w_rollstd_stream_parity_sql
-
-
 # ---------------------------------------------- j_stream_enrich_parity
 
 _ENRICH_LOOKBACK = "5 minutes"
@@ -235,10 +224,6 @@ SELECT event_type,
   CAST(MAX(lag_ms) AS BIGINT) AS max_lag_ms
 FROM j GROUP BY 1 ORDER BY 1
 """
-
-
-R9_QUERIES["j_stream_enrich_parity"] = j_stream_enrich_parity
-_R9_ORACLES["j_stream_enrich_parity"] = _j_stream_enrich_parity_sql
 
 
 # ------------------------------------------ dedup_ngram_jaccard_sampled
@@ -342,10 +327,6 @@ FROM inter
 WHERE CAST(inter_size AS DOUBLE) / (sa.set_size + sb.set_size - inter_size) >= 0.6
 ORDER BY doc_a, doc_b
 """
-
-
-R9_QUERIES["dedup_ngram_jaccard_sampled"] = dedup_ngram_jaccard_sampled
-_R9_ORACLES["dedup_ngram_jaccard_sampled"] = _dedup_ngram_jaccard_sampled_sql
 
 
 # ----------------------------------------------- daily-bar indicators
@@ -498,10 +479,6 @@ ORDER BY event_type, day
 """
 
 
-R9_QUERIES["ti_atr"] = ti_atr
-_R9_ORACLES["ti_atr"] = lambda: TI_ATR_SQL
-
-
 def ti_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Williams %R-14: −100·(HH − C)/(HH − LL) over the trailing 14
     daily bars (Williams 1979), masked below 14 bars or a flat range.
@@ -534,10 +511,6 @@ FROM bars
 WINDOW w AS ({_WD_SQL} ROWS BETWEEN {_BAR_PERIOD - 1} PRECEDING AND CURRENT ROW)
 ORDER BY event_type, day
 """
-
-
-R9_QUERIES["ti_williams_r"] = ti_williams_r
-_R9_ORACLES["ti_williams_r"] = lambda: TI_WILLIAMS_SQL
 
 
 def ti_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,10 +577,6 @@ FROM fl
 WINDOW w AS ({_WD_SQL} ROWS BETWEEN {_BAR_PERIOD - 1} PRECEDING AND CURRENT ROW)
 ORDER BY event_type, day
 """
-
-
-R9_QUERIES["ti_mfi"] = ti_mfi
-_R9_ORACLES["ti_mfi"] = lambda: TI_MFI_SQL
 
 
 def ti_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -716,10 +685,6 @@ ORDER BY event_type, day
 """
 
 
-R9_QUERIES["ti_adx"] = ti_adx
-_R9_ORACLES["ti_adx"] = lambda: TI_ADX_SQL
-
-
 # ------------------------------------------------------ a_kendall_tau
 
 
@@ -816,10 +781,6 @@ ORDER BY event_type
 """
 
 
-R9_QUERIES["a_kendall_tau"] = a_kendall_tau
-_R9_ORACLES["a_kendall_tau"] = lambda: A_KENDALL_SQL
-
-
 # ------------------------------------------------------- a_cramers_v
 
 
@@ -911,10 +872,6 @@ FROM agg
 """
 
 
-R9_QUERIES["a_cramers_v"] = a_cramers_v
-_R9_ORACLES["a_cramers_v"] = lambda: A_CRAMERS_SQL
-
-
 # --------------------------------------------------------- a_grubbs
 
 
@@ -995,10 +952,6 @@ SELECT event_type, CAST(n AS BIGINT) AS n,
   CASE WHEN s > 0 AND n > 2 THEN round(dev / s, 6) END AS g_stat
 FROM scored WHERE rn = 1 ORDER BY event_type
 """
-
-
-R9_QUERIES["a_grubbs"] = a_grubbs
-_R9_ORACLES["a_grubbs"] = lambda: A_GRUBBS_SQL
 
 
 # ------------------------------------------------------- sim_mips_topk
@@ -1100,10 +1053,6 @@ WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-R9_QUERIES["sim_mips_topk"] = sim_mips_topk
-_R9_ORACLES["sim_mips_topk"] = lambda: SIM_MIPS_SQL
-
-
 # ----------------------------------------------- t_interleave_schedule
 
 _ILV_SLOTS = 100
@@ -1187,10 +1136,6 @@ ORDER BY slot
 """
 
 
-R9_QUERIES["t_interleave_schedule"] = t_interleave_schedule
-_R9_ORACLES["t_interleave_schedule"] = lambda: T_INTERLEAVE_SQL
-
-
 # -------------------------------------------------- o7_hash_reservoir
 
 
@@ -1231,10 +1176,6 @@ FROM orders
 ORDER BY h, o_orderkey
 LIMIT 100
 """
-
-
-R9_QUERIES["o7_hash_reservoir"] = o7_hash_reservoir
-_R9_ORACLES["o7_hash_reservoir"] = lambda: O7_RESERVOIR_SQL
 
 
 # ---------------------------------------------------- a_hurst_exponent
@@ -1421,10 +1362,6 @@ ORDER BY event_type, n
 """
 
 
-R9_QUERIES["a_hurst_exponent"] = a_hurst_exponent
-_R9_ORACLES["a_hurst_exponent"] = _hurst_sql
-
-
 # ------------------------------------------------------- a_evt_gumbel
 
 
@@ -1500,10 +1437,6 @@ FROM fit ORDER BY event_type
 """
 
 
-R9_QUERIES["a_evt_gumbel"] = a_evt_gumbel
-_R9_ORACLES["a_evt_gumbel"] = lambda: A_EVT_GUMBEL_SQL
-
-
 # ------------------------------------------------------- dq_freshness
 
 
@@ -1569,10 +1502,6 @@ SELECT event_type, last_ts, n_rows,
 FROM per CROSS JOIN gmax LEFT JOIN l24 USING (event_type)
 ORDER BY event_type
 """
-
-
-R9_QUERIES["dq_freshness"] = dq_freshness
-_R9_ORACLES["dq_freshness"] = lambda: DQ_FRESHNESS_SQL
 
 
 # ----------------------------------------------- dedup_est_calibration
@@ -1688,10 +1617,6 @@ FROM joined GROUP BY 1 ORDER BY 1
 """
 
 
-R9_QUERIES["dedup_est_calibration"] = dedup_est_calibration
-_R9_ORACLES["dedup_est_calibration"] = _dedup_est_calibration_sql
-
-
 # ------------------------------------------------ a_seasonality_strength
 
 
@@ -1765,5 +1690,23 @@ FROM agg ORDER BY event_type
 """
 
 
-R9_QUERIES["a_seasonality_strength"] = a_seasonality_strength
-_R9_ORACLES["a_seasonality_strength"] = lambda: A_SEASONALITY_SQL
+REGISTRY = (
+    (w_rollstd_stream_parity, _w_rollstd_stream_parity_sql()),
+    (j_stream_enrich_parity, _j_stream_enrich_parity_sql()),
+    (dedup_ngram_jaccard_sampled, _dedup_ngram_jaccard_sampled_sql()),
+    (ti_atr, TI_ATR_SQL),
+    (ti_williams_r, TI_WILLIAMS_SQL),
+    (ti_mfi, TI_MFI_SQL),
+    (ti_adx, TI_ADX_SQL),
+    (a_kendall_tau, A_KENDALL_SQL),
+    (a_cramers_v, A_CRAMERS_SQL),
+    (a_grubbs, A_GRUBBS_SQL),
+    (sim_mips_topk, SIM_MIPS_SQL),
+    (t_interleave_schedule, T_INTERLEAVE_SQL),
+    (o7_hash_reservoir, O7_RESERVOIR_SQL),
+    (a_hurst_exponent, _hurst_sql()),
+    (a_evt_gumbel, A_EVT_GUMBEL_SQL),
+    (dq_freshness, DQ_FRESHNESS_SQL),
+    (dedup_est_calibration, _dedup_est_calibration_sql()),
+    (a_seasonality_strength, A_SEASONALITY_SQL),
+)

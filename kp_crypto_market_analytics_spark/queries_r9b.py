@@ -64,14 +64,7 @@ from kp_crypto_market_analytics_spark.session import (
     load_tables,
 )
 
-R9B_QUERIES: dict = {}
-_R9B_ORACLES: dict = {}
-
 DEC19 = "decimal(19,0)"
-
-
-def r9b_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R9B_ORACLES.items()}
 
 
 # ------------------------------------------------------- shared pieces
@@ -237,10 +230,6 @@ FROM m ORDER BY event_type
 """
 
 
-R9B_QUERIES["ti_kyle_lambda"] = ti_kyle_lambda
-_R9B_ORACLES["ti_kyle_lambda"] = _ti_kyle_lambda_sql
-
-
 # --------------------------------------------------------- ti_roll_spread
 
 
@@ -303,10 +292,6 @@ SELECT event_type, n_pairs,
   END AS roll_spread
 FROM m ORDER BY event_type
 """
-
-
-R9B_QUERIES["ti_roll_spread"] = ti_roll_spread
-_R9B_ORACLES["ti_roll_spread"] = _ti_roll_spread_sql
 
 
 # ----------------------------------------------------- ti_corwin_schultz
@@ -404,10 +389,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
   CAST(SUM(CASE WHEN s6 < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
 FROM s GROUP BY 1 ORDER BY event_type
 """
-
-
-R9B_QUERIES["ti_corwin_schultz"] = ti_corwin_schultz
-_R9B_ORACLES["ti_corwin_schultz"] = _ti_corwin_schultz_sql
 
 
 # ----------------------------------------------------------------- a_vpin
@@ -516,10 +497,6 @@ FROM buckets GROUP BY 1 ORDER BY event_type
 """
 
 
-R9B_QUERIES["a_vpin"] = a_vpin
-_R9B_ORACLES["a_vpin"] = _a_vpin_sql
-
-
 # ------------------------------------------------------ a_yule_walker_ar2
 
 
@@ -619,10 +596,6 @@ SELECT event_type, n_pairs, r1, r2,
     round((r2 - r1*r1) / (1.0 - r1*r1), 6) + 0.0 END AS phi2
 FROM rs ORDER BY event_type
 """
-
-
-R9B_QUERIES["a_yule_walker_ar2"] = a_yule_walker_ar2
-_R9B_ORACLES["a_yule_walker_ar2"] = _a_yule_walker_ar2_sql
 
 
 # -------------------------------------------------------- a_durbin_watson
@@ -742,10 +715,6 @@ FROM diffs GROUP BY 1 ORDER BY event_type
 """
 
 
-R9B_QUERIES["a_durbin_watson"] = a_durbin_watson
-_R9B_ORACLES["a_durbin_watson"] = _a_durbin_watson_sql
-
-
 # ----------------------------------------------------------- a_newey_west
 
 _NW_LAGS = 5
@@ -862,10 +831,6 @@ SELECT event_type, n_pairs AS n,
     round(({lrv}) / ({g0}), 6) + 0.0 END AS nw_ratio
 FROM m ORDER BY event_type
 """
-
-
-R9B_QUERIES["a_newey_west"] = a_newey_west
-_R9B_ORACLES["a_newey_west"] = _a_newey_west_sql
 
 
 # --------------------------------------------------------- a_engle_granger
@@ -1003,10 +968,6 @@ FROM g
 """
 
 
-R9B_QUERIES["a_engle_granger"] = a_engle_granger
-_R9B_ORACLES["a_engle_granger"] = _a_engle_granger_sql
-
-
 # ------------------------------------------------------ a_tail_dependence
 
 
@@ -1104,10 +1065,6 @@ FROM g ORDER BY type_a, type_b
 """
 
 
-R9B_QUERIES["a_tail_dependence"] = a_tail_dependence
-_R9B_ORACLES["a_tail_dependence"] = _a_tail_dependence_sql
-
-
 # -------------------------------------------------------- t_coleman_liau
 
 
@@ -1180,10 +1137,6 @@ FROM percdoc GROUP BY 1 ORDER BY source
 """.replace("{{mean6}}", mean6)
 
 
-R9B_QUERIES["t_coleman_liau"] = t_coleman_liau
-_R9B_ORACLES["t_coleman_liau"] = _t_coleman_liau_sql
-
-
 # -------------------------------------------------------- dq_l_diversity
 
 _LDIV_FLOOR = 10
@@ -1234,10 +1187,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_groups,
     AS n_below_floor
 FROM g GROUP BY 1 ORDER BY event_type
 """
-
-
-R9B_QUERIES["dq_l_diversity"] = dq_l_diversity
-_R9B_ORACLES["dq_l_diversity"] = _dq_l_diversity_sql
 
 
 # ------------------------------------------------------ a_granger_causality
@@ -1401,10 +1350,6 @@ FROM fit ORDER BY direction
 """
 
 
-R9B_QUERIES["a_granger_causality"] = a_granger_causality
-_R9B_ORACLES["a_granger_causality"] = _a_granger_causality_sql
-
-
 # --------------------------------------------------------- a_partial_corr
 
 _PC_Z = "purchase"
@@ -1524,10 +1469,6 @@ FROM rs
 """
 
 
-R9B_QUERIES["a_partial_corr"] = a_partial_corr
-_R9B_ORACLES["a_partial_corr"] = _a_partial_corr_sql
-
-
 # ---------------------------------------------------- a_cross_corr_leadlag
 
 _CCF_MAX_LAG = 5
@@ -1640,10 +1581,6 @@ SELECT * FROM (
 """
 
 
-R9B_QUERIES["a_cross_corr_leadlag"] = a_cross_corr_leadlag
-_R9B_ORACLES["a_cross_corr_leadlag"] = _a_cross_corr_leadlag_sql
-
-
 # --------------------------------------------------------- ti_kaufman_er
 
 
@@ -1709,10 +1646,6 @@ SELECT event_type, n_ticks,
   CASE WHEN path > 0 THEN {er} END AS efficiency_ratio
 FROM g ORDER BY event_type
 """
-
-
-R9B_QUERIES["ti_kaufman_er"] = ti_kaufman_er
-_R9B_ORACLES["ti_kaufman_er"] = _ti_kaufman_er_sql
 
 
 # --------------------------------------------------------------- ti_cmf
@@ -1814,10 +1747,6 @@ FROM scored GROUP BY 1 ORDER BY event_type
 """
 
 
-R9B_QUERIES["ti_cmf"] = ti_cmf
-_R9B_ORACLES["ti_cmf"] = _ti_cmf_sql
-
-
 # --------------------------------------------------- a_markov_entropy_rate
 
 
@@ -1907,10 +1836,6 @@ SELECT CAST(nn AS BIGINT) AS n_transitions, CAST(ns AS BIGINT) AS n_states,
   END AS efficiency
 FROM scored GROUP BY nn, ns
 """
-
-
-R9B_QUERIES["a_markov_entropy_rate"] = a_markov_entropy_rate
-_R9B_ORACLES["a_markov_entropy_rate"] = _a_markov_entropy_rate_sql
 
 
 # ---------------------------------------------------- a_vpin_stream_parity
@@ -2018,5 +1943,23 @@ ORDER BY event_type, bucket_id
 """
 
 
-R9B_QUERIES["a_vpin_stream_parity"] = a_vpin_stream_parity
-_R9B_ORACLES["a_vpin_stream_parity"] = _a_vpin_stream_parity_sql
+REGISTRY = (
+    (ti_kyle_lambda, _ti_kyle_lambda_sql()),
+    (ti_roll_spread, _ti_roll_spread_sql()),
+    (ti_corwin_schultz, _ti_corwin_schultz_sql()),
+    (a_vpin, _a_vpin_sql()),
+    (a_yule_walker_ar2, _a_yule_walker_ar2_sql()),
+    (a_durbin_watson, _a_durbin_watson_sql()),
+    (a_newey_west, _a_newey_west_sql()),
+    (a_engle_granger, _a_engle_granger_sql()),
+    (a_tail_dependence, _a_tail_dependence_sql()),
+    (t_coleman_liau, _t_coleman_liau_sql()),
+    (dq_l_diversity, _dq_l_diversity_sql()),
+    (a_granger_causality, _a_granger_causality_sql()),
+    (a_partial_corr, _a_partial_corr_sql()),
+    (a_cross_corr_leadlag, _a_cross_corr_leadlag_sql()),
+    (ti_kaufman_er, _ti_kaufman_er_sql()),
+    (ti_cmf, _ti_cmf_sql()),
+    (a_markov_entropy_rate, _a_markov_entropy_rate_sql()),
+    (a_vpin_stream_parity, _a_vpin_stream_parity_sql()),
+)

@@ -48,13 +48,6 @@ from kp_crypto_market_analytics_spark.session import (
     load_tables,
 )
 
-R9C_QUERIES: dict = {}
-_R9C_ORACLES: dict = {}
-
-
-def r9c_oracles() -> dict[str, str]:
-    return {name: fn() for name, fn in _R9C_ORACLES.items()}
-
 
 # --------------------------------------------------------- t_naive_bayes
 
@@ -242,10 +235,6 @@ SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
   {acc} AS accuracy
 FROM pred GROUP BY 1 ORDER BY lang
 """.replace("{acc}", acc)
-
-
-R9C_QUERIES["t_naive_bayes"] = t_naive_bayes
-_R9C_ORACLES["t_naive_bayes"] = _t_naive_bayes_sql
 
 
 # --------------------------------------------------------------- a_cuped
@@ -448,10 +437,6 @@ FROM g
 """
 
 
-R9C_QUERIES["a_cuped"] = a_cuped
-_R9C_ORACLES["a_cuped"] = _a_cuped_sql
-
-
 # --------------------------------------------------------- a_quantile_lift
 
 _QL_DECILES = [i / 10.0 for i in range(1, 10)]
@@ -520,10 +505,6 @@ FROM (
 {union}
 ) ORDER BY pct
 """
-
-
-R9C_QUERIES["a_quantile_lift"] = a_quantile_lift
-_R9C_ORACLES["a_quantile_lift"] = _a_quantile_lift_sql
 
 
 # ----------------------------------------------------------- ti_ichimoku
@@ -622,10 +603,6 @@ ORDER BY event_type, day
 """
 
 
-R9C_QUERIES["ti_ichimoku"] = ti_ichimoku
-_R9C_ORACLES["ti_ichimoku"] = _ti_ichimoku_sql
-
-
 # -------------------------------------------------------------- ti_aroon
 
 _AROON_N = 25
@@ -722,5 +699,10 @@ ORDER BY event_type, day
 """
 
 
-R9C_QUERIES["ti_aroon"] = ti_aroon
-_R9C_ORACLES["ti_aroon"] = _ti_aroon_sql
+REGISTRY = (
+    (t_naive_bayes, _t_naive_bayes_sql()),
+    (a_cuped, _a_cuped_sql()),
+    (a_quantile_lift, _a_quantile_lift_sql()),
+    (ti_ichimoku, _ti_ichimoku_sql()),
+    (ti_aroon, _ti_aroon_sql()),
+)

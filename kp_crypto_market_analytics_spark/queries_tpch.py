@@ -20,8 +20,6 @@ ratios, unique tiebreakers under every LIMIT (queries.py header).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -800,44 +798,23 @@ ORDER BY s_name, s_suppkey
 """
 
 
-TPCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q4_order_priority": q4_order_priority,
-    "q7_nation_volume": q7_nation_volume,
-    "q9_product_profit": q9_product_profit,
-    "q10_returned_items": q10_returned_items,
-    "q14_promo_share": q14_promo_share,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_supplier_cnt": q16_supplier_cnt,
-    "q18_large_orders": q18_large_orders,
-    "q19_bracket_revenue": q19_bracket_revenue,
-    "q8_market_share": q8_market_share,
-    "q12_priority_shipping": q12_priority_shipping,
-    "q13_order_distribution": q13_order_distribution,
-    "q17_small_quantity": q17_small_quantity,
-    "q21_waiting_supplier": q21_waiting_supplier,
-    "q22_dormant_customers": q22_dormant_customers,
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q11_important_parts": q11_important_parts,
-    "q20_dominant_suppliers": q20_dominant_suppliers,
-}
-
-TPCH_ORACLES: dict[str, str] = {
-    "q4_order_priority": Q4_SQL,
-    "q7_nation_volume": Q7_SQL,
-    "q9_product_profit": Q9_SQL,
-    "q10_returned_items": Q10_SQL,
-    "q14_promo_share": Q14_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q16_supplier_cnt": Q16_SQL,
-    "q18_large_orders": Q18_SQL,
-    "q19_bracket_revenue": Q19_SQL,
-    "q8_market_share": Q8_SQL,
-    "q12_priority_shipping": Q12_SQL,
-    "q13_order_distribution": Q13_SQL,
-    "q17_small_quantity": Q17_SQL,
-    "q21_waiting_supplier": Q21_SQL,
-    "q22_dormant_customers": Q22_SQL,
-    "q2_min_cost_supplier": Q2_SQL,
-    "q11_important_parts": Q11_SQL,
-    "q20_dominant_suppliers": Q20_SQL,
-}
+REGISTRY = (
+    (q4_order_priority, Q4_SQL),
+    (q7_nation_volume, Q7_SQL),
+    (q9_product_profit, Q9_SQL),
+    (q10_returned_items, Q10_SQL),
+    (q14_promo_share, Q14_SQL),
+    (q15_top_supplier, Q15_SQL),
+    (q16_supplier_cnt, Q16_SQL),
+    (q18_large_orders, Q18_SQL),
+    (q19_bracket_revenue, Q19_SQL),
+    (q8_market_share, Q8_SQL),
+    (q12_priority_shipping, Q12_SQL),
+    (q13_order_distribution, Q13_SQL),
+    (q17_small_quantity, Q17_SQL),
+    (q21_waiting_supplier, Q21_SQL),
+    (q22_dormant_customers, Q22_SQL),
+    (q2_min_cost_supplier, Q2_SQL),
+    (q11_important_parts, Q11_SQL),
+    (q20_dominant_suppliers, Q20_SQL),
+)

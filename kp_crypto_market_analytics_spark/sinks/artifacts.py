@@ -93,11 +93,6 @@ def write_single_csv_file(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def write_json_artifact(df: DataFrame, path: str) -> None:
-    """S15 — JSON artifact (one object per line)."""
-    df.coalesce(1).write.mode("overwrite").json(path)
-
-
 def write_orc_artifact(df: DataFrame, path: str, partition_by: str | None = None) -> None:
     """ORC artifact sink — the columnar interchange format next to
     parquet (built into Spark, no extra package): same predicate-

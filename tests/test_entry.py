@@ -34,45 +34,53 @@ def test_entry_smoke(spark):
 
 def test_registry_consistency():
     import __spark_entry__ as m
+    from kp_crypto_market_analytics_spark.queries import ORACLES, QUERIES
 
+    assert list(ORACLES) == list(QUERIES)
+    assert all(fn.__name__ == name for name, fn in QUERIES.items())
+    # Size floor: an emptied module table or one left out of
+    # build_registry must fail here.
+    assert len(QUERIES) >= 471
+    import importlib
+    import pkgutil
+
+    import kp_crypto_market_analytics_spark as pkg
+
+    for mod in pkgutil.iter_modules(pkg.__path__):
+        if mod.name.startswith("queries_"):
+            table = importlib.import_module(f"{pkg.__name__}.{mod.name}").REGISTRY
+            assert table, mod.name
+            assert all(fn.__name__ in QUERIES for fn, _ in table), mod.name
     qs, oracles = m.queries(), m.oracle_sql()
-    assert set(oracles) <= set(qs)
-    assert len(qs) >= 104
-    # Driver-gate ordering: pending (no green CORRECTNESS row) queries
-    # precede green ones, and within pending, older registrations come
-    # first — the driver's correctness prefix always verifies the
-    # oldest debt first.  Green derives from CORRECTNESS_r*.json on
-    # disk, so this ordering self-updates each round.
-    names = list(qs)
+    assert list(oracles) == list(qs)
+    assert sorted(qs) == sorted(QUERIES)
+    # Driver-gate ordering: least-recently-verified first (no green
+    # latest CORRECTNESS row = round 0), ties in registry order.  Green
+    # rounds derive from the CORRECTNESS_r*.json files on disk, so no
+    # specific name is pinned here (see
+    # test_driver_green_latest_round_wins).
     green = m._driver_green()
+    assert set(green) <= set(QUERIES)
+    index = {n: i for i, n in enumerate(QUERIES)}
+    keys = [(green.get(n, 0), index[n]) for n in qs]
+    assert keys == sorted(keys)
 
-    def tier(n):
-        if n in green:
-            return 1000
-        # stale-green re-queues date from the CHANGE round and rank
-        # just behind never-verified debt of that vintage (mirrors
-        # __spark_entry__._ordered)
-        if n in m._CHANGED_IN_ROUND:
-            return 10 * max(
-                m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND[n]
-            ) + 5
-        return 10 * m._FIRST_SEEN_ROUND.get(n, 1)
 
-    tiers = [tier(n) for n in names]
-    assert tiers == sorted(tiers)
-    # Green provenance derives from the on-disk CORRECTNESS artifacts —
-    # never hardcode specific names here (they flip as driver rounds
-    # land; see test_driver_green_latest_round_wins for the semantics).
-    assert green <= set(qs)
-    # Every name the ordering knows is actually registered.
-    assert set(m._FIRST_SEEN_ROUND) <= set(qs)
-    assert set(m._CHANGED_IN_ROUND) <= set(qs)
+def test_registry_rejects_duplicate_name():
+    from kp_crypto_market_analytics_spark.queries import (
+        REGISTRY,
+        build_registry,
+        q1_pricing_summary,
+    )
+
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        build_registry((REGISTRY, ((q1_pricing_summary, "SELECT 1"),)))
 
 
 def test_driver_green_latest_round_wins(tmp_path):
-    # Provenance semantics: a later FAIL re-queues a green query; a
-    # post-change green row clears a _CHANGED_IN_ROUND discount; rows
-    # older than the change never count.
+    # Latest round wins: a later FAIL re-queues a green query; names
+    # with no row rank with the failures; greens follow by the round
+    # of their latest row; ties keep registry order.
     import json
 
     import __spark_entry__ as m
@@ -80,15 +88,16 @@ def test_driver_green_latest_round_wins(tmp_path):
     row_ok = {"rows_match": True, "schema_match": True, "hash_match": True}
     row_bad = {"rows_match": True, "schema_match": True, "hash_match": False}
     (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"regressed": row_ok, "j_anti_customers": row_ok, "steady": row_ok})
+        json.dumps({"regressed": row_ok, "old_a": row_ok, "fresh": row_ok, "old_b": row_ok})
     )
     (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"regressed": row_bad, "j_anti_customers": row_ok})
+        json.dumps({"regressed": row_bad, "fresh": row_ok})
     )
-    green = m._driver_green(root=str(tmp_path))
-    assert "steady" in green            # untouched r01 green row holds
-    assert "regressed" not in green     # r02 FAIL supersedes r01 green
-    assert "j_anti_customers" in green  # post-change (round >= 2) green counts
+    assert m._driver_green(root=str(tmp_path)) == {"old_a": 1, "fresh": 2, "old_b": 1}
+    registry = ["fresh", "old_b", "regressed", "old_a", "never_seen"]
+    assert m._ordered(registry, root=str(tmp_path)) == [
+        "regressed", "never_seen", "old_b", "old_a", "fresh",
+    ]
 
 
 @pytest.mark.parametrize("name", FAST_SUBSET)
@@ -105,49 +114,3 @@ def test_query_matches_oracle(spark, name):
     assert not issues, issues
     assert max_delta == 0.0
 
-
-def test_driver_prefix_budget_fits():
-    """VERDICT r9 ask #2: the driver's correctness run covers only a
-    ~50-entry registration-order prefix.  Every query still awaiting a
-    fresh green row (never-verified + stale-green re-queues) must fit
-    inside that budget PER SCHEDULED ROUND, or a round's debt silently
-    rides into the next round — the arithmetic must be checked BEFORE
-    landing a wave, so this test fails the moment any one round's
-    pending set outgrows the prefix.
-
-    A wave may be explicitly scheduled into a FUTURE round's prefix
-    (vintage > current round in _FIRST_SEEN_ROUND, e.g. the r11 third
-    wave) — that is declared spillover, not silent debt: the ordering
-    still fronts the oldest vintage, so the driver prefix drains
-    rounds strictly in vintage order."""
-    import collections
-
-    import __spark_entry__ as m
-    from kp_crypto_market_analytics_spark.queries import QUERIES
-
-    green = m._driver_green()
-    ordered = m._ordered(list(QUERIES))
-    pending = [n for n in ordered if n not in green]
-    # Per-vintage budget: each scheduled round's pending set must fit
-    # the 50-entry prefix on its own.
-    by_vintage = collections.Counter(
-        max(
-            m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND.get(n, 0)
-        )
-        for n in pending
-    )
-    for vintage, count in sorted(by_vintage.items()):
-        assert count <= 50, (
-            f"round-{vintage} wave has {count} pending queries — "
-            f"exceeds the 50-entry driver prefix"
-        )
-    # and the pending set must actually FRONT the ordering, oldest
-    # vintage first, so the prefix drains rounds in order.
-    assert ordered[: len(pending)] == pending
-    vintages = [
-        max(m._FIRST_SEEN_ROUND.get(n, 1), m._CHANGED_IN_ROUND.get(n, 0))
-        for n in pending
-    ]
-    assert vintages == sorted(vintages), (
-        "pending ordering must be monotone in scheduled vintage"
-    )

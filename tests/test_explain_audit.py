@@ -1,6 +1,7 @@
 """Unit tests for the plan-audit detectors (tools/explain_audit.py):
-global-window counting incl. the no-ORDER-BY form, and the block-join
-cap gate (inverted-index self-joins must carry a bounding operator)."""
+global-window counting incl. the no-ORDER-BY form, the shrinking-frame
+rule, and the block-join cap gate (inverted-index self-joins must carry
+a bounding operator)."""
 
 import os
 import sys
@@ -19,6 +20,7 @@ sys.path.insert(
 
 from tools.explain_audit import (  # noqa: E402
     count_global_windows,
+    count_shrinking_frames,
     count_uncapped_block_joins,
 )
 
@@ -50,6 +52,41 @@ def test_global_ordered_window_counts(spark):
         "id", "row_number() OVER (ORDER BY id) AS rn"
     )
     assert count_global_windows(_executed(df)) == 1
+
+
+@pytest.mark.parametrize(
+    "frame",
+    [
+        "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING",
+        "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING",
+        "ROWS BETWEEN 3 PRECEDING AND UNBOUNDED FOLLOWING",
+        "RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING",
+        "RANGE BETWEEN 2 PRECEDING AND UNBOUNDED FOLLOWING",
+    ],
+)
+def test_shrinking_frame_counts(spark, frame):
+    df = spark.range(10).selectExpr(
+        "id",
+        "id % 2 AS g",
+    ).selectExpr(
+        "id",
+        f"first(id) OVER (PARTITION BY g ORDER BY id {frame}) AS nxt",
+    )
+    assert count_shrinking_frames(_executed(df)) == 1
+
+
+def test_running_frame_not_counted(spark):
+    df = spark.range(10).selectExpr(
+        "id",
+        "id % 2 AS g",
+    ).selectExpr(
+        "id",
+        "last(id) OVER (PARTITION BY g ORDER BY id DESC"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nxt",
+        "sum(id) OVER (PARTITION BY g ORDER BY id"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS tot",
+    )
+    assert count_shrinking_frames(_executed(df)) == 0
 
 
 @pytest.fixture(scope="module")

@@ -662,63 +662,6 @@ def test_neardup_pairs_blocked_matches_hof(spark, tmp_path):
     assert 4 not in all_ids
 
 
-def test_brute_force_topk_blocked_matches_hof(spark, tmp_path):
-    """The blocked NumPy top-k scorer must be BIT-identical to the HOF
-    crossJoin form (r12, VERDICT r11 ask #1): same left-assoc dot and
-    norm accumulation, same divide, NULL cosine for zero-norm pairs
-    (kept in the scored set, ranked last), same Spark-side 6dp-rounded
-    rank window — exercised on exact dups, anti-parallel vectors, a
-    zero vector on each side, and float32-origin values."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from kp_crypto_market_analytics_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_blocked,
-    )
-
-    vecs = [
-        (0, [1.0, 0.25, -0.5, 0.125]),
-        (1, [1.0, 0.25, -0.5, 0.125]),       # exact dup of 0
-        (2, [2.0, 0.5, -1.0, 0.25]),         # scaled dup (cos ties)
-        (3, [-1.0, -0.25, 0.5, -0.125]),     # anti-parallel
-        (4, [0.0, 0.0, 0.0, 0.0]),           # zero vector: null cos
-        (5, [0.1, 0.9, 0.3, 0.7]),
-        (6, [0.30000001192092896, 0.1, 0.2, 0.4]),  # float32-origin
-        (7, [0.9, 0.1, -0.5, 0.2]),
-        (8, [0.5, -0.5, 0.5, -0.5]),
-    ]
-    path = str(tmp_path / "emb.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([v[0] for v in vecs], pa.int64()),
-                "embedding": pa.array(
-                    [v[1] for v in vecs], pa.list_(pa.float64())
-                ),
-            }
-        ),
-        path,
-    )
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    for below, k in ((5, 3), (10, 5)):
-        queries = emb.where(F.col("vec_id") < below)
-        ref = (
-            brute_force_topk(emb, queries, "embedding", "vec_id", k=k)
-            .orderBy("query_id", "rank")
-            .collect()
-        )
-        got = (
-            brute_force_topk_blocked(
-                emb, path, "embedding", "vec_id", k=k, query_ids_below=below
-            )
-            .orderBy("query_id", "rank")
-            .collect()
-        )
-        assert got == ref, f"below={below} k={k}: {got} != {ref}"
-        assert len(ref) > 0
-
-
 def test_ngram_jaccard_blocked_matches_prefix_bitmap(spark, tmp_path):
     """The blocked BLAS Jaccard kernel must return row-identical pairs
     to the prefix-filter + bitmap plan (r12, VERDICT r11 ask #7) —

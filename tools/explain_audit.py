@@ -392,6 +392,30 @@ def count_global_windows(plan: str) -> int:
     return n
 
 
+_SHRINKING_FRAME = re.compile(
+    r"specifiedwindowframe\((?:Row|Range)Frame,\s*(?!\s|unboundedpreceding)[^,]+,"
+    r"\s*unboundedfollowing\$\(\)\)"
+)
+
+
+def count_shrinking_frames(plan: str) -> int:
+    """Window nodes in an executed-plan string that carry a shrinking
+    frame: any ROWS or RANGE frame whose upper bound is
+    unboundedFollowing and whose lower bound is not unboundedPreceding
+    (currentRow, n PRECEDING, n FOLLOWING).  Spark re-evaluates such a
+    frame on every row, so its cost is quadratic in the partition
+    size; the same values come from a running frame
+    (unboundedPreceding → currentRow/offset) over the reversed
+    ordering.  Whole-partition frames (unboundedPreceding →
+    unboundedFollowing) do not match."""
+    return sum(
+        1
+        for line in plan.splitlines()
+        if re.search(r"\bWindow(?:InPandas)?\s+\[", line)
+        and _SHRINKING_FRAME.search(line)
+    )
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from bench import BENCH_QUERIES
@@ -442,6 +466,9 @@ def main() -> None:
             gw_cell = f"{gw} ({reason})"
         else:
             gw_cell = "0"
+        shrinking = count_shrinking_frames(plan)
+        if shrinking:
+            violations.append(f"{name}: {shrinking} shrinking window frames")
         bj, unc = count_uncapped_block_joins(plan)
         bj_allowed, bj_reason = BLOCK_JOIN_ALLOWLIST.get(name, (0, ""))
         if unc > bj_allowed:
@@ -487,13 +514,16 @@ def main() -> None:
         "survivors, sketch width, distinct-day frames), and any",
         "unallowlisted occurrence fails the audit, because an unbounded",
         "global window funnels a linearly-growing frame through ONE task.",
+        "Shrinking window frames (any lower bound other than",
+        "unboundedPreceding → unboundedFollowing, quadratic per partition)",
+        "are not allowed in any query; the audit exits 1 on one.",
     ]
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}")
     if violations:
-        print("UNALLOWLISTED GLOBAL WINDOWS:")
+        print("AUDIT VIOLATIONS:")
         for v in violations:
             print(f"  {v}")
         sys.exit(1)
