@@ -1,15 +1,19 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints the detail JSON line: {"metric": ..., "value": total_sec,
-"unit": "sec", "queries": {name: sec}, "sf": ...} plus round-over-round
-comparison keys ("prev_round", "prev_total", "delta_vs_prev") computed
-against the newest BENCH_r{N}.json in the repo root — followed by a
-COMPACT summary line ({"summary": true, "value", "sf", "n_queries"}).
-The detail line can exceed the driver's stdout tail and get
-front-truncated (r01–r03 all recorded parsed=null); the compact line
-is short enough to always survive, so round totals land in the
-driver's own artifact.
+Each query is timed from construction until Spark's ``noop`` write sink
+returns: every output column is computed and nothing is collected, so
+Catalyst cannot prune work the user would get (``count()`` could drop
+unread columns and whole Window operators).
+
+A sweep keeps ONE detail record and prints ONE line.  The detail record
+({"metric", "value": total_sec, "queries": {name: sec}, "sf", "action",
+the drift canary, the budget table, ...}) is appended to
+BENCH_HISTORY.jsonl.  Stdout gets a single JSON line of at most
+SUMMARY_BYTES bytes — the summary scalars plus the slowest queries in
+descending order — short enough to survive a 2000-char output tail.
+Deltas ("prev_round", "prev_total", "delta_vs_prev") are taken against
+the newest BENCH_HISTORY.jsonl record at the same SF and timing action.
 
 Modes:
   python bench.py                         # full registry sweep
@@ -25,8 +29,8 @@ Modes:
                                           # per-query MIN (stable warm
                                           # round-over-round statistic)
 
-Query selection = the FULL registry minus the documented exclusions in
-BENCH_EXCLUDED (each names its reason) — every family carries a tracked
+Query selection = the FULL registry minus the documented EVAL_TIER
+exclusions (each names its reason) — every family carries a tracked
 number with a per-round delta, so a perf regression anywhere in the
 engine shows up in delta_vs_prev instead of hiding in an un-benched
 query.
@@ -38,14 +42,14 @@ sketch path is what a 100 TB deployment runs, so it is what we time.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from kp_crypto_market_analytics_spark.queries import QUERIES  # noqa: E402
 
 # EVAL-TIER queries (r9, formalizing the r6-r8 JSON-note exclusion):
 # correctness-gated every round but NOT timed, because they are truth
@@ -75,9 +79,6 @@ EVAL_TIER = {
         ],
     },
 }
-
-# Back-compat alias: name -> reason (artifact key, parsing helpers).
-BENCH_EXCLUDED = {n: spec["reason"] for n, spec in EVAL_TIER.items()}
 
 # Session-drift canary (VERDICT r9 ask #1): the common-query sweep
 # total crept ~10% in r8 AND r9 while fresh-JVM isolated runs stayed
@@ -309,120 +310,65 @@ BUILD_COST_NOTES = {
 }
 
 
-def _bench_queries() -> list[str]:
-    from kp_crypto_market_analytics_spark.queries import QUERIES
+BENCH_QUERIES = [q for q in QUERIES if q not in EVAL_TIER]
 
-    return [q for q in QUERIES if q not in BENCH_EXCLUDED]
+# How a query is materialized while timed; recorded as the sweep
+# record's "action", so deltas never compare across timing methods
+# (count-era records carry no "action" key).
+ACTION = "noop"
 
-
-BENCH_QUERIES = _bench_queries()
-
-
-def _extract_bench(data: dict) -> dict | None:
-    """Pull the {"queries": {...}, "value": ...} record out of a driver
-    BENCH_r{N}.json wrapper.  The driver sometimes records parsed=null
-    with only a front-TRUNCATED stdout tail (r02 did), so fall through:
-    bare record → parsed dict → full JSON line inside tail → salvage
-    the "name": seconds pairs from the truncated queries fragment."""
-    if isinstance(data.get("queries"), dict):
-        return data
-    parsed = data.get("parsed")
-    if isinstance(parsed, dict) and isinstance(parsed.get("queries"), dict):
-        return parsed
-    tail = data.get("tail")
-    if not isinstance(tail, str):
-        return None
-    for line in reversed(tail.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            try:
-                cand = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if isinstance(cand, dict) and isinstance(cand.get("queries"), dict):
-                return cand
-            # The compact per-query line (r12, VERDICT r11 ask #2):
-            # {"per_query": {name: sec}} printed right before the
-            # summary — short enough to survive front-truncation, and
-            # carries exactly the timings dict.
-            if isinstance(cand, dict) and isinstance(
-                cand.get("per_query"), dict
-            ):
-                return {"queries": cand["per_query"], "value": None}
-    # Truncated single line: keep only the part before the queries
-    # dict closes (delta_vs_prev entries further right would otherwise
-    # shadow real timings), then regex the per-query pairs.  The
-    # queries dict is the ONLY one in the detail line that closes at
-    # '}, "sf":', so that boundary being present means everything left
-    # of it is genuine per-query pairs — even when the front (including
-    # the '"queries": {' marker itself) was truncated away, the normal
-    # case for a front-truncated driver tail.  Without the boundary
-    # (e.g. only the compact summary line survived, or only
-    # delta_vs_prev entries), there is nothing safe to salvage.
-    if '}, "sf":' not in tail:
-        return None
-    frag = tail.split('}, "sf":')[0]
-    # $-alternative: the split consumed the dict's closing brace, so
-    # the LAST pair in the fragment ends the string.
-    pairs = re.findall(r'"([A-Za-z0-9_]+)": (-?\d+(?:\.\d+)?)(?=[,}]|$)', frag)
-    queries = {
-        k: float(v)
-        for k, v in pairs
-        if k
-        not in (
-            "value", "sf", "prev_round", "prev_total", "n", "rc", "cpus",
-            "n_queries", "n_excluded", "repeat",
-        )
-    }
-    return {"queries": queries, "value": None} if queries else None
+# Byte budget of the one stdout line: it must survive a 2000-char
+# output tail whole, so it keeps the summary scalars and as many of the
+# slowest queries as fit.
+SUMMARY_BYTES = 1900
 
 
-def _prev_bench(root: str, sf=None) -> tuple[int | str | None, dict]:
-    """Most recent usable bench record: newest usable BENCH_r{N}.json
-    (skipping rounds whose record is unrecoverable), else the last
-    locally-written BENCH_HISTORY.jsonl entry at the SAME scale factor
-    (deltas across SFs would be meaningless).  Returns (label, record)
-    or (None, {})."""
-    rounds = []
-    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    for n, path in sorted(rounds, reverse=True):
+def _sf_dir() -> str:
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _sf() -> float | str:
+    sf = _sf_dir().rstrip("/").split("sf")[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
+def _history(root: str, sf: float | str) -> tuple[int | None, dict]:
+    """(line number, record) of the newest BENCH_HISTORY.jsonl sweep at
+    scale factor ``sf`` timed with ACTION and carrying its queries dict,
+    or (None, {}).  Deltas and rankings across SFs or timing actions
+    would be meaningless."""
+    try:
+        with open(os.path.join(root, "BENCH_HISTORY.jsonl")) as f:
+            lines = f.read().splitlines()
+    except FileNotFoundError:
+        return None, {}
+    for n in range(len(lines), 0, -1):
         try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
+            rec = json.loads(lines[n - 1])
+        except json.JSONDecodeError:
+            # a sweep killed mid-append leaves a partial last line
             continue
-        rec = _extract_bench(data)
-        # A record that declares a DIFFERENT sf than requested is not a
-        # usable delta baseline (salvaged records without an "sf" key
-        # pass through — driver rounds all run the default sf0.1).
-        if rec and (sf is None or rec.get("sf") in (None, sf)):
+        if rec.get("sf") == sf and rec.get("action") == ACTION and rec.get("queries"):
             return n, rec
-    hist = os.path.join(root, "BENCH_HISTORY.jsonl")
-    if os.path.exists(hist):
-        try:
-            with open(hist) as f:
-                lines = [ln for ln in f.read().splitlines() if ln.strip()]
-            for line in reversed(lines):
-                rec = json.loads(line)
-                if isinstance(rec.get("queries"), dict) and (
-                    sf is None or rec.get("sf") == sf
-                ):
-                    return "local", rec
-        except (OSError, json.JSONDecodeError):
-            pass
     return None, {}
 
 
-def _time_query(spark, name: str, sf_dir: str) -> tuple[float, int]:
-    from kp_crypto_market_analytics_spark.queries import QUERIES
+def _prev_bench(root: str, sf: float | str) -> tuple[str | None, dict]:
+    """(label, record) of the delta baseline: the newest matching
+    history record, labelled by its BENCH_HISTORY.jsonl line."""
+    n, rec = _history(root, sf)
+    return (f"BENCH_HISTORY.jsonl:{n}" if n else None), rec
 
+
+def _time_query(spark, name: str, sf_dir: str) -> float:
+    """Seconds to build QUERIES[name] and write every row to the noop
+    sink (all output columns computed, nothing collected)."""
     t0 = time.time()
-    df = QUERIES[name](spark, sf_dir)
-    n = df.count()
-    return round(time.time() - t0, 3), n
+    QUERIES[name](spark, sf_dir).write.format(ACTION).mode("overwrite").save()
+    return round(time.time() - t0, 3)
 
 
 def _bench_session():
@@ -430,7 +376,6 @@ def _bench_session():
         APPROX_DISTINCT_CONF,
         APPROX_QUANTILES_CONF,
     )
-    from kp_crypto_market_analytics_spark.queries import QUERIES
     from kp_crypto_market_analytics_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -445,10 +390,8 @@ def _bench_session():
 
 def run_one(name: str) -> None:
     """Child of --isolate: one query, one fresh JVM, one JSON line."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _bench_session()
-    sec, n = _time_query(spark, name, sf_dir)
-    print(json.dumps({"name": name, "sec": sec, "rows": n}))
+    print(json.dumps({"name": name, "sec": _time_query(spark, name, _sf_dir())}))
 
 
 def run_isolated(names: list[str], runs: int = 2) -> None:
@@ -497,11 +440,10 @@ def run_isolated(names: list[str], runs: int = 2) -> None:
             print(f"# isolate {name}: {rec['sec']:.3f}s", file=sys.stderr)
         if secs:
             results[name] = {"min": min(secs), "runs": secs}
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out = {
         "metric": "isolated_query_runtime",
         "unit": "sec",
-        "sf": sf_dir.rstrip("/").split("sf")[-1],
+        "sf": _sf(),
         "isolated": results,
         "failed": failed,
     }
@@ -509,41 +451,45 @@ def run_isolated(names: list[str], runs: int = 2) -> None:
 
 
 def _slowest_from_history(root: str, n: int) -> list[str]:
-    # Rank by a baseline recorded at the SAME scale factor as the run
-    # we're about to do — a sweep at another SF orders queries by the
-    # wrong costs (mirrors main()'s sf-filtered delta baseline).  A
-    # driver BENCH_r wrapper salvage can be PARTIAL (front-truncated
-    # tail keeps ~20% of the pairs); the local BENCH_HISTORY record of
-    # the same sweep is complete, so rank from whichever same-sf record
-    # covers more queries.
-    sf = os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    ).rstrip("/").split("sf")[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    _, rec = _prev_bench(root, sf=sf_val)
-    q = rec.get("queries") or {}
-    hist = os.path.join(root, "BENCH_HISTORY.jsonl")
-    if os.path.exists(hist):
-        try:
-            with open(hist) as f:
-                lines = [ln for ln in f.read().splitlines() if ln.strip()]
-            for line in reversed(lines):
-                hrec = json.loads(line)
-                hq = hrec.get("queries")
-                if isinstance(hq, dict) and hrec.get("sf") == sf_val:
-                    if len(hq) > len(q):
-                        q = hq
-                    break
-        except (OSError, json.JSONDecodeError):
-            pass
+    """The n slowest queries of the history record at the SF about to
+    run — another SF's sweep orders queries by the wrong costs."""
+    q = _history(root, _sf())[1].get("queries", {})
     return [k for k, _ in sorted(q.items(), key=lambda kv: -kv[1])[:n]]
 
 
+def summary_line(rec: dict) -> str:
+    """The one stdout line of a sweep: the record's summary scalars plus
+    its slowest queries in descending order, as many as fit in
+    SUMMARY_BYTES."""
+    line = {
+        "metric": rec["metric"],
+        "value": rec["value"],
+        "unit": rec["unit"],
+        "sf": rec["sf"],
+        "action": rec["action"],
+        "repeat": rec["repeat"],
+        "n_queries": len(rec["queries"]),
+        "n_excluded": len(EVAL_TIER),
+        # session-drift component (end/start canary ratio): >= gate
+        # means the total is contaminated by harness aging — read
+        # drift_canary in the history record.
+        "drift": rec["drift_canary"]["ratio"],
+        "drift_ok": rec["drift_canary"]["drift_ok"],
+        "prev_total": rec.get("prev_total"),
+        "queries": {},
+    }
+    text = json.dumps(line, separators=(",", ":"))
+    for name, sec in sorted(rec["queries"].items(), key=lambda kv: -kv[1]):
+        line["queries"][name] = sec
+        longer = json.dumps(line, separators=(",", ":"))
+        if len(longer.encode()) > SUMMARY_BYTES:
+            break
+        text = longer
+    return text
+
+
 def main(repeat: int = 1) -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = _sf_dir()
     spark = _bench_session()
 
     import gc
@@ -565,8 +511,7 @@ def main(repeat: int = 1) -> None:
     def run_canary(tag: str) -> dict[str, float]:
         c: dict[str, float] = {}
         for name in DRIFT_CANARY:
-            sec, _ = _time_query(spark, name, sf_dir)
-            c[name] = sec
+            c[name] = _time_query(spark, name, sf_dir)
         print(
             f"# drift canary ({tag}): {round(sum(c.values()), 3)}s",
             file=sys.stderr,
@@ -614,12 +559,12 @@ def main(repeat: int = 1) -> None:
                 )
         pass_total = 0.0
         for name in BENCH_QUERIES:
-            sec, n = _time_query(spark, name, sf_dir)
+            sec = _time_query(spark, name, sf_dir)
             pass_total += sec
             if name not in timings or sec < timings[name]:
                 timings[name] = sec
             print(
-                f"# {name}: {sec:.3f}s ({n} rows)"
+                f"# {name}: {sec:.3f}s"
                 + (f" [pass {pass_i + 1}/{repeat}]" if repeat > 1 else ""),
                 file=sys.stderr,
             )
@@ -639,19 +584,14 @@ def main(repeat: int = 1) -> None:
     c_end = round(sum(canary_end.values()), 3)
     drift_ratio = round(c_end / c_start, 4) if c_start else None
 
-    total = round(sum(timings.values()), 3)
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-
+    sf = _sf()
     out = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_val,
+        "sf": sf,
+        "action": ACTION,
         "repeat": max(1, repeat),
         # Per-pass totals (pass 1 = cold builds): min-of-N totals are
         # build-inclusive since the memo clear, but the cold/warm split
@@ -702,69 +642,24 @@ def main(repeat: int = 1) -> None:
                 if sec > BUDGET_SEC
             },
         },
-        # Documented exclusions ride in the artifact so "which queries
-        # aren't benched, and why" is answerable from the JSON alone.
-        "excluded": dict(BENCH_EXCLUDED),
-        # the code-enforced tier contract (reason + benched
-        # counterparts per eval-tier query; see EVAL_TIER)
+        # The documented exclusions — which queries aren't benched, and
+        # why — with the code-enforced tier contract (reason + benched
+        # counterparts per eval-tier query; see EVAL_TIER).
         "eval_tier": dict(EVAL_TIER),
     }
     root = os.path.dirname(os.path.abspath(__file__))
-    prev_n, prev = _prev_bench(root, sf=sf_val)
-    if prev_n is not None and isinstance(prev.get("queries"), dict):
-        prev_q = prev["queries"]
-        out["prev_round"] = prev_n
-        out["prev_total"] = prev.get("value")
+    out["prev_round"], prev = _prev_bench(root, sf)
+    if prev:
+        out["prev_total"] = prev["value"]
         out["delta_vs_prev"] = {
-            name: round(t - prev_q[name], 3)
+            name: round(t - prev["queries"][name], 3)
             for name, t in timings.items()
-            if name in prev_q
+            if name in prev["queries"]
         }
-    # Local history: the delta baseline that survives even when the
-    # driver's artifact records parsed=null with a truncated tail.
-    try:
-        with open(os.path.join(root, "BENCH_HISTORY.jsonl"), "a") as f:
-            f.write(json.dumps(out) + "\n")
-    except OSError:
-        pass
-    print(json.dumps(out))
-    # Compact per-query line (VERDICT r11 ask #2): the driver's PERF
-    # parser recovered NO per-query timings from either r10's or r11's
-    # stdout (prev_bench_ok/now_bench_ok false, n_common 0) because
-    # the detail record above is one huge line that front-truncates in
-    # the driver's tail window.  This line carries ONLY the timings
-    # dict, compact separators, placed second-to-last so it survives
-    # front-truncation whenever the summary line does (~14 KB for 470
-    # queries vs ~60 KB for the detail record).
-    print(
-        json.dumps(
-            {"per_query": {n: t for n, t in sorted(timings.items())}},
-            separators=(",", ":"),
-        )
-    )
-    # Compact summary LAST: the detail line above can exceed the
-    # driver's stdout-tail window and get front-truncated (r01–r03 all
-    # landed parsed=null); this line always survives, so the round
-    # total comes from the driver's own artifact.  No "queries" key on
-    # purpose — _extract_bench must not mistake it for the detail
-    # record when computing next round's deltas.
-    print(
-        json.dumps(
-            {
-                "summary": True,
-                "metric": "headline_queries_total_runtime",
-                "value": total,
-                "unit": "sec",
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "n_excluded": len(BENCH_EXCLUDED),
-                # session-drift component (end/start canary ratio):
-                # >= gate means the total is contaminated by harness
-                # aging — read drift_canary in the detail record.
-                "drift": drift_ratio,
-            }
-        )
-    )
+    # The one detail record: the next sweep's delta baseline.
+    with open(os.path.join(root, "BENCH_HISTORY.jsonl"), "a") as f:
+        f.write(json.dumps(out) + "\n")
+    print(summary_line(out))
 
 
 if __name__ == "__main__":
@@ -777,7 +672,7 @@ if __name__ == "__main__":
         root = os.path.dirname(os.path.abspath(__file__))
         names = _slowest_from_history(root, int(argv[1]))
         if not names:
-            print("no bench history to rank by", file=sys.stderr)
+            print(f"no {ACTION} sweep at sf{_sf()} to rank by", file=sys.stderr)
             sys.exit(1)
         run_isolated(names)
     elif argv[:1] == ["--repeat"] and len(argv) == 2:

@@ -9,7 +9,7 @@ explicit persist before the branch point, SURVEY §4)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 

@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.functions.market import (
-    month_key,
     weekday_name,
     weekday_sort_key,
 )

@@ -14,11 +14,10 @@ DataFrame aggs (no MLlib dependency in the hot path).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.functions.vectors import (
-    cosine,
     cosine_with_norms,
     dot,
     norm,

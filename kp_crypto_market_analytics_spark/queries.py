@@ -71,22 +71,17 @@ from kp_crypto_market_analytics_spark.functions.market import (
 )
 from kp_crypto_market_analytics_spark.functions.text import (
     LANG_MARKERS,
-    char_shingles,
     fingerprint_md5,
     lang_id_sql,
     lang_scores,
-    occurrence_count,
     quality_score_sql,
     stopword_hits,
     token_count,
 )
-from kp_crypto_market_analytics_spark.functions.vectors import cosine, to_double_array
 from kp_crypto_market_analytics_spark.operators.aggregates import (
     DEC,
     best_and_spread,
-    coverage_stats,
     exact_avg,
-    exact_stddev_samp,
     exact_sum,
     percentile_expr,
     quantile_threshold_filter,

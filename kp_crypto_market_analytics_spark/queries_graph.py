@@ -43,7 +43,7 @@ bounded by the edge count, never by |V|².
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kp_crypto_market_analytics_spark.operators.copurchase import (

@@ -5,10 +5,6 @@ counterparts — so the exclusion is code, not a JSON note."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_eval_tier_contract():
     from bench import BENCH_QUERIES, EVAL_TIER
@@ -160,19 +156,38 @@ def test_median_canary_sample_rejects_single_spike():
     assert not ok and "aged" in reason
 
 
-def test_extract_reads_compact_per_query_line():
-    """VERDICT r11 ask #2: the driver's PERF parser got n_common=0 two
-    rounds running because only the huge detail line carried timings.
-    The compact {"per_query": {...}} line printed before the summary
-    must be recognized as a timings source."""
+def test_summary_line_fits_budget():
+    """A sweep prints ONE line that survives a 2000-char output tail
+    whole — the summary scalars plus the slowest queries, in descending
+    order, as many as fit."""
     import json
 
-    from bench import _extract_bench
+    from bench import ACTION, BENCH_QUERIES, SUMMARY_BYTES, summary_line
 
-    tail = (
-        '{"per_query":{"q_a":1.25,"q_b":0.5}}\n'
-        '{"summary": true, "value": 1.75, "sf": 0.1, "n_queries": 2, '
-        '"n_excluded": 1}'
-    )
-    rec = _extract_bench({"tail": tail})
-    assert rec["queries"] == {"q_a": 1.25, "q_b": 0.5}
+    # seconds count down the registry; the record holds them in name
+    # order, so the line has to sort them
+    slowest = [
+        (n, round(0.001 * (len(BENCH_QUERIES) - i), 3))
+        for i, n in enumerate(BENCH_QUERIES)
+    ]
+    rec = {
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(sec for _, sec in slowest), 3),
+        "unit": "sec",
+        "queries": dict(sorted(slowest)),
+        "sf": 0.1,
+        "action": ACTION,
+        "repeat": 2,
+        "drift_canary": {"ratio": 0.9731, "drift_ok": True},
+        "prev_total": 123.456,
+    }
+    line = summary_line(rec)
+    assert SUMMARY_BYTES <= 1900
+    assert "\n" not in line and len(line.encode()) <= SUMMARY_BYTES
+    out = json.loads(line)
+    top = list(out["queries"].items())
+    # the slowest prefix, descending — and the budget is used, not wasted
+    assert top == slowest[: len(top)]
+    assert len(top) >= 40
+    assert out["value"] == rec["value"] and out["sf"] == 0.1
+    assert out["n_queries"] == 470 and out["drift"] == 0.9731

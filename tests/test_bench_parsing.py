@@ -1,84 +1,77 @@
-"""Bench-wrapper parsing: the driver records BENCH_r{N}.json with a
-front-TRUNCATED stdout tail (every round so far), and the salvage that
-recovers per-query timings from it has regressed twice — r4 advice
-found it could harvest summary-line scalars as fake timings, and the
-r5 fix for that initially rejected the genuine front-truncation case
-(the '"queries": {' marker itself cut off).  These tests pin both
-behaviors plus the fullest-record ranking --isolate-top relies on.
+"""Bench history lookup: deltas (_prev_bench) and the --isolate-top
+ranking (_slowest_from_history) both read the newest BENCH_HISTORY.jsonl
+record at the same SF and timing action — never an off-SF sweep, a
+count-era record (no "action" key) or one without its queries dict.
 """
 
 from __future__ import annotations
 
 import json
 
-from bench import _extract_bench, _prev_bench, _slowest_from_history
+from bench import ACTION, _history, _prev_bench, _slowest_from_history
 
 
-def test_extract_prefers_bare_then_parsed():
-    rec = {"queries": {"q1": 1.0}, "value": 1.0}
-    assert _extract_bench(rec)["queries"] == {"q1": 1.0}
-    assert _extract_bench({"parsed": rec})["queries"] == {"q1": 1.0}
-
-
-def test_extract_full_json_line_in_tail():
-    line = json.dumps({"queries": {"q1": 2.5}, "value": 2.5, "sf": 0.1})
-    assert _extract_bench({"tail": f"noise\n{line}"})["queries"] == {"q1": 2.5}
-
-
-def test_extract_salvages_front_truncated_detail_line():
-    # The r04 shape: the tail starts mid-queries-dict (the marker and
-    # everything before it truncated away) and ends with the compact
-    # summary line.  Salvage must recover the pairs left of the
-    # '}, "sf":' boundary and nothing right of it.
-    tail = (
-        '_forecast": 0.614, "g_pagerank": 3.664, "g_kcore": 2.5}, "sf": 0.1, '
-        '"excluded": {"x": "reason 42"}, "prev_round": 3, "prev_total": 228.2, '
-        '"delta_vs_prev": {"g_pagerank": 0.36}}\n'
-        '{"summary": true, "value": 188.7, "sf": 0.1, "n_queries": 198, '
-        '"n_excluded": 1}'
+def _write_history(tmp_path, records):
+    (tmp_path / "BENCH_HISTORY.jsonl").write_text(
+        "".join(json.dumps(r) + "\n" for r in records)
     )
-    rec = _extract_bench({"tail": tail})
-    assert rec["queries"] == {"g_pagerank": 3.664, "g_kcore": 2.5}
 
 
-def test_extract_rejects_summary_only_tail():
-    # A tail truncated past the queries-dict boundary (only the compact
-    # summary line survived) has nothing safe to salvage — summary
-    # scalars like n_queries must NOT become fake timings.
-    tail = (
-        '{"summary": true, "metric": "headline_queries_total_runtime", '
-        '"value": 188.7, "unit": "sec", "sf": 0.1, "n_queries": 198, '
-        '"n_excluded": 1}'
+def _rec(value, sf=0.1, action=ACTION, queries=None):
+    if queries is None:
+        queries = {"q1": value}
+    rec = {"value": value, "sf": sf, "queries": queries}
+    if action is not None:
+        rec["action"] = action
+    return rec
+
+
+def test_history_skips_unmatched_records(tmp_path):
+    older = _rec(1.0)
+    newest = _rec(2.0)
+    no_queries = _rec(3.0)
+    del no_queries["queries"]
+    _write_history(
+        tmp_path,
+        [
+            older,
+            newest,
+            _rec(4.0, sf=0.01),
+            _rec(5.0, action=None),
+            no_queries,
+            _rec(6.0, queries={}),
+        ],
     )
-    assert _extract_bench({"tail": tail}) is None
+    assert _history(str(tmp_path), 0.1) == (2, newest)
+    assert _history(str(tmp_path), 0.01)[1]["value"] == 4.0
+    assert _history(str(tmp_path), 1.0) == (None, {})
+
+
+def test_history_without_file(tmp_path):
+    assert _history(str(tmp_path), 0.1) == (None, {})
+    assert _prev_bench(str(tmp_path), 0.1) == (None, {})
 
 
 def test_prev_bench_skips_off_sf_records(tmp_path):
-    (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"queries": {"q1": 9.0}, "value": 9.0, "sf": 0.01})
-    )
-    (tmp_path / "BENCH_HISTORY.jsonl").write_text(
-        json.dumps({"queries": {"q1": 1.0}, "value": 1.0, "sf": 0.1}) + "\n"
-    )
-    # sf-filtered lookup must skip the off-sf r01 wrapper and fall back
-    # to the same-sf history record.
-    label, rec = _prev_bench(str(tmp_path), sf=0.1)
-    assert label == "local" and rec["queries"] == {"q1": 1.0}
-    # unfiltered keeps round priority
-    label, rec = _prev_bench(str(tmp_path))
-    assert label == 1
+    _write_history(tmp_path, [_rec(7.5), _rec(9.0, sf=0.01)])
+    label, rec = _prev_bench(str(tmp_path), 0.1)
+    # the record's value becomes the sweep's prev_total
+    assert label == "BENCH_HISTORY.jsonl:1" and rec["value"] == 7.5
 
 
 def test_slowest_ranks_from_fullest_same_sf_record(tmp_path, monkeypatch):
-    # A partial wrapper salvage (2 queries) must lose to the complete
-    # same-sf history record when ranking the slowest queries.
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    (tmp_path / "BENCH_r04.json").write_text(
-        json.dumps({"queries": {"a": 1.0, "b": 0.5}, "value": 1.5, "sf": 0.1})
-    )
+    # The newest same-SF noop record ranks, not a newer sweep at another
+    # SF or an older count-era one.
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
     full = {f"q{i}": float(i) for i in range(10)}
-    (tmp_path / "BENCH_HISTORY.jsonl").write_text(
-        json.dumps({"queries": full, "value": 45.0, "sf": 0.1}) + "\n"
+    _write_history(
+        tmp_path,
+        [
+            _rec(0.0, action=None, queries={"a": 9.0, "b": 8.0}),
+            _rec(45.0, queries=full),
+            _rec(1.0, sf=0.01, queries={"c": 99.0}),
+        ],
     )
-    top = _slowest_from_history(str(tmp_path), 3)
-    assert top == ["q9", "q8", "q7"]
+    assert _slowest_from_history(str(tmp_path), 3) == ["q9", "q8", "q7"]
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf1")
+    assert _slowest_from_history(str(tmp_path), 3) == []

@@ -4,7 +4,6 @@ tools/verify_local.py)."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from tests.conftest import SF_DIR

@@ -75,6 +75,30 @@ def test_shrinking_frame_counts(spark, frame):
     assert count_shrinking_frames(_executed(df)) == 1
 
 
+@pytest.mark.parametrize(
+    "count, window",
+    [
+        (count_global_windows, "row_number() OVER (ORDER BY id)"),
+        (
+            count_shrinking_frames,
+            "first(id) OVER (PARTITION BY g ORDER BY id"
+            " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)",
+        ),
+    ],
+    ids=["global", "shrinking"],
+)
+def test_repeated_window_subtree_counts_once(spark, count, window):
+    """When AQE does not reuse an exchange, the same Window subtree is
+    printed twice (same expression IDs, another tree prefix): it is
+    still one node."""
+    df = spark.range(10).selectExpr("id", "id % 2 AS g").selectExpr(
+        "id", f"{window} AS w"
+    )
+    plan = _executed(df)
+    repeated = "\n".join([plan] + [":  " + line for line in plan.splitlines()])
+    assert count(repeated) == 1
+
+
 def test_running_frame_not_counted(spark):
     df = spark.range(10).selectExpr(
         "id",

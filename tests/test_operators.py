@@ -3,8 +3,6 @@ rolling windows, MAD z-score scope, as-of join, LSH recall)."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -192,7 +190,6 @@ def test_media_decode_plumbing(spark):
 
 def test_media_decode_real_codec_stubbed(spark):
     from kp_crypto_market_analytics_spark.operators.multimodal import decode_media
-    from py4j.protocol import Py4JJavaError
 
     media = spark.createDataFrame([(1, "image", "x")], "media_id long, kind string, payload string")
     with pytest.raises(Exception) as ei:

@@ -63,7 +63,7 @@ def _one_pass(sf_dir: str, cpus: int, rep: int, times: dict) -> None:
     clear_session_materializations(spark)
     spark.catalog.clearCache()
     for name in QUERIES:
-        sec, _ = _time_query(spark, name, sf_dir)
+        sec = _time_query(spark, name, sf_dir)
         t = times.setdefault(cpus, {})
         t[name] = min(t.get(name, float("inf")), sec)
         print(f"# cpus={cpus} rep={rep} {name}: {sec:.3f}s", file=sys.stderr)

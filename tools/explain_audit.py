@@ -353,6 +353,22 @@ def count_uncapped_block_joins(plan: str) -> tuple[int, int]:
     return block, uncapped
 
 
+_WINDOW = re.compile(r"\bWindow(?:InPandas)?\s+\[")
+
+
+def _window_nodes(plan: str) -> set[str]:
+    """Distinct Window node texts in an executed-plan string, each cut
+    from its tree prefix.  A node's text carries its expression IDs
+    (``#NNN``), so the same text printed twice is one node — a subtree
+    repeated because AQE did not reuse its exchange."""
+    nodes = set()
+    for line in plan.splitlines():
+        m = _WINDOW.search(line)
+        if m:
+            nodes.add(line[m.start():])
+    return nodes
+
+
 def count_global_windows(plan: str) -> int:
     """Unpartitioned WindowExec nodes in an executed-plan string.
 
@@ -367,11 +383,10 @@ def count_global_windows(plan: str) -> int:
     counts as global.  Bracket groups are counted top-level (brackets
     nest inside exprs)."""
     n = 0
-    for line in plan.splitlines():
-        m = re.search(r"\bWindow(?:InPandas)?\s+\[", line)
-        if not m or "WindowGroupLimit" in line:
+    for node in _window_nodes(plan):
+        if "WindowGroupLimit" in node:
             continue
-        rest = line[m.end() - 1:]
+        rest = node[node.index("["):]
         depth = 0
         groups: list[list[str]] = [[]]
         for ch in rest:
@@ -408,12 +423,7 @@ def count_shrinking_frames(plan: str) -> int:
     (unboundedPreceding → currentRow/offset) over the reversed
     ordering.  Whole-partition frames (unboundedPreceding →
     unboundedFollowing) do not match."""
-    return sum(
-        1
-        for line in plan.splitlines()
-        if re.search(r"\bWindow(?:InPandas)?\s+\[", line)
-        and _SHRINKING_FRAME.search(line)
-    )
+    return sum(1 for node in _window_nodes(plan) if _SHRINKING_FRAME.search(node))
 
 
 def main() -> None:

@@ -44,7 +44,7 @@ def main() -> None:
     for sf, sf_dir in SF_DIRS:
         spark = _bench_session()
         for name in BENCH_QUERIES:
-            sec, _ = _time_query(spark, name, sf_dir)
+            sec = _time_query(spark, name, sf_dir)
             times[name][sf] = sec
             print(f"# sf{sf} {name}: {sec:.3f}s", file=sys.stderr)
             spark.catalog.clearCache()

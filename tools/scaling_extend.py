@@ -204,7 +204,7 @@ def run(
     for tag, d in (("0.1", SRC), (hi_tag, sf_dir)):
         spark = _bench_session()
         for name in queries:
-            sec, _ = _time_query(spark, name, d)
+            sec = _time_query(spark, name, d)
             times.setdefault(name, {})[tag] = sec
             print(f"# sf{tag} {name}: {sec:.3f}s", file=sys.stderr)
             spark.catalog.clearCache()
