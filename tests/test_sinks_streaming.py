@@ -151,23 +151,22 @@ def test_rate_stream_smoke(spark, tmp_path):
     trades = synthetic_trades_stream(spark, rows_per_second=50)
     target = str(tmp_path / "tbl")
     q = start_candle_stream(trades, target, str(tmp_path / "ckpt"), watermark="10 seconds")
+    # processAllAvailable() never returns on a rate source whose batches
+    # take longer than a second (each batch finds a new second of rows),
+    # so wait for the first committed batch that read rows instead.
     try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            q.processAllAvailable()
-            try:
-                if spark.read.parquet(target).count() > 0:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-        out = spark.read.parquet(target)
-        assert out.count() > 0
-        assert set(out.columns) == {
-            "symbol", "open_time", "open", "high", "low", "close", "volume", "num_trades",
-        }
+        deadline = time.time() + 120
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
+            assert q.isActive, q.exception()
+            assert time.time() < deadline, "no batch with rows within 120 s"
+            time.sleep(0.5)
     finally:
         q.stop()
+    out = spark.read.parquet(target)
+    assert out.count() > 0
+    assert set(out.columns) == {
+        "symbol", "open_time", "open", "high", "low", "close", "volume", "num_trades",
+    }
 
 
 def test_artifact_sinks(spark, tmp_path):
