@@ -8,12 +8,13 @@ unread columns and whole Window operators).
 
 A sweep keeps ONE detail record and prints ONE line.  The detail record
 ({"metric", "value": total_sec, "queries": {name: sec}, "sf", "action",
-the drift canary, the budget table, ...}) is appended to
-BENCH_HISTORY.jsonl.  Stdout gets a single JSON line of at most
-SUMMARY_BYTES bytes — the summary scalars plus the slowest queries in
-descending order — short enough to survive a 2000-char output tail.
-Deltas ("prev_round", "prev_total", "delta_vs_prev") are taken against
-the newest BENCH_HISTORY.jsonl record at the same SF and timing action.
+the drift canary, ...}) is appended to BENCH_HISTORY.jsonl.  Stdout gets
+a single JSON line of at most SUMMARY_BYTES bytes — the summary scalars
+plus the slowest queries in descending order — short enough to survive
+a 2000-char output tail.  Deltas ("prev_round", "prev_total",
+"delta_vs_prev") are taken against the newest BENCH_HISTORY.jsonl
+record at the same SF and timing action.  Which queries are expensive
+is read from those records, never from a hand-kept list.
 
 Modes:
   python bench.py                         # full registry sweep
@@ -35,9 +36,13 @@ number with a per-round delta, so a perf regression anywhere in the
 engine shows up in delta_vs_prev instead of hiding in an un-benched
 query.
 
-Bench runs the PRODUCTION quantile path (approx_percentile sketches via
-APPROX_QUANTILES_CONF) — the oracle gate keeps exact percentile; the
-sketch path is what a 100 TB deployment runs, so it is what we time.
+Bench runs the PRODUCTION sketch paths (approx_percentile and
+approx_count_distinct via APPROX_QUANTILES_CONF / APPROX_DISTINCT_CONF)
+— the oracle gate keeps the exact aggregates; the sketches are what a
+100 TB deployment runs, so they are what we time.  ``_bench_session``
+is the one measurement session: tools/scaling.py and the explain tools
+build theirs through it, so every timing and plan dump sees the plans
+the sweep times.
 """
 
 from __future__ import annotations
@@ -134,180 +139,6 @@ def drift_verdict(ratio: float | None) -> tuple[bool, str | None]:
             " not drift)"
         )
     return True, None
-
-# Per-query bench-budget notes (VERDICT r9 ask #7): the registry grows
-# ~40 queries/round; any query whose min-of-N exceeds BUDGET_SEC must
-# carry an adjudicated build-cost note here, so bench weight is a
-# decision, not an accretion.  tests/test_bench_meta.py enforces
-# coverage against the newest min-of-2 history record; the artifact
-# emits the budget table every run.
-BUDGET_SEC = 3.0
-BUILD_COST_NOTES = {
-    "dedup_clusters": (
-        "bounded-iteration connected components over the near-dup "
-        "graph: 5 localCheckpointed skinny-join rounds — the honest "
-        "price of an iterative algorithm, linear per round"
-    ),
-    "dedup_ngram_jaccard_sampled": (
-        "deterministic quarter-corpus EXACT Jaccard truth — the "
-        "eval-tier counterpart that keeps the uncapped plan's perf "
-        "tracked per-round (bench.py EVAL_TIER contract)"
-    ),
-    "a_bootstrap_ci": (
-        "100 bootstrap resamples as scalar-broadcast BNLJs over a "
-        "100-row frame — floor reached, shuffle-free by design"
-    ),
-    "sim_pq_rerank": (
-        "PQ codebook TRAINING (k-means rounds) + encode + rerank in "
-        "one plan; the build cost is the product being priced"
-    ),
-    "t_corpus_pipeline": (
-        "the 8-stage end-to-end funnel on ONE localCheckpointed scan "
-        "(plan-test-pinned); stages are the workload, not overhead"
-    ),
-    "dedup_semantic": (
-        "embedding-cosine near-dup: LSH prefilter + exact cosine "
-        "verify over 384-dim arrays — arithmetic-dense by nature"
-    ),
-    "p_pruning_sim": (
-        "partition-pruning simulation scans per-file stats for EVERY "
-        "candidate layout (the lever census is the point)"
-    ),
-    "t_naive_bayes": (
-        "per-class token likelihood tables + full-corpus scoring join "
-        "— vocabulary-bounded but two corpus passes by definition"
-    ),
-    "q_abc_pareto": (
-        "|lineitem| exact-decimal revenue aggregate + range-partitioned "
-        "global cumsum: warm history sits 2.4-2.7s; the r12-baseline "
-        "3.016s reading is threshold noise on the one full-fact-table "
-        "decimal aggregate the classification is defined over"
-    ),
-    "dedup_minhash_sig": (
-        "64-hash df-capped signature build (r9 recall fix: 8->64 "
-        "hashes measured recall 0.107 -> 1.0); priced by the "
-        "isolated A/B in BENCH_ISOLATED_r09.json"
-    ),
-    "t_mg_stream_parity": (
-        "3-batch unrolled Misra-Gries parity fold: each emission "
-        "replays the sketch over its full token prefix (the "
-        "sequential-replay contract the stream is pinned to), so the "
-        "corpus is scanned three times by design; hovers at the 3s "
-        "line (3.07s min-of-2 this round, 2.9s in r10)"
-    ),
-    "a_hurst_exponent": (
-        "R/S analysis: per-(type,size,block) rescaled-range windows "
-        "with exact integer folds — multi-window by construction"
-    ),
-    "t_rrf_fusion": (
-        "reciprocal-rank fusion over three retrievers: BM25 + TF-IDF "
-        "+ embedding ranks, each a ranked top-k subplan"
-    ),
-    "dedup_lsh_stream_parity": (
-        "3-batch unrolled incremental-LSH ingest fold (r10 streaming "
-        "near-dup gate): three as-of-batch bucket tables over the "
-        "shared signature store — ~3x dedup_incremental by design"
-    ),
-    "t_countmin_hh": (
-        "count-min heavy hitters with the conservative-update sketch "
-        "unrolled across width*depth cells — sketch build dominates"
-    ),
-    "dedup_incremental": (
-        "incremental LSH ingest vs standing corpus on the 64-hash "
-        "signature table (r9 recall fix pricing; isolated A/B flat)"
-    ),
-    "dedup_lsh_recall": (
-        "recall AUDIT joining LSH candidates against the exact "
-        "df-capped truth pairs — runs the detector AND the truth"
-    ),
-    "t_bpe_merges": (
-        "BPE merge TRAINING: 3 unrolled explode->count->broadcast "
-        "re-segmentation rounds over the vocabulary"
-    ),
-    "t_ndcg_eval": (
-        "retrieval eval over three ranked retrievers (BM25/TF-IDF/"
-        "embedding) with per-query ideal-DCG renormalization — three "
-        "top-k subplans by definition"
-    ),
-    "a_hll_stream_parity": (
-        "3-batch unrolled HLL register-merge fold: per-batch register "
-        "maxima recomputed under the parity contract (the r9 trim "
-        "already cut 4->3 batches; the remaining cost is the fold)"
-    ),
-    "g_wcc": (
-        "connected components to CONVERGENCE (min-label rounds with a "
-        "per-round convergence action) — the dedup_clusters iterative "
-        "cost class on the co-purchase graph; isolated fresh-JVM "
-        "pricing in BENCH_ISOLATED_r11.json third_wave_budget_crossers"
-    ),
-    "ti_cci": (
-        "20-day mean-absolute-deviation self-join on the daily bars — "
-        "bounded by the calendar; isolated cost IMPROVED r10→r11 "
-        "(6.41s → 4.27s fresh-JVM, BENCH_ISOLATED_r11.json); in-sweep "
-        "crossings track registry growth position, not plan changes"
-    ),
-    "a_info_gain_split": (
-        "information-gain split search: entropy fold over EVERY "
-        "candidate split point of the feature grid — the split scan "
-        "is the product being priced (~3.5s fresh-JVM, "
-        "BENCH_ISOLATED_r11.json)"
-    ),
-    "ti_vortex": (
-        "paired VI+/VI- true-range window chains; 2.93s fresh-JVM "
-        "(under budget — BENCH_ISOLATED_r11.json): the in-sweep "
-        "3.3s reading is session position, kept noted for the trend"
-    ),
-    "a_cliffs_delta": (
-        "midrank-identity dominance statistic: two range-partitioned "
-        "global ranks; hovers at the line (2.74s in-sweep, 3.67s "
-        "fresh-JVM incl. session floor — BENCH_ISOLATED_r11.json)"
-    ),
-    "mm_scene_cut": (
-        "Arrow mapInPandas frame-luma extraction + per-video cut "
-        "census; the r11 baseline's 13.8s in-sweep reading (3.7s "
-        "fresh-JVM) flagged the row-loop batch body — vectorized "
-        "with NumPy this round (r11 optimization target)"
-    ),
-    "dedup_minhash_lsh": (
-        "64-hash/16-band LSH candidate generation over the shared "
-        "signature table: band explode + bucket self-join is the "
-        "detector being priced; hovers at the line as the session "
-        "grows (3.60s in-sweep r11 baseline)"
-    ),
-    "dedup_simhash": (
-        "64-bit SimHash build (per-token sign folds across 64 bit "
-        "positions) + banded Hamming candidate join — the bit-fold "
-        "width is the workload; hovers at the line in-session"
-    ),
-    "dq_k_anonymity": (
-        "k-anonymity census: quasi-identifier groupBy at full corpus "
-        "grain plus per-k cumulative census — the QI cardinality is "
-        "the workload (3.09s in-sweep r11 baseline)"
-    ),
-    "g_bipartite_projection": (
-        "customer-part bipartite projection: co-purchase pair "
-        "generation bounded by per-order caps, then pair-weight agg — "
-        "the projection explode is the priced product (3.53s in-sweep "
-        "r11 baseline)"
-    ),
-    "sim_neardup_pairs": (
-        "EXACT all-pairs cosine verification baseline (|V|² 64-dim "
-        "dot products by definition) — the truth twin of the "
-        "LSH/IVF-prefiltered production paths (dedup_semantic, "
-        "sim_ivf_*); r11 wave 7 moved the quadratic stage to blocked "
-        "NumPy (bit-exact, 1.5s -> 0.75s warm); earlier in-sweep "
-        "spikes were sandbox throughput swings (fresh-JVM 3.18s with "
-        "an 8.3s outlier, BENCH_ISOLATED_r11.json)"
-    ),
-    "sim_pq_topk": (
-        "PQ codebook TRAINING (exact-gated Lloyd step) + corpus "
-        "encode + ADC search in ONE plan — the train+encode build is "
-        "the product being priced (same contract as sim_pq_rerank); "
-        "serving amortizes via pq_adc_topk over persisted artifacts "
-        "(build-index CLI); 6.17s fresh-JVM, hovers at the line "
-        "in-sweep (3.27s)"
-    ),
-}
 
 
 BENCH_QUERIES = [q for q in QUERIES if q not in EVAL_TIER]
@@ -625,22 +456,6 @@ def main(repeat: int = 1) -> None:
             # run measured warmup, not drift — both are gate failures.
             "drift_ok": drift_verdict(drift_ratio)[0],
             "drift_reason": drift_verdict(drift_ratio)[1],
-        },
-        # Bench-budget table (r9 ask #7): every over-threshold query
-        # with its adjudicated build-cost note; unnoted overages are a
-        # test failure, so bench weight stays a decision.
-        "budget": {
-            "threshold_sec": BUDGET_SEC,
-            "over": {
-                name: {
-                    "sec": sec,
-                    "note": BUILD_COST_NOTES.get(name),
-                }
-                for name, sec in sorted(
-                    timings.items(), key=lambda kv: -kv[1]
-                )
-                if sec > BUDGET_SEC
-            },
         },
         # The documented exclusions — which queries aren't benched, and
         # why — with the code-enforced tier contract (reason + benched

@@ -260,14 +260,22 @@ def cmd_build_index(args) -> None:
     print(f"wrote {args.kind} index under {out}")
 
 
+def _klines_defaults() -> tuple[str, str, str, str]:
+    """(pairs, tf, days, out) defaults of collect-klines from the
+    environment, shared by the menu and the parser."""
+    return (
+        os.environ.get("PAIRS", "BTCUSDT,ETHUSDT"),
+        os.environ.get("TF", "1m"),
+        os.environ.get("DAYS", "1"),
+        os.environ.get("OUT_DIR", "data"),
+    )
+
+
 def interactive_menu() -> None:
     """Default interactive mode when invoked with no subcommand —
     reference parity with src/main.py:67-109 (menu of price-ticks /
     collect-klines, env-var defaults, tolerant input fallbacks)."""
-    def_pairs = os.environ.get("PAIRS", "BTCUSDT,ETHUSDT")
-    def_tf = os.environ.get("TF", "1m")
-    def_days = os.environ.get("DAYS", "1")
-    def_out = os.environ.get("OUT_DIR", "data")
+    def_pairs, def_tf, def_days, def_out = _klines_defaults()
 
     print("\n=== KP Crypto (Spark) — interactive mode ===")
     print("1) price-ticks  — collect N BTCUSDT ticker prices")
@@ -314,11 +322,12 @@ def build_parser() -> argparse.ArgumentParser:
     t.add_argument("--delay", type=float, default=1.0)
     t.set_defaults(fn=cmd_price_ticks)
 
+    pairs, tf, days, out = _klines_defaults()
     c = sub.add_parser("collect-klines", help="collect candles per pair to CSV")
-    c.add_argument("--pairs", default=os.environ.get("PAIRS", "BTCUSDT,ETHUSDT"))
-    c.add_argument("--tf", default=os.environ.get("TF", "1m"))
-    c.add_argument("--days", type=int, default=int(os.environ.get("DAYS", "1")))
-    c.add_argument("--out", default=os.environ.get("OUT_DIR", "data"))
+    c.add_argument("--pairs", default=pairs)
+    c.add_argument("--tf", default=tf)
+    c.add_argument("--days", type=int, default=int(days))
+    c.add_argument("--out", default=out)
     c.set_defaults(fn=cmd_collect_klines)
 
     l = sub.add_parser("load", help="upsert klines CSVs into the candle table")

@@ -190,7 +190,8 @@ def weekday_hour_pivot(df: DataFrame, ts: str, value: str) -> DataFrame:
 # column).  Default stays exact so the DuckDB oracle gate compares
 # bit-for-bit; bench.py sets it to exercise the production path.
 APPROX_QUANTILES_CONF = "spark.kp_crypto.approxQuantiles"
-APPROX_QUANTILES_ACCURACY_CONF = "spark.kp_crypto.approxQuantiles.accuracy"
+# approx_percentile accuracy (relative rank error ~1/accuracy).
+APPROX_QUANTILES_ACCURACY = 10000
 
 
 def percentile_expr(df: DataFrame, value_expr: str, q: float) -> Column:
@@ -198,8 +199,9 @@ def percentile_expr(df: DataFrame, value_expr: str, q: float) -> Column:
     (sketch, scale path) per the session conf above."""
     conf = df.sparkSession.conf
     if str(conf.get(APPROX_QUANTILES_CONF, "false")).lower() == "true":
-        acc = int(conf.get(APPROX_QUANTILES_ACCURACY_CONF, "10000"))
-        return F.expr(f"approx_percentile({value_expr}, {q}, {acc})")
+        return F.expr(
+            f"approx_percentile({value_expr}, {q}, {APPROX_QUANTILES_ACCURACY})"
+        )
     return F.expr(f"percentile({value_expr}, {q})")
 
 
@@ -342,7 +344,8 @@ def merge_partial_rollups(parts: DataFrame, keys: list[str]) -> DataFrame:
 
 
 APPROX_DISTINCT_CONF = "spark.kp_crypto.approxDistinct"
-APPROX_DISTINCT_RSD_CONF = "spark.kp_crypto.approxDistinct.rsd"
+# HyperLogLog++ relative standard deviation of approx_count_distinct.
+APPROX_DISTINCT_RSD = 0.02
 
 
 def distinct_count_expr(df: DataFrame, col: str | Column) -> Column:
@@ -359,6 +362,5 @@ def distinct_count_expr(df: DataFrame, col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     conf = df.sparkSession.conf
     if str(conf.get(APPROX_DISTINCT_CONF, "false")).lower() == "true":
-        rsd = float(conf.get(APPROX_DISTINCT_RSD_CONF, "0.02"))
-        return F.approx_count_distinct(c, rsd)
+        return F.approx_count_distinct(c, APPROX_DISTINCT_RSD)
     return F.countDistinct(c)

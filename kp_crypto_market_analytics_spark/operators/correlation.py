@@ -10,7 +10,7 @@ aggregation of corr() per pair.  For S symbols that is S² pairs of
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 

@@ -272,17 +272,6 @@ def t_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IEEE trap), and the drawn packs are the target_s first packs in
     # a deterministic hash shuffle (hash64(source#shard#pack#epmix)),
     # capped by availability.  Same checkpointed lineage — no new scan.
-    #
-    # KP_CORPUS_PIPELINE_STAGES=7 (VERDICT r10 ask #1) elides this
-    # stage so the isolated fresh-JVM A/B (bench.py --one under each
-    # env) can PRICE it: the r10 bench recorded +52% on this query and
-    # the stage-8 addition was the unpriced suspect.  Pricing knob
-    # ONLY — the registry/oracle path always runs the default 8; the
-    # stage-7 config emits the three stage-8 columns as zeros so the
-    # output schema (and thus the timed sink work) is identical.
-    import os as _os
-
-    _stages = int(_os.environ.get("KP_CORPUS_PIPELINE_STAGES", "8"))
 
     def cnt(c):  # noqa: ANN001
         return F.sum(F.when(F.col(c), 1).otherwise(0))
@@ -319,58 +308,57 @@ def t_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = weighted.agg(F.sum("w").alias("t_w"))
 
-    out = weighted.crossJoin(F.broadcast(tot))
-    if _stages >= 8:
-        pack_lvl = packs.groupBy("source", "shard", "pack_id").agg(
-            F.sum("ntok").cast("long").alias("pack_tokens")
-        )
-        # stage-8 epoch targets + deterministic draw
-        b_packs = pack_census.agg(
-            F.coalesce(F.sum("n_train_packs"), F.lit(0))
+    pack_lvl = packs.groupBy("source", "shard", "pack_id").agg(
+        F.sum("ntok").cast("long").alias("pack_tokens")
+    )
+    # stage-8 epoch targets + deterministic draw
+    b_packs = pack_census.agg(
+        F.coalesce(F.sum("n_train_packs"), F.lit(0))
+        .cast("long")
+        .alias("b_packs")
+    )
+    wm = F.round(F.col("w") * F.lit(1_000_000), 0).cast("long")
+    twm = F.round(F.col("t_w") * F.lit(1_000_000), 0).cast("long")
+    target = (
+        weighted.crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(b_packs))
+        .select(
+            "source",
+            F.when(
+                twm != 0,
+                F.call_function("div", wm * F.col("b_packs"), twm),
+            )
+            .otherwise(F.lit(0))
             .cast("long")
-            .alias("b_packs")
+            .alias("epoch_target_packs"),
         )
-        wm = F.round(F.col("w") * F.lit(1_000_000), 0).cast("long")
-        twm = F.round(F.col("t_w") * F.lit(1_000_000), 0).cast("long")
-        target = (
-            weighted.crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(b_packs))
-            .select(
-                "source",
-                F.when(
-                    twm != 0,
-                    F.call_function("div", wm * F.col("b_packs"), twm),
-                )
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("epoch_target_packs"),
-            )
+    )
+    eh = hash64(
+        F.concat(
+            F.col("source"),
+            F.lit("#"),
+            F.col("shard").cast("string"),
+            F.lit("#"),
+            F.col("pack_id").cast("string"),
+            F.lit("#epmix"),
         )
-        eh = hash64(
-            F.concat(
-                F.col("source"),
-                F.lit("#"),
-                F.col("shard").cast("string"),
-                F.lit("#"),
-                F.col("pack_id").cast("string"),
-                F.lit("#epmix"),
-            )
+    )
+    we = Window.partitionBy("source").orderBy(eh, "shard", "pack_id")
+    esel = (
+        pack_lvl.withColumn("rn", F.row_number().over(we))
+        .join(target, "source")
+        .where(F.col("rn") <= F.col("epoch_target_packs"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_epoch_packs"),
+            F.sum("pack_tokens").cast("long").alias("epoch_tokens"),
         )
-        we = Window.partitionBy("source").orderBy(eh, "shard", "pack_id")
-        esel = (
-            pack_lvl.withColumn("rn", F.row_number().over(we))
-            .join(target, "source")
-            .where(F.col("rn") <= F.col("epoch_target_packs"))
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_epoch_packs"),
-                F.sum("pack_tokens").cast("long").alias("epoch_tokens"),
-            )
-        )
-        out = out.join(target, "source", "left").join(esel, "source", "left")
-    else:  # stage-7 pricing config: same schema, stage-8 work elided
-        for c in ("epoch_target_packs", "n_epoch_packs", "epoch_tokens"):
-            out = out.withColumn(c, F.lit(None).cast("long"))
+    )
+    out = (
+        weighted.crossJoin(F.broadcast(tot))
+        .join(target, "source", "left")
+        .join(esel, "source", "left")
+    )
     return (
         out
         .select(

@@ -448,9 +448,7 @@ def write_figures(
                 top,
                 "open_time",
                 "abs_ret",
-                base=thin_evenly(
-                    d.select("open_time", "abs_ret"), "open_time", cap=100_000
-                ),
+                base=dthin.select("open_time", "abs_ret"),
                 path=out("anomalies_absret.png"),
             )
             # Deterministic 5000-row sample (the reference's seeded

@@ -428,19 +428,12 @@ def count_shrinking_frames(plan: str) -> int:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from bench import BENCH_QUERIES
+    from bench import BENCH_QUERIES, _bench_session
     from kp_crypto_market_analytics_spark.queries import QUERIES
-    from kp_crypto_market_analytics_spark.session import get_spark
 
-    spark = get_spark("explain-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Audit the PRODUCTION quantile path (same conf bench.py runs):
-    # approx_percentile sketches, no single-state global percentile.
-    from kp_crypto_market_analytics_spark.operators.aggregates import (
-        APPROX_QUANTILES_CONF,
-    )
-
-    spark.conf.set(APPROX_QUANTILES_CONF, "true")
+    # Audit the plans the bench times: its session runs the production
+    # sketch paths (approx quantiles and approx distinct counts).
+    spark = _bench_session()
 
     lines = [
         "# EXPLAINS — executed-plan audit of the bench queries",

@@ -4,8 +4,8 @@ Usage: python tools/explain_dump.py <tag> <suffix> <query> [query ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt for each query (the judge's
 plan-evidence contract: `_before`/`_after` pairs per touched query).
-Runs on the bench session config (approx-sketch confs on, same as
-bench.py) so the captured plan is the plan the bench times.
+Runs on the bench's own session (``bench._bench_session``) at the
+bench's SF dir, so the captured plan is the plan the bench times.
 """
 
 from __future__ import annotations
@@ -19,19 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from kp_crypto_market_analytics_spark.operators.aggregates import (
-        APPROX_DISTINCT_CONF,
-        APPROX_QUANTILES_CONF,
-    )
+    from bench import _bench_session, _sf_dir
     from kp_crypto_market_analytics_spark.queries import QUERIES
-    from kp_crypto_market_analytics_spark.session import get_spark
 
-    spark = get_spark("explain-dump")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set(APPROX_QUANTILES_CONF, "true")
-    spark.conf.set(APPROX_DISTINCT_CONF, "true")
+    spark = _bench_session()
+    sf_dir = _sf_dir()
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
