@@ -185,23 +185,48 @@ def hash64_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
+def _shingle_norm(c: Column) -> Column:
+    """Whitespace runs to one space, trimmed, lowercased."""
+    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+
+
 def char_shingles(text: Column | str, k: int = 5) -> Column:
     """Array of all k-char shingles (positions 1..len-k+1) of the
-    normalized text.  Expressed with sequence+transform — no explode yet,
-    callers explode lazily so Catalyst can pipeline it."""
+    normalized text; text shorter than k (or empty) gives one shingle,
+    the whole text, and NULL gives ``[NULL]``.
+
+    The normalized text never enters a lambda: Spark does not hoist an
+    outer expression out of a ``transform`` body, so a per-position
+    ``substr(norm, i, k)`` re-normalizes the whole document for every
+    shingle (quadratic in its length).  One regex pass instead captures
+    the k characters ahead of every position: ``(?s)`` lets ``.`` match
+    line separators such as U+2028, and the negative lookahead skips the
+    low half of a surrogate pair, where Java's matcher would otherwise
+    start a second, broken shingle inside each supplementary character.
+    No explode yet: callers explode lazily so Catalyst can pipeline it."""
     c = F.col(text) if isinstance(text, str) else text
-    norm = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))),
-        lambda i: norm.substr(i, F.lit(k)),
+    norm = _shingle_norm(c)
+    ahead = F.regexp_extract_all(
+        norm, F.lit(f"(?s)(?![\\uDC00-\\uDFFF])(?=(.{{{k}}}))"), F.lit(1)
     )
+    return F.when(F.length(norm) >= k, ahead).otherwise(F.array(norm))
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Array of n-word shingles (token n-grams) of normalized text."""
+    """Array of n-word shingles (token n-grams) of normalized text;
+    fewer than n tokens give one shingle, the tokens joined.
+
+    Shingle j is token j, j+1, ... joined: n slices of the one token
+    array, each shifted by one, zipped pairwise.  The lambdas see only
+    their own elements, so the text is normalized and split once per
+    row (see :func:`char_shingles` for why that matters)."""
     c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.lower(F.trim(F.regexp_replace(c, r"\s+", " "))), " ")
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - F.lit(n), F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    toks = F.split(_shingle_norm(c), " ")
+    m = F.size(toks) - F.lit(n - 1)
+    width = F.greatest(m, F.lit(0))
+    grams = F.slice(toks, 1, width)
+    for j in range(2, n + 1):
+        grams = F.zip_with(
+            grams, F.slice(toks, j, width), lambda a, b: F.concat(a, F.lit(" "), b)
+        )
+    return F.when(m >= 1, grams).otherwise(F.array(F.concat_ws(" ", toks)))

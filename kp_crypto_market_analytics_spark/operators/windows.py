@@ -4,6 +4,14 @@ All are single-shuffle plans: Spark partitions by the window key once,
 sorts within partitions, and evaluates every frame in that pass.
 Ordering keys always include a unique tiebreaker so results are
 deterministic under ties (pandas positional semantics made explicit).
+
+A ``.over(w)`` Column is one window aggregate per *reference*: the
+analyzer extracts every occurrence as its own ``_weN`` expression and
+never dedupes them, so a moment used in five places of a formula is
+computed five times per row (a sliding ROWS frame re-aggregates the
+frame for each).  Formulas therefore select each window aggregate once
+as a ``__``-prefixed column (``withColumns``) and read it through
+``F.col`` in a following projection.
 """
 
 from __future__ import annotations
@@ -115,7 +123,8 @@ def sessionize(
     pinned by tests/test_sinks_streaming.py)."""
     order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order)
-    prev = F.lag(ts).over(w)
+    df = df.withColumn("__prev", F.lag(ts).over(w))
+    prev = F.col("__prev")
     new_session = F.when(
         prev.isNull() | (F.unix_millis(F.col(ts)) - F.unix_millis(prev) > gap_seconds * 1000),
         1,
@@ -123,7 +132,7 @@ def sessionize(
     running = w.rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("__new", new_session).withColumn(
         "session_id", F.sum("__new").over(running)
-    ).drop("__new")
+    ).drop("__new", "__prev")
 
 
 def ewma_grouped(

@@ -659,13 +659,18 @@ def w2_rolling_std(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-59, 0)
     )
     v = F.col("value")
-    n = F.count("value").over(w)
-    sx = F.sum(v.cast(DEC)).over(w).cast("double")
-    sx2 = F.sum(v.cast(DEC) * v.cast(DEC)).over(w).cast("double")
+    events = t["events"].withColumns(
+        {
+            "__n": F.count("value").over(w),
+            "__sx": F.sum(v.cast(DEC)).over(w).cast("double"),
+            "__sx2": F.sum(v.cast(DEC) * v.cast(DEC)).over(w).cast("double"),
+        }
+    )
+    n, sx, sx2 = F.col("__n"), F.col("__sx"), F.col("__sx2")
     std = F.when(
         n >= 30, F.sqrt(F.greatest((sx2 - sx * sx / n) / (n - F.lit(1)), F.lit(0.0)))
     )
-    return t["events"].select(
+    return events.select(
         "event_id", "event_type", "value", std.alias("rolling_std")
     )
 
@@ -689,9 +694,10 @@ def w3_forward_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     guards (binance_analysis.py:404-415); log output rounded 6."""
     t = load_tables(spark, sf_dir, ["events"])
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    led = F.lead("value", 5).over(w)
+    events = t["events"].withColumn("__led", F.lead("value", 5).over(w))
+    led = F.col("__led")
     ret = F.when((F.col("value") > 0) & (led > 0), F.round(F.log(led / F.col("value")), 6))
-    return t["events"].select("event_id", "event_type", "value", ret.alias("fwd_ret_5"))
+    return events.select("event_id", "event_type", "value", ret.alias("fwd_ret_5"))
 
 
 W3_SQL = """

@@ -2068,12 +2068,16 @@ def w3_multi_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     cols = ["event_id", "event_type", "value"]
-    out = t["events"].select(*cols, *[
+    events = t["events"].withColumns(
+        {f"__lead{k}": F.lead("value", k).over(w) for k in (5, 15, 60)}
+    )
+    leads = [F.col(f"__lead{k}") for k in (5, 15, 60)]
+    out = events.select(*cols, *[
         F.when(
-            (F.col("value") > 0) & (F.lead("value", k).over(w) > 0),
-            F.round(F.log(F.lead("value", k).over(w) / F.col("value")), 6),
+            (F.col("value") > 0) & (led > 0),
+            F.round(F.log(led / F.col("value")), 6),
         ).alias(f"fwd_ret_{k}")
-        for k in (5, 15, 60)
+        for k, led in zip((5, 15, 60), leads)
     ])
     return out.orderBy("event_id")
 
@@ -2110,7 +2114,8 @@ def e3_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     e = t["events"]
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    prev = F.lag("value").over(w)
+    e = e.withColumn("__prev", F.lag("value").over(w))
+    prev = F.col("__prev")
     log_ret = F.when(
         (F.col("value") > 0) & (prev > 0), F.round(F.log(F.col("value")) - F.log(prev), 6)
     )
@@ -2131,9 +2136,14 @@ def e3_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("event_type").orderBy("ts", "event_id").rowsBetween(-59, 0)
     )
     dec = F.col("log_ret").cast("decimal(18,6)")
-    n = F.count("log_ret").over(v)
-    sx = F.sum(dec).over(v).cast("double")
-    sx2 = F.sum(dec * dec).over(v).cast("double")
+    feat = feat.withColumns(
+        {
+            "__n": F.count("log_ret").over(v),
+            "__sx": F.sum(dec).over(v).cast("double"),
+            "__sx2": F.sum(dec * dec).over(v).cast("double"),
+        }
+    )
+    n, sx, sx2 = F.col("__n"), F.col("__sx"), F.col("__sx2")
     vol = F.when(
         n >= 30,
         F.round(
@@ -2142,7 +2152,7 @@ def e3_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ),
     )
-    feat = feat.withColumn("vol_60", vol)
+    feat = feat.withColumn("vol_60", vol).drop("__n", "__sx", "__sx2")
 
     # Exact medians for oracle parity; approx_percentile sketches under
     # APPROX_QUANTILES_CONF (bench's 100 TB path — no single agg state
@@ -2240,11 +2250,12 @@ def e4_large_trade_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     e = t["events"]
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    led = F.lead("value", 5).over(w)
-    with_ret = e.withColumn(
+    with_ret = e.withColumn("__led", F.lead("value", 5).over(w))
+    led = F.col("__led")
+    with_ret = with_ret.withColumn(
         "fwd_ret_5",
         F.when((F.col("value") > 0) & (led > 0), F.round(F.log(led / F.col("value")), 6)),
-    )
+    ).drop("__led")
     from kp_crypto_market_analytics_spark.operators.aggregates import percentile_expr
 
     thresh = e.agg(percentile_expr(e, "value", 0.995).alias("thr"))
@@ -2883,14 +2894,17 @@ def w_ewma_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame evaluation."""
     t = load_tables(spark, sf_dir, ["events"])
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    lags = [F.col("value") if j == 0 else F.lag("value", j).over(w) for j in range(8)]
+    events = t["events"].withColumns(
+        {f"__lag{j}": F.lag("value", j).over(w) for j in range(1, 8)}
+    )
+    lags = [F.col("value")] + [F.col(f"__lag{j}") for j in range(1, 8)]
     num: Column = F.lit(0.0)
     den: Column = F.lit(0.0)
     for j, lg in enumerate(lags):
         num = num + F.coalesce(lg, F.lit(0.0)) * F.lit(_EWMA_W[j])
         den = den + F.when(lg.isNotNull(), F.lit(_EWMA_W[j])).otherwise(F.lit(0.0))
     return (
-        t["events"]
+        events
         .select(
             "event_id",
             "event_type",
@@ -4758,18 +4772,32 @@ def w_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("b").rowsBetween(-23, Window.currentRow)
     dx = F.col("x").cast("decimal(18,6)")
     dy = F.col("y").cast("decimal(18,6)")
-    n = F.count("x").over(w).cast("double")
-    sx = F.sum(dx).over(w).cast("double")
-    sy = F.sum(dy).over(w).cast("double")
-    sxy = F.sum((F.col("x") * F.col("y")).cast("decimal(28,12)")).over(w).cast("double")
-    sxx = F.sum((F.col("x") * F.col("x")).cast("decimal(28,12)")).over(w).cast("double")
-    syy = F.sum((F.col("y") * F.col("y")).cast("decimal(28,12)")).over(w).cast("double")
+    pair = pair.withColumns(
+        {
+            "__n": F.count("x").over(w).cast("double"),
+            "__sx": F.sum(dx).over(w).cast("double"),
+            "__sy": F.sum(dy).over(w).cast("double"),
+            "__sxy": F.sum((F.col("x") * F.col("y")).cast("decimal(28,12)")).over(w).cast("double"),
+            "__sxx": F.sum((F.col("x") * F.col("x")).cast("decimal(28,12)")).over(w).cast("double"),
+            "__syy": F.sum((F.col("y") * F.col("y")).cast("decimal(28,12)")).over(w).cast("double"),
+            "__rn": F.row_number().over(Window.orderBy("b")),
+        }
+    )
+    n, sx, sy, sxy, sxx, syy, rn = (
+        F.col("__n"),
+        F.col("__sx"),
+        F.col("__sy"),
+        F.col("__sxy"),
+        F.col("__sxx"),
+        F.col("__syy"),
+        F.col("__rn"),
+    )
     varx = n * sxx - sx * sx
     vary = n * syy - sy * sy
     corr = F.when((varx > 0) & (vary > 0), (n * sxy - sx * sy) / F.sqrt(varx * vary))
     out = pair.select(
         F.to_timestamp(F.col("b") * 3600).alias("bucket"),
-        F.row_number().over(Window.orderBy("b")).alias("rn"),
+        rn.alias("rn"),
         F.round(corr, 6).alias("corr_24h"),
     )
     return out.where(F.col("rn") >= 24).select("bucket", "corr_24h").orderBy("bucket")

@@ -69,14 +69,8 @@ def ti_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared window sort (the w2_rolling_std machinery, re-pointed)."""
     t = load_tables(spark, sf_dir, ["events"])
     w = _w().rowsBetween(-19, 0)
-    mid, up, lo = bollinger(F.col("value"), w, min_periods=20, k=2.0)
-    return t["events"].select(
-        "event_id",
-        "event_type",
-        "value",
-        mid.alias("bb_mid"),
-        up.alias("bb_upper"),
-        lo.alias("bb_lower"),
+    return bollinger(t["events"], F.col("value"), w, min_periods=20, k=2.0).select(
+        "event_id", "event_type", "value", "bb_mid", "bb_upper", "bb_lower"
     )
 
 
@@ -109,11 +103,8 @@ def ti_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame = w.rowsBetween(-13, 0)
     d = price_diff(F.col("value"), w)
     df = t["events"].withColumn("d", d)
-    return df.select(
-        "event_id",
-        "event_type",
-        "value",
-        cutler_rsi(F.col("d"), frame, periods=14).alias("rsi14"),
+    return cutler_rsi(df, F.col("d"), frame, periods=14, out="rsi14").select(
+        "event_id", "event_type", "value", "rsi14"
     )
 
 
@@ -150,18 +141,25 @@ def ti_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal frame ride the ONE shared window sort."""
     t = load_tables(spark, sf_dir, ["events"])
     w = _w()
-    fast = truncated_ema(F.col("value"), w, _MACD_FAST, _MACD_LAGS)
-    slow = truncated_ema(F.col("value"), w, _MACD_SLOW, _MACD_LAGS)
-    macd = F.round(fast - slow, 6)
-    df = t["events"].select("event_id", "event_type", "ts", "value", macd.alias("macd"))
-    sig = smoothed(F.col("macd"), _w().rowsBetween(-8, 0))
+    df = t["events"].select("event_id", "event_type", "ts", "value")
+    df = truncated_ema(
+        df, F.col("value"), w, _MACD_LAGS, {"__fast": _MACD_FAST, "__slow": _MACD_SLOW}
+    )
+    df = df.select(
+        "event_id",
+        "event_type",
+        "ts",
+        "value",
+        F.round(F.col("__fast") - F.col("__slow"), 6).alias("macd"),
+    )
+    df = smoothed(df, F.col("macd"), _w().rowsBetween(-8, 0), "signal")
     return df.select(
         "event_id",
         "event_type",
         "value",
         "macd",
-        sig.alias("signal"),
-        F.round(F.col("macd") - sig, 6).alias("histogram"),
+        "signal",
+        F.round(F.col("macd") - F.col("signal"), 6).alias("histogram"),
     )
 
 
@@ -205,13 +203,8 @@ def ti_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     running max — exact, order-free)."""
     t = load_tables(spark, sf_dir, ["events"])
     w_cum = _w().rowsBetween(Window.unboundedPreceding, 0)
-    peak, dd = drawdown(F.col("value"), w_cum)
-    return t["events"].select(
-        "event_id",
-        "event_type",
-        "value",
-        peak.alias("peak"),
-        dd.alias("drawdown"),
+    return drawdown(t["events"], F.col("value"), w_cum).select(
+        "event_id", "event_type", "value", "peak", "drawdown"
     )
 
 
@@ -233,10 +226,10 @@ def ti_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums agree across engines)."""
     t = load_tables(spark, sf_dir, ["events"])
     frame = _w().rowsBetween(-13, 0)
-    k = stochastic_k(F.col("value"), frame, periods=14)
-    df = t["events"].select("event_id", "event_type", "ts", "value", k.alias("pct_k"))
-    d = smoothed(F.col("pct_k"), _w().rowsBetween(-2, 0))
-    return df.select("event_id", "event_type", "value", "pct_k", d.alias("pct_d"))
+    df = t["events"].select("event_id", "event_type", "ts", "value")
+    df = stochastic_k(df, F.col("value"), frame, periods=14, out="pct_k")
+    df = smoothed(df, F.col("pct_k"), _w().rowsBetween(-2, 0), "pct_d")
+    return df.select("event_id", "event_type", "value", "pct_k", "pct_d")
 
 
 TI_STOCH_SQL = f"""
@@ -276,8 +269,13 @@ def ti_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = t["events"].withColumn("d", F.to_date("ts")).withColumn("vol", _k_col())
     notional = (F.col("value").cast(DEC) * F.col("vol")).alias("notional")
-    cum_not = F.sum(notional).over(w)
-    cum_vol = F.sum("vol").over(w)
+    df = df.withColumns(
+        {
+            "__cum_not": F.sum(notional).over(w),
+            "__cum_vol": F.sum("vol").over(w),
+        }
+    )
+    cum_not, cum_vol = F.col("__cum_not"), F.col("__cum_vol")
     return df.select(
         "event_id",
         "event_type",
@@ -322,8 +320,8 @@ def ti_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     w = _w()
     d = price_diff(F.col("value"), w)
-    step = obv_step(d, F.coalesce(_k_col(), F.lit(0)))
-    df = t["events"].withColumn("step", step)
+    df = t["events"].withColumn("d", d)
+    df = df.withColumn("step", obv_step(F.col("d"), F.coalesce(_k_col(), F.lit(0))))
     obv = F.sum("step").over(_w().rowsBetween(Window.unboundedPreceding, 0))
     return df.select("event_id", "event_type", "value", obv.alias("obv"))
 
@@ -366,16 +364,16 @@ def ti_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _w()
     frame = w.rowsBetween(-13, 0)
     d = price_diff(F.col("value"), w)
-    df = t["events"].withColumn("d", d)
-    rsi = cutler_rsi(F.col("d"), frame, periods=14)
-    led = F.lead("value").over(w)
+    df = cutler_rsi(t["events"].withColumn("d", d), F.col("d"), frame, periods=14, out="rsi")
+    df = df.withColumn("__led", F.lead("value").over(w))
+    led = F.col("__led")
     fwd = F.when(
         (F.col("value") > 0) & (led > 0), F.round(F.log(led / F.col("value")), 6)
     )
     df = df.select(
         "event_id",
         "event_type",
-        rsi.alias("rsi"),
+        "rsi",
         fwd.alias("fwd_ret"),
     )
     pos = (
@@ -698,14 +696,26 @@ def w_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = _w().rowsBetween(Window.unboundedPreceding, 0)
     zero = F.lit(0).cast(DEC)
     df = df.withColumn("zp", z_pos).withColumn("zn", z_neg)
-    rs_p = F.sum("zp").over(cum)
-    rs_n = F.sum("zn").over(cum)
+    df = df.withColumns(
+        {
+            "__rs_p": F.sum("zp").over(cum),
+            "__rs_n": F.sum("zn").over(cum),
+        }
+    )
+    rs_p, rs_n = F.col("__rs_p"), F.col("__rs_n")
+    df = df.withColumns(
+        {
+            "__lo_p": F.min(rs_p).over(cum),
+            "__lo_n": F.min(rs_n).over(cum),
+        }
+    )
+    lo_p, lo_n = F.col("__lo_p"), F.col("__lo_n")
     # Subtract in DOUBLE on both engines (DuckDB silently promotes
     # wide-decimal subtraction to DOUBLE, so a decimal-exact difference
     # is not portable; identical decimal→double operands subtracted in
     # IEEE are): RS and its running min are still decimal-exact.
-    cp = rs_p.cast("double") - F.least(zero, F.min(rs_p).over(cum)).cast("double")
-    cn = rs_n.cast("double") - F.least(zero, F.min(rs_n).over(cum)).cast("double")
+    cp = rs_p.cast("double") - F.least(zero, lo_p).cast("double")
+    cn = rs_n.cast("double") - F.least(zero, lo_n).cast("double")
     h = F.lit(_CUSUM_H) * F.col("sigma")
     return df.select(
         "event_id",
@@ -996,12 +1006,9 @@ def w_des_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange."""
     t = load_tables(spark, sf_dir, ["events"])
     w = _w()
-    s1 = F.round(truncated_ema(F.col("value"), w, _DES_ALPHA, _DES_LAGS), 6)
-    base = t["events"].select(
-        "event_id", "event_type", "ts", "value", s1.alias("s1")
-    )
-    s2 = F.round(truncated_ema(F.col("s1"), _w(), _DES_ALPHA, _DES_LAGS), 6)
-    staged = base.select("event_id", "event_type", "ts", "value", "s1", s2.alias("s2"))
+    staged = t["events"].select("event_id", "event_type", "ts", "value")
+    for src, out in (("value", "s1"), ("s1", "s2")):
+        staged = truncated_ema(staged, F.col(src), w, _DES_LAGS, {out: _DES_ALPHA}, 6)
     level = F.lit(2.0) * F.col("s1") - F.col("s2")
     trend = F.lit(_DES_ALPHA / (1.0 - _DES_ALPHA)) * (F.col("s1") - F.col("s2"))
     return staged.select(

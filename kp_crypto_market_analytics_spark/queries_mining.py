@@ -649,8 +649,13 @@ def w_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-12, 11)
     )
     # Exact MA of 6-dp values: decimal sum → int64 micro → half-away.
-    msum = F.sum(F.col("v").cast("decimal(18,6)")).over(wt)
-    mcnt = F.count(F.lit(1)).over(wt)
+    hourly = hourly.withColumns(
+        {
+            "__msum": F.sum(F.col("v").cast("decimal(18,6)")).over(wt),
+            "__mcnt": F.count(F.lit(1)).over(wt),
+        }
+    )
+    msum, mcnt = F.col("__msum"), F.col("__mcnt")
     micro = (msum * 1000000).cast("long")
     trend_q = F.call_function(
         "div", F.lit(2) * F.abs(micro) + mcnt, F.lit(2) * mcnt

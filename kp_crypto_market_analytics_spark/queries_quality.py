@@ -1488,10 +1488,15 @@ def w_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     ob = F.when(F.col("avg_value").isNotNull(), F.col("b"))
-    pv = F.last("avg_value", ignorenulls=True).over(wp)
-    pb = F.last(ob, ignorenulls=True).over(wp)
-    nv = F.last("avg_value", ignorenulls=True).over(wn)
-    nb = F.last(ob, ignorenulls=True).over(wn)
+    j = j.withColumns(
+        {
+            "__pv": F.last("avg_value", ignorenulls=True).over(wp),
+            "__pb": F.last(ob, ignorenulls=True).over(wp),
+            "__nv": F.last("avg_value", ignorenulls=True).over(wn),
+            "__nb": F.last(ob, ignorenulls=True).over(wn),
+        }
+    )
+    pv, pb, nv, nb = F.col("__pv"), F.col("__pb"), F.col("__nv"), F.col("__nb")
     # Exact integer micro-unit interpolation: pv/nv are 6-dp values, so
     # pv + (nv−pv)·gap_frac lands on .5e-6 rounding ties STRUCTURALLY
     # (e.g. odd-micro diff halved); double round() then diverges

@@ -580,11 +580,11 @@ def ti_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
     masked until 14 full (lagged) bars and a nonzero TR sum."""
     from kp_crypto_market_analytics_spark.queries_r9 import (
         _daily_bars_df,
-        _true_range,
+        _with_true_range,
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir).withColumn("trm", _true_range())
+    bars = _with_true_range(_daily_bars_df(spark, sf_dir))
     w = _wd()
     vmp = F.abs(F.col("hm") - F.lag("lm").over(w))
     vmm = F.abs(F.col("lm") - F.lag("hm").over(w))
@@ -592,10 +592,20 @@ def ti_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "day", "trm", vmp.alias("vmp"), vmm.alias("vmm")
     )
     wn = _wd().rowsBetween(-(_VTX_N - 1), 0)
-    n_vm = F.count("vmp").over(wn)
-    s_tr = F.sum("trm").over(wn)
-    s_vp = F.sum("vmp").over(wn)
-    s_vm = F.sum("vmm").over(wn)
+    b = b.withColumns(
+        {
+            "__n_vm": F.count("vmp").over(wn),
+            "__s_tr": F.sum("trm").over(wn),
+            "__s_vp": F.sum("vmp").over(wn),
+            "__s_vm": F.sum("vmm").over(wn),
+        }
+    )
+    n_vm, s_tr, s_vp, s_vm = (
+        F.col("__n_vm"),
+        F.col("__s_tr"),
+        F.col("__s_vp"),
+        F.col("__s_vm"),
+    )
     ok = (n_vm >= _VTX_N) & (s_tr > 0)
     return b.select(
         "event_type",
@@ -659,9 +669,14 @@ def ti_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("cm") - F.lag("cm").over(_wd())
     b = bars.select("event_type", "day", d.alias("d"))
     wn = _wd().rowsBetween(-(_CMO_N - 1), 0)
-    su = F.sum(F.when(F.col("d") > 0, F.col("d")).otherwise(0)).over(wn)
-    sd = F.sum(F.when(F.col("d") < 0, -F.col("d")).otherwise(0)).over(wn)
-    n = F.count("d").over(wn)
+    b = b.withColumns(
+        {
+            "__su": F.sum(F.when(F.col("d") > 0, F.col("d")).otherwise(0)).over(wn),
+            "__sd": F.sum(F.when(F.col("d") < 0, -F.col("d")).otherwise(0)).over(wn),
+            "__n": F.count("d").over(wn),
+        }
+    )
+    su, sd, n = F.col("__su"), F.col("__sd"), F.col("__n")
     ok = (n >= _CMO_N) & (su + sd > 0)
     return b.select(
         "event_type",
@@ -827,8 +842,8 @@ def ti_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "day", "fim"
     )
     wn = _wd().rowsBetween(-(_FI_N - 1), 0)
-    n = F.count("fim").over(wn)
-    s = F.sum("fim").over(wn)
+    b = b.withColumns({"__n": F.count("fim").over(wn), "__s": F.sum("fim").over(wn)})
+    n, s = F.col("__n"), F.col("__s")
     # half-away-from-zero integer division of the micro sum by n
     sma_micro = F.when(s < 0, -F.lit(1).cast(d)).otherwise(
         F.lit(1).cast(d)
@@ -913,8 +928,13 @@ def ti_eom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = bars.select("event_type", "day", emv.alias("emv"))
     wn = _wd().rowsBetween(-(_EOM_N - 1), 0)
-    n = F.count("emv").over(wn)
-    sm = F.sum(F.col("emv").cast(DEC)).over(wn)
+    b = b.withColumns(
+        {
+            "__n": F.count("emv").over(wn),
+            "__sm": F.sum(F.col("emv").cast(DEC)).over(wn),
+        }
+    )
+    n, sm = F.col("__n"), F.col("__sm")
     return b.select(
         "event_type",
         "day",
@@ -2309,12 +2329,23 @@ def w_rolling_skewkurt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-(_SK_WINDOW - 1), 0)
     )
-    n = F.count("x").over(w)
-    s1 = F.sum(F.col("x").cast(d)).over(w).cast("double")
-    s2 = F.sum((F.col("x") * F.col("x")).cast(d)).over(w).cast("double")
     xd = F.col("x").cast(d)
-    s3 = F.sum(xd * xd * xd).over(w).cast("double")
-    s4 = F.sum(xd * xd * xd * xd).over(w).cast("double")
+    b = b.withColumns(
+        {
+            "__n": F.count("x").over(w),
+            "__s1": F.sum(xd).over(w).cast("double"),
+            "__s2": F.sum((F.col("x") * F.col("x")).cast(d)).over(w).cast("double"),
+            "__s3": F.sum(xd * xd * xd).over(w).cast("double"),
+            "__s4": F.sum(xd * xd * xd * xd).over(w).cast("double"),
+        }
+    )
+    n, s1, s2, s3, s4 = (
+        F.col("__n"),
+        F.col("__s1"),
+        F.col("__s2"),
+        F.col("__s3"),
+        F.col("__s4"),
+    )
     nn = n.cast("double")
     m = s1 / nn
     m2 = s2 / nn - m * m
@@ -2837,11 +2868,11 @@ def ti_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     EWMA window and the 10-bar ATR window fill."""
     from kp_crypto_market_analytics_spark.queries_r9 import (
         _daily_bars_df,
-        _true_range,
+        _with_true_range,
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir).withColumn("trm", _true_range())
+    bars = _with_true_range(_daily_bars_df(spark, sf_dir))
     b = bars.withColumn("tpm3", F.col("hm") + F.col("lm") + F.col("cm"))
     w = _wd()
     lags = [
@@ -2861,8 +2892,13 @@ def ti_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
         "div", F.lit(2) * num + F.lit(3 * den), F.lit(2 * 3 * den)
     )
     wa = _wd().rowsBetween(-(_KC_ATR_N - 1), 0)
-    n_tr = F.count("trm").over(wa)
-    s_tr = F.sum("trm").over(wa)
+    b = b.withColumns(
+        {
+            "__n_tr": F.count("trm").over(wa),
+            "__s_tr": F.sum("trm").over(wa),
+        }
+    )
+    n_tr, s_tr = F.col("__n_tr"), F.col("__s_tr")
     atr_micro = F.call_function(
         "div", F.lit(2) * s_tr + F.lit(_KC_ATR_N), F.lit(2 * _KC_ATR_N)
     )

@@ -214,9 +214,14 @@ def ti_dpo(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir)
     w = _wd().rowsBetween(-(_DPO_N - 1), W.currentRow)
     d = "decimal(38,0)"
-    s = F.sum(F.col("cm").cast(d)).over(w)
-    nw = F.count(F.lit(1)).over(w)
-    lagc = F.lag("cm", _DPO_SHIFT).over(_wd())
+    bars = bars.withColumns(
+        {
+            "__s": F.sum(F.col("cm").cast(d)).over(w),
+            "__nw": F.count(F.lit(1)).over(w),
+            "__lagc": F.lag("cm", _DPO_SHIFT).over(_wd()),
+        }
+    )
+    s, nw, lagc = F.col("__s"), F.col("__nw"), F.col("__lagc")
     ok = (nw == _DPO_N) & lagc.isNotNull()
     dpo = (
         lagc.cast(d) * F.lit(_DPO_N).cast(d) - s
@@ -303,7 +308,8 @@ def ti_vpt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = _daily_bars_df(spark, sf_dir)
     d = "decimal(38,0)"
-    prev = F.lag("cm").over(_wd())
+    bars = bars.withColumn("__prev", F.lag("cm").over(_wd()))
+    prev = F.col("__prev")
     num = (
         F.col("vol").cast(d)
         * (F.col("cm").cast(d) - prev.cast(d))
@@ -381,8 +387,13 @@ def ti_nvi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     bars = _daily_bars_df(spark, sf_dir)
-    prevc = F.lag("cm").over(_wd())
-    prevv = F.lag("vol").over(_wd())
+    bars = bars.withColumns(
+        {
+            "__prevc": F.lag("cm").over(_wd()),
+            "__prevv": F.lag("vol").over(_wd()),
+        }
+    )
+    prevc, prevv = F.col("__prevc"), F.col("__prevv")
     lr = F.round(
         F.log(F.col("cm").cast("double") / prevc.cast("double"))
         * F.lit(1_000_000.0),
@@ -465,11 +476,13 @@ def ti_coppock(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
     d = "decimal(38,0)"
+    bars = _daily_bars_df(spark, sf_dir).withColumns(
+        {f"__lag{k}": F.lag("cm", k).over(_wd()) for k in (_COPP_ROC_A, _COPP_ROC_B)}
+    )
 
     def roc_micro(k: int):
-        lagc = F.lag("cm", k).over(_wd())
+        lagc = F.col(f"__lag{k}")
         return F.when(
             lagc.isNotNull() & (lagc > 0),
             _half_away(
@@ -484,11 +497,14 @@ def ti_coppock(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         (roc_micro(_COPP_ROC_A) + roc_micro(_COPP_ROC_B)).alias("sm"),
     )
+    s = s.withColumns(
+        {f"__sm{i}": F.lag("sm", i).over(_wd()) for i in range(1, _COPP_WMA)}
+    )
     wsum = None
     present = None
     for i in range(_COPP_WMA):
         w_i = _COPP_WMA - i
-        lag_s = F.lag("sm", i).over(_wd()) if i else F.col("sm")
+        lag_s = F.col(f"__sm{i}") if i else F.col("sm")
         t = lag_s * F.lit(w_i)
         wsum = t if wsum is None else wsum + t
         p = lag_s.isNotNull()
@@ -1890,19 +1906,13 @@ def ti_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir).withColumn(
         "cd", F.col("cm").cast("double") / F.lit(1_000_000.0)
     )
-    s1 = F.round(
-        truncated_ema(F.col("cd"), _wd(), _TRIX_ALPHA, _TRIX_LAGS), 6
+    b = bars.select("event_type", "day", "cd")
+    for src, out in (("cd", "s1"), ("s1", "s2"), ("s2", "s3")):
+        b = truncated_ema(b, F.col(src), _wd(), _TRIX_LAGS, {out: _TRIX_ALPHA}, 6)
+    b3 = b.select("event_type", "day", "s3").withColumn(
+        "__prev", F.lag("s3").over(_wd())
     )
-    b1 = bars.select("event_type", "day", "cd", s1.alias("s1"))
-    s2 = F.round(
-        truncated_ema(F.col("s1"), _wd(), _TRIX_ALPHA, _TRIX_LAGS), 6
-    )
-    b2 = b1.select("event_type", "day", "s1", s2.alias("s2"))
-    s3 = F.round(
-        truncated_ema(F.col("s2"), _wd(), _TRIX_ALPHA, _TRIX_LAGS), 6
-    )
-    b3 = b2.select("event_type", "day", s3.alias("s3"))
-    prev = F.lag("s3").over(_wd())
+    prev = F.col("__prev")
     trix = (F.col("s3") - prev) / prev
     return (
         b3.select(
@@ -2529,9 +2539,14 @@ def ti_fisher_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = _daily_bars_df(spark, sf_dir)
     w = _wd().rowsBetween(-(_FISH_N - 1), W.currentRow)
-    lo = F.min("cm").over(w)
-    hi = F.max("cm").over(w)
-    nw = F.count(F.lit(1)).over(w)
+    bars = bars.withColumns(
+        {
+            "__lo": F.min("cm").over(w),
+            "__hi": F.max("cm").over(w),
+            "__nw": F.count(F.lit(1)).over(w),
+        }
+    )
+    lo, hi, nw = F.col("__lo"), F.col("__hi"), F.col("__nw")
     num = F.lit(2) * (F.col("cm") - lo) - (hi - lo)
     den = hi - lo
     base = bars.select(
@@ -2636,10 +2651,9 @@ def w_tes_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cm") - F.col("seas_micro")).cast("double")
         / F.lit(1_000_000.0),
     )
-    s1 = F.round(truncated_ema(F.col("ds"), _wd(), _TES_ALPHA, _TES_LAGS), 6)
-    b1 = b.select("event_type", "day", "dow", "ds", s1.alias("s1"))
-    s2 = F.round(truncated_ema(F.col("s1"), _wd(), _TES_ALPHA, _TES_LAGS), 6)
-    b2 = b1.select("event_type", "day", "dow", "s1", s2.alias("s2"))
+    b2 = b.select("event_type", "day", "dow", "ds")
+    for src, out in (("ds", "s1"), ("s1", "s2")):
+        b2 = truncated_ema(b2, F.col(src), _wd(), _TES_LAGS, {out: _TES_ALPHA}, 6)
     nxt = seas.select(
         "event_type",
         F.col("dow").alias("dow_next"),

@@ -54,8 +54,8 @@ def ti_ultimate_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
-    prev = F.lag("cm").over(_wd())
+    bars = _daily_bars_df(spark, sf_dir).withColumn("__prev", F.lag("cm").over(_wd()))
+    prev = F.col("__prev")
     bp = F.when(prev.isNotNull(), F.col("cm") - F.least(F.col("lm"), prev))
     tr = F.when(
         prev.isNotNull(),
@@ -265,9 +265,12 @@ def ti_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir)
     d = "decimal(38,0)"
 
+    bars = bars.withColumns(
+        {f"__lag{k}": F.lag("cm", k).over(_wd()) for k, _, _ in _KST_LEGS}
+    )
     cols = []
     for k, _, _ in _KST_LEGS:
-        lagc = F.lag("cm", k).over(_wd())
+        lagc = F.col(f"__lag{k}")
         cols.append(
             F.when(
                 lagc.isNotNull() & (lagc > 0),
@@ -293,14 +296,13 @@ def ti_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(present, num).alias("kst_num"),
     )
     wsig = _wd().rowsBetween(-(_KST_SIG - 1), 0)
-    b = b.select(
+    b = b.withColumns(
+        {"__n": F.count("kst_num").over(wsig), "__s": F.sum("kst_num").over(wsig)}
+    ).select(
         "event_type",
         "day",
         "kst_num",
-        F.when(
-            F.count("kst_num").over(wsig) == _KST_SIG,
-            F.sum("kst_num").over(wsig),
-        ).alias("sig_num"),
+        F.when(F.col("__n") == _KST_SIG, F.col("__s")).alias("sig_num"),
     )
     return (
         b.select(
@@ -394,10 +396,14 @@ def ti_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
-    ph = F.lag("hm").over(_wd())
-    pl = F.lag("lm").over(_wd())
-    pc = F.lag("cm").over(_wd())
+    bars = _daily_bars_df(spark, sf_dir).withColumns(
+        {
+            "__ph": F.lag("hm").over(_wd()),
+            "__pl": F.lag("lm").over(_wd()),
+            "__pc": F.lag("cm").over(_wd()),
+        }
+    )
+    ph, pl, pc = F.col("__ph"), F.col("__pl"), F.col("__pc")
     b = bars.select(
         "event_type",
         "day",
@@ -462,17 +468,17 @@ def ti_choppiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend).
 
     Determinism: the TR sum and the channel width are exact micro
-    BIGINT window folds (the repo _true_range); the log ratio is ONE
+    BIGINT window folds (the repo _with_true_range); the log ratio is ONE
     IEEE expression (natural-log quotient form so both engines hit
     the same libm path), masked until 14 bars exist and the channel
     is non-degenerate."""
     from kp_crypto_market_analytics_spark.queries_r9 import (
         _daily_bars_df,
-        _true_range,
+        _with_true_range,
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir).withColumn("trm", _true_range())
+    bars = _with_true_range(_daily_bars_df(spark, sf_dir))
     w = _wd().rowsBetween(-(_CHOP_N - 1), 0)
     b = bars.select(
         "event_type",
@@ -1670,9 +1676,13 @@ def w_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
-    v0 = F.lag("cm", 2).over(_wd())
-    v1 = F.lag("cm", 1).over(_wd())
+    bars = _daily_bars_df(spark, sf_dir).withColumns(
+        {
+            "__v0": F.lag("cm", 2).over(_wd()),
+            "__v1": F.lag("cm", 1).over(_wd()),
+        }
+    )
+    v0, v1 = F.col("__v0"), F.col("__v1")
     v2 = F.col("cm")
     code = (
         (F.signum((v0 - v1).cast("double")).cast("long") + 1) * 9

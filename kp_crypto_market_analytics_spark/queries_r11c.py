@@ -65,36 +65,38 @@ def ti_hma(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
     w = _wd()
+    # one lag chain of cm serves both weighted sums
+    bars = _daily_bars_df(spark, sf_dir).withColumns(
+        {
+            "__cnt": F.count("cm").over(w.rowsBetween(-(_HMA_N - 1), 0)),
+            **{f"__cm{j}": F.lag("cm", j).over(w) for j in range(1, _HMA_N)},
+        }
+    )
+    cnt9 = F.col("__cnt")
+    cm_lags = [F.col("cm")] + [F.col(f"__cm{j}") for j in range(1, _HMA_N)]
 
-    def wma_num(col, k):
+    def wma_num(k):
         n = F.lit(0).cast("long")
         for j in range(k):
-            lg = col if j == 0 else F.lag(col, j).over(w)
-            n = n + F.coalesce(lg, F.lit(0)) * F.lit(k - j)
+            n = n + F.coalesce(cm_lags[j], F.lit(0)) * F.lit(k - j)
         return n
 
-    cnt9 = F.count("cm").over(w.rowsBetween(-(_HMA_N - 1), 0))
-    raw = (
-        F.lit(9) * wma_num(F.col("cm"), _HMA_HALF)
-        - F.lit(2) * wma_num(F.col("cm"), _HMA_N)
-    )
+    raw = F.lit(9) * wma_num(_HMA_HALF) - F.lit(2) * wma_num(_HMA_N)
     b = bars.select(
         "event_type",
         "day",
         F.when(cnt9 == _HMA_N, raw).alias("raw"),
     )
-    hnum = (
-        F.lit(3) * F.col("raw")
-        + F.lit(2) * F.lag("raw", 1).over(w)
-        + F.lag("raw", 2).over(w)
+    b = b.withColumns(
+        {
+            "__raw1": F.lag("raw", 1).over(w),
+            "__raw2": F.lag("raw", 2).over(w),
+        }
     )
-    ok = (
-        F.col("raw").isNotNull()
-        & F.lag("raw", 1).over(w).isNotNull()
-        & F.lag("raw", 2).over(w).isNotNull()
-    )
+    raw1, raw2 = F.col("__raw1"), F.col("__raw2")
+    hnum = F.lit(3) * F.col("raw") + F.lit(2) * raw1 + raw2
+    ok = F.col("raw").isNotNull() & raw1.isNotNull() & raw2.isNotNull()
     return (
         b.select(
             "event_type",
@@ -164,9 +166,14 @@ def ti_vwma(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir)
     fr = _wd().rowsBetween(-(_VWMA_N - 1), 0)
     d = "decimal(38,0)"
-    num = F.sum((F.col("cm").cast(d) * F.col("vol").cast(d))).over(fr)
-    den = F.sum(F.col("vol").cast(d)).over(fr)
-    n = F.count("cm").over(fr)
+    bars = bars.withColumns(
+        {
+            "__num": F.sum((F.col("cm").cast(d) * F.col("vol").cast(d))).over(fr),
+            "__den": F.sum(F.col("vol").cast(d)).over(fr),
+            "__n": F.count("cm").over(fr),
+        }
+    )
+    num, den, n = F.col("__num"), F.col("__den"), F.col("__n")
     ok = (n == _VWMA_N) & (den > 0)
     return (
         bars.select(
@@ -237,17 +244,27 @@ def ti_stoch_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("cm") - F.lag("cm", 1).over(w)
     fr = w.rowsBetween(-(_SRSI_N - 1), 0)
     b = bars.select("event_type", "day", d.alias("d"))
-    sg = F.sum(F.greatest(F.col("d"), F.lit(0))).over(fr)
-    sl = F.sum(F.greatest(-F.col("d"), F.lit(0))).over(fr)
-    n = F.count("d").over(fr)
+    b = b.withColumns(
+        {
+            "__sg": F.sum(F.greatest(F.col("d"), F.lit(0))).over(fr),
+            "__sl": F.sum(F.greatest(-F.col("d"), F.lit(0))).over(fr),
+            "__n": F.count("d").over(fr),
+        }
+    )
+    sg, sl, n = F.col("__sg"), F.col("__sl"), F.col("__n")
     rsi = F.when(
         (n >= _SRSI_N) & (sg + sl > 0),
         F.round(F.lit(100.0) * sg / (sg + sl), 6),
     )
     b = b.select("event_type", "day", rsi.alias("rsi"))
-    lo = F.min("rsi").over(fr)
-    hi = F.max("rsi").over(fr)
-    nr = F.count("rsi").over(fr)
+    b = b.withColumns(
+        {
+            "__lo": F.min("rsi").over(fr),
+            "__hi": F.max("rsi").over(fr),
+            "__nr": F.count("rsi").over(fr),
+        }
+    )
+    lo, hi, nr = F.col("__lo"), F.col("__hi"), F.col("__nr")
     k = F.when(
         (nr >= _SRSI_N) & (hi > lo),
         F.round(F.lit(100.0) * (F.col("rsi") - lo) / (hi - lo), 6)
@@ -324,8 +341,10 @@ def ti_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir).withColumn(
         "close", F.col("cm") / F.lit(1e6)
     )
-    ema = F.round(truncated_ema(F.col("close"), _wd(), _ER_ALPHA, _ER_LAGS), 6)
-    b = bars.select("event_type", "day", "hm", "lm", ema.alias("ema13"))
+    b = truncated_ema(
+        bars.select("event_type", "day", "hm", "lm", "close"),
+        F.col("close"), _wd(), _ER_LAGS, {"ema13": _ER_ALPHA}, 6,
+    )
     return (
         b.select(
             "event_type",
@@ -666,16 +685,16 @@ def a_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    pts = pts.select(
-        "cuma",
-        "cumb",
-        F.max("cuma").over(wall).alias("n_tot"),
-        F.max("cumb").over(wall).alias("m_tot"),
+    pts = pts.withColumns(
+        {"n_tot": F.max("cuma").over(wall), "m_tot": F.max("cumb").over(wall)}
+    ).select(
+        "n_tot",
+        "m_tot",
         F.when(
             F.col("nxt").isNotNull(),
             F.abs(
-                F.col("cuma").cast(d) * F.max("cumb").over(wall)
-                - F.col("cumb").cast(d) * F.max("cuma").over(wall)
+                F.col("cuma").cast(d) * F.col("m_tot")
+                - F.col("cumb").cast(d) * F.col("n_tot")
             )
             * (F.col("nxt") - F.col("cell")).cast(d),
         ).alias("term"),
@@ -3234,12 +3253,9 @@ def ti_dema_tema(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars_df(spark, sf_dir).withColumn(
         "cd", F.col("cm").cast("double") / F.lit(1_000_000.0)
     )
-    s1 = F.round(truncated_ema(F.col("cd"), _wd(), _DT_ALPHA, _DT_LAGS), 6)
-    b1 = bars.select("event_type", "day", s1.alias("s1"))
-    s2 = F.round(truncated_ema(F.col("s1"), _wd(), _DT_ALPHA, _DT_LAGS), 6)
-    b2 = b1.select("event_type", "day", "s1", s2.alias("s2"))
-    s3 = F.round(truncated_ema(F.col("s2"), _wd(), _DT_ALPHA, _DT_LAGS), 6)
-    b3 = b2.select("event_type", "day", "s1", "s2", s3.alias("s3"))
+    b3 = bars.select("event_type", "day", "cd")
+    for src, out in (("cd", "s1"), ("s1", "s2"), ("s2", "s3")):
+        b3 = truncated_ema(b3, F.col(src), _wd(), _DT_LAGS, {out: _DT_ALPHA}, 6)
     return (
         b3.select(
             "event_type",
@@ -3321,20 +3337,23 @@ def ti_tsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         _wd,
     )
 
-    bars = _daily_bars_df(spark, sf_dir)
-    mom_u = F.col("cm") - F.lag("cm", 1).over(_wd())
+    bars = _daily_bars_df(spark, sf_dir).withColumn(
+        "__prev_cm", F.lag("cm", 1).over(_wd())
+    )
+    prev_cm = F.col("__prev_cm")
+    mom_u = F.col("cm") - prev_cm
     b = bars.select(
         "event_type",
         "day",
         (mom_u.cast("double") / F.lit(1e6)).alias("m"),
         (F.abs(mom_u).cast("double") / F.lit(1e6)).alias("am"),
     ).where(F.col("m").isNotNull())
-    e1m = F.round(truncated_ema(F.col("m"), _wd(), _TSI_A1, _TSI_LAGS), 6)
-    e1a = F.round(truncated_ema(F.col("am"), _wd(), _TSI_A1, _TSI_LAGS), 6)
-    b1 = b.select("event_type", "day", e1m.alias("e1m"), e1a.alias("e1a"))
-    e2m = F.round(truncated_ema(F.col("e1m"), _wd(), _TSI_A2, _TSI_LAGS), 6)
-    e2a = F.round(truncated_ema(F.col("e1a"), _wd(), _TSI_A2, _TSI_LAGS), 6)
-    b2 = b1.select("event_type", "day", e2m.alias("e2m"), e2a.alias("e2a"))
+    b2 = b
+    for src, out, alpha in (
+        ("m", "e1m", _TSI_A1), ("am", "e1a", _TSI_A1),
+        ("e1m", "e2m", _TSI_A2), ("e1a", "e2a", _TSI_A2),
+    ):
+        b2 = truncated_ema(b2, F.col(src), _wd(), _TSI_LAGS, {out: alpha}, 6)
     return (
         b2.select(
             "event_type",
@@ -3976,9 +3995,14 @@ def ti_rvi(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("hm") - F.col("lm")).alias("hl"),
     )
     fr = _wd().rowsBetween(-(_RVI_N - 1), 0)
-    sco = F.sum("co").over(fr)
-    shl = F.sum("hl").over(fr)
-    n = F.count("co").over(fr)
+    b = b.withColumns(
+        {
+            "__sco": F.sum("co").over(fr),
+            "__shl": F.sum("hl").over(fr),
+            "__n": F.count("co").over(fr),
+        }
+    )
+    sco, shl, n = F.col("__sco"), F.col("__shl"), F.col("__n")
     ok = (n == _RVI_N) & (shl > 0)
     return (
         b.select(
@@ -4169,7 +4193,8 @@ def ti_ma_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         F.when(n == _MAC_SLOW, diff).alias("d"),
     )
-    prev = F.lag("d").over(w)
+    b = b.withColumn("__prev", F.lag("d").over(w))
+    prev = F.col("__prev")
     sig = F.when(
         (F.col("d") > 0) & (prev <= 0), F.lit("golden")
     ).when((F.col("d") < 0) & (prev >= 0), F.lit("death"))
@@ -4442,12 +4467,10 @@ def ti_chaikin_osc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("mfv_u").over(wc).cast("double") / F.lit(1e6)
     )
     b = b.select("event_type", "day", F.round(adl, 6).alias("adl"))
-    fast = F.round(
-        truncated_ema(F.col("adl"), _wd(), _CHO_FAST, _CHO_LAGS), 6
+    b = truncated_ema(
+        b, F.col("adl"), _wd(), _CHO_LAGS, {"__fast": _CHO_FAST, "__slow": _CHO_SLOW}, 6
     )
-    slow = F.round(
-        truncated_ema(F.col("adl"), _wd(), _CHO_SLOW, _CHO_LAGS), 6
-    )
+    fast, slow = F.col("__fast"), F.col("__slow")
     return (
         b.select(
             "event_type",

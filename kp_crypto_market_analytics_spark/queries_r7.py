@@ -2802,9 +2802,11 @@ def w_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     closes = _daily_closes(t["events"])
     w = Window.partitionBy("event_type").orderBy("day")
-    sgn = F.when(
-        F.col("close") > F.lag("close").over(w), F.lit(1)
-    ).when(F.col("close") < F.lag("close").over(w), F.lit(-1))
+    closes = closes.withColumn("__prev", F.lag("close").over(w))
+    prev = F.col("__prev")
+    sgn = F.when(F.col("close") > prev, F.lit(1)).when(
+        F.col("close") < prev, F.lit(-1)
+    )
     signs = (
         closes.withColumn("sgn", sgn)
         .where(F.col("sgn").isNotNull())

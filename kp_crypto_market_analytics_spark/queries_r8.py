@@ -765,16 +765,19 @@ def ti_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling min/max add no shuffle."""
     t = load_tables(spark, sf_dir, ["events"])
     w = _tick_w().rowsBetween(-19, 0)
-    hi, lo, n = (
-        F.max("value").over(w),
-        F.min("value").over(w),
-        F.count("value").over(w),
+    events = t["events"].withColumns(
+        {
+            "__hi": F.max("value").over(w),
+            "__lo": F.min("value").over(w),
+            "__n": F.count("value").over(w),
+        }
     )
+    hi, lo, n = F.col("__hi"), F.col("__lo"), F.col("__n")
     pos = F.when(
         (n >= 20) & (hi > lo),
         F.round((F.col("value") - lo) / (hi - lo), 6) + F.lit(0.0),
     )
-    return t["events"].select(
+    return events.select(
         "event_id",
         "event_type",
         "value",
@@ -815,7 +818,10 @@ def ti_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; no extra shuffle."""
     t = load_tables(spark, sf_dir, ["events"])
     w = _tick_w()
-    runmax = F.max("value").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    events = t["events"].withColumn(
+        "__runmax", F.max("value").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    runmax = F.col("__runmax")
     dd_micro = F.when(
         runmax > 0,
         F.round(
@@ -824,15 +830,20 @@ def ti_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0).cast("long"))
     w14 = _tick_w().rowsBetween(-13, 0)
     # re-sort-free: ddm rides the same (type, ts, event_id) frame
-    base = t["events"].select(
+    base = events.select(
         "event_id",
         "event_type",
         "value",
         "ts",
         dd_micro.alias("ddm"),
     )
-    n = F.count("ddm").over(w14)
-    s2 = F.sum(F.col("ddm") * F.col("ddm")).over(w14)
+    base = base.withColumns(
+        {
+            "__n": F.count("ddm").over(w14),
+            "__s2": F.sum(F.col("ddm") * F.col("ddm")).over(w14),
+        }
+    )
+    n, s2 = F.col("__n"), F.col("__s2")
     ulcer = F.when(
         n >= 14,
         F.round(
@@ -1426,7 +1437,8 @@ def w_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     stepped = stepped.select(
         "event_id", "event_type", "ts", "value", "tm", m
     )
-    mmin = F.min("m").over(wcum)
+    stepped = stepped.withColumn("__mmin", F.min("m").over(wcum))
+    mmin = F.col("__mmin")
     return stepped.select(
         "event_id",
         "event_type",

@@ -82,9 +82,14 @@ def w_rollstd_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-(_ROLL_WINDOW - 1), 0)
     )
     v = F.col("value")
-    n = F.count("value").over(w)
-    sx = F.sum(v.cast(DEC)).over(w).cast("double")
-    sx2 = F.sum(v.cast(DEC) * v.cast(DEC)).over(w).cast("double")
+    base = base.withColumns(
+        {
+            "__n": F.count("value").over(w),
+            "__sx": F.sum(v.cast(DEC)).over(w).cast("double"),
+            "__sx2": F.sum(v.cast(DEC) * v.cast(DEC)).over(w).cast("double"),
+        }
+    )
+    n, sx, sx2 = F.col("__n"), F.col("__sx"), F.col("__sx2")
     std = F.when(
         n >= _ROLL_MIN_PERIODS,
         F.sqrt(F.greatest((sx2 - sx * sx / n) / (n - F.lit(1)), F.lit(0.0))),
@@ -425,17 +430,20 @@ def _wd():
     return Window.partitionBy("event_type").orderBy("day")
 
 
-def _true_range():
-    """True range in micro-prices: greatest of H−L, |H−prevC|, |L−prevC|
-    (H−L on the first bar).  Integer column over the bar window."""
-    prev = F.lag("cm").over(_wd())
-    return F.when(prev.isNull(), F.col("hm") - F.col("lm")).otherwise(
+def _with_true_range(bars: DataFrame) -> DataFrame:
+    """``bars`` plus ``trm``, the true range in micro-prices: greatest
+    of H−L, |H−prevC|, |L−prevC| (H−L on the first bar).  Integer
+    column over the bar window; the previous close is one lag."""
+    bars = bars.withColumn("__prev_cm", F.lag("cm").over(_wd()))
+    prev = F.col("__prev_cm")
+    trm = F.when(prev.isNull(), F.col("hm") - F.col("lm")).otherwise(
         F.greatest(
             F.col("hm") - F.col("lm"),
             F.abs(F.col("hm") - prev),
             F.abs(F.col("lm") - prev),
         )
     )
+    return bars.withColumn("trm", trm).drop("__prev_cm")
 
 
 _TR_SQL = f"""CASE WHEN lag(cm) OVER ({_WD_SQL}) IS NULL THEN hm - lm
@@ -449,7 +457,7 @@ def ti_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     simple average of the daily true range, masked below 14 bars.  The
     mean is the exact half-away integer division of the micro TR sum
     (never an IEEE sum), then one /1e6 presentation divide."""
-    bars = _daily_bars_df(spark, sf_dir).withColumn("trm", _true_range())
+    bars = _with_true_range(_daily_bars_df(spark, sf_dir))
     w14 = _wd().rowsBetween(-(_BAR_PERIOD - 1), 0)
     n = F.count("trm").over(w14)
     s = F.sum("trm").over(w14)
@@ -485,9 +493,14 @@ def ti_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     HH/LL are exact integer order statistics; one IEEE division."""
     bars = _daily_bars_df(spark, sf_dir)
     w14 = _wd().rowsBetween(-(_BAR_PERIOD - 1), 0)
-    hh = F.max("hm").over(w14)
-    ll = F.min("lm").over(w14)
-    n = F.count("cm").over(w14)
+    bars = bars.withColumns(
+        {
+            "__hh": F.max("hm").over(w14),
+            "__ll": F.min("lm").over(w14),
+            "__n": F.count("cm").over(w14),
+        }
+    )
+    hh, ll, n = F.col("__hh"), F.col("__ll"), F.col("__n")
     ok = (n >= _BAR_PERIOD) & (hh > ll)
     wr = F.lit(-100.0) * (hh - F.col("cm")) / (hh - ll)
     return bars.select(
@@ -528,7 +541,8 @@ def ti_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = bars.withColumn("tpm", tpm).withColumn(
         "flow", F.col("tpm") * F.col("vol")
     )
-    prev_tp = F.lag("tpm").over(_wd())
+    bars = bars.withColumn("__prev_tp", F.lag("tpm").over(_wd()))
+    prev_tp = F.col("__prev_tp")
     bars = bars.withColumn(
         "pflow",
         F.when(prev_tp.isNotNull() & (F.col("tpm") > prev_tp), F.col("flow"))
@@ -539,9 +553,14 @@ def ti_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0).cast("long")),
     )
     w14 = _wd().rowsBetween(-(_BAR_PERIOD - 1), 0)
-    rn = F.row_number().over(_wd())
-    pos = F.sum("pflow").over(w14)
-    neg = F.sum("nflow").over(w14)
+    bars = bars.withColumns(
+        {
+            "__rn": F.row_number().over(_wd()),
+            "__pos": F.sum("pflow").over(w14),
+            "__neg": F.sum("nflow").over(w14),
+        }
+    )
+    rn, pos, neg = F.col("__rn"), F.col("__pos"), F.col("__neg")
     ok = (rn >= _BAR_PERIOD + 1) & (pos + neg > 0)
     mfi = F.lit(100.0) * pos / (pos + neg)
     return bars.select(
@@ -589,15 +608,18 @@ def ti_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds exactly (the same milli/micro-moment recipe as
     a_jarque_bera); DX needs 14 bars + a previous bar, so DX is masked
     before bar 15 and ADX before bar 28."""
-    bars = _daily_bars_df(spark, sf_dir)
-    prev_h = F.lag("hm").over(_wd())
-    prev_l = F.lag("lm").over(_wd())
+    bars = _with_true_range(_daily_bars_df(spark, sf_dir)).withColumns(
+        {
+            "__prev_h": F.lag("hm").over(_wd()),
+            "__prev_l": F.lag("lm").over(_wd()),
+        }
+    )
+    prev_h, prev_l = F.col("__prev_h"), F.col("__prev_l")
     up = F.col("hm") - prev_h
     down = prev_l - F.col("lm")
     zero = F.lit(0).cast("long")
     bars = (
-        bars.withColumn("trm", _true_range())
-        .withColumn(
+        bars.withColumn(
             "pdm",
             F.when(up.isNotNull() & (up > down) & (up > 0), up).otherwise(zero),
         )
@@ -610,9 +632,14 @@ def ti_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(_wd()))
     )
     w14 = _wd().rowsBetween(-(_BAR_PERIOD - 1), 0)
-    str14 = F.sum("trm").over(w14)
-    spdm = F.sum("pdm").over(w14)
-    sndm = F.sum("ndm").over(w14)
+    bars = bars.withColumns(
+        {
+            "__str14": F.sum("trm").over(w14),
+            "__spdm": F.sum("pdm").over(w14),
+            "__sndm": F.sum("ndm").over(w14),
+        }
+    )
+    str14, spdm, sndm = F.col("__str14"), F.col("__spdm"), F.col("__sndm")
     ok_dx = (F.col("rn") >= _BAR_PERIOD + 1) & (str14 > 0)
     pdi = F.lit(100.0) * spdm / str14
     ndi = F.lit(100.0) * sndm / str14

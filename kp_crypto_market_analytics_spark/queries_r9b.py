@@ -246,10 +246,17 @@ def ti_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _wt()
     # Both lags come from the same (ts, event_id) sort: d = vm - vm[-1]
     # and dp = vm[-1] - vm[-2], so ONE window pass yields the pair.
-    e = _ticks(spark, sf_dir).select(
+    e = _ticks(spark, sf_dir).withColumns(
+        {
+            "__vm1": F.lag("vm").over(w),
+            "__vm2": F.lag("vm", 2).over(w),
+        }
+    )
+    vm1, vm2 = F.col("__vm1"), F.col("__vm2")
+    e = e.select(
         "event_type",
-        (F.col("vm") - F.lag("vm").over(w)).alias("d"),
-        (F.lag("vm").over(w) - F.lag("vm", 2).over(w)).alias("dp"),
+        (F.col("vm") - vm1).alias("d"),
+        (vm1 - vm2).alias("dp"),
     ).where(F.col("d").isNotNull() & F.col("dp").isNotNull())
     n = F.count(F.lit(1)).cast("double")
     sx = F.sum(F.col("d").cast(DEC19)).cast("double")
@@ -411,9 +418,10 @@ def a_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-symbol sort (sign carry-forward, then cumulative volume) + one
     (symbol, bucket) agg + one symbol agg — the volume clock never
     materializes more than one row per tick."""
-    e = _ticks(spark, sf_dir)
     w = _wt()
-    d = F.col("vm") - F.lag("vm").over(w)
+    e = _ticks(spark, sf_dir).withColumn("__prev_vm", F.lag("vm").over(w))
+    prev_vm = F.col("__prev_vm")
+    d = F.col("vm") - prev_vm
     s0 = F.when(d > 0, 1).when(d < 0, -1)
     e = e.select(
         "event_type",
@@ -425,7 +433,8 @@ def a_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
     ).where(F.col("s").isNotNull() & F.col("k").isNotNull())
     wt = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    tot = F.sum("k").over(Window.partitionBy("event_type"))
+    e = e.withColumn("__tot", F.sum("k").over(Window.partitionBy("event_type")))
+    tot = F.col("__tot")
     cumb = F.coalesce(
         F.sum("k").over(wt.rowsBetween(Window.unboundedPreceding, -1)),
         F.lit(0),
@@ -887,11 +896,11 @@ def a_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("em"),
     )
     w = Window.orderBy("minute")
-    r = r.select(
+    r = r.withColumn("el", F.lag("em").over(w)).select(
         "n_minutes",
         "b",
-        F.lag("em").over(w).alias("el"),
-        (F.col("em") - F.lag("em").over(w)).alias("de"),
+        "el",
+        (F.col("em") - F.col("el")).alias("de"),
     ).where(F.col("el").isNotNull())
     eld = F.col("el").cast(DEC19)
     ded = F.col("de").cast(DEC19)
@@ -1858,9 +1867,10 @@ def a_vpin_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: every column is an exact BIGINT.  Scale shape: the
     a_vpin window pair + one (type, bucket) agg; output rows =
     total_volume / V per symbol."""
-    e = _ticks(spark, sf_dir)
     w = _wt()
-    d = F.col("vm") - F.lag("vm").over(w)
+    e = _ticks(spark, sf_dir).withColumn("__prev_vm", F.lag("vm").over(w))
+    prev_vm = F.col("__prev_vm")
+    d = F.col("vm") - prev_vm
     s0 = F.when(d > 0, 1).when(d < 0, -1)
     e = e.select(
         "event_type",

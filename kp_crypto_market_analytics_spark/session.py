@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "kp-crypto-market-analytics-spark",
@@ -28,14 +26,17 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     On a real cluster the master/queue comes from spark-submit; local
-    runs use local[$SPARK_GRAFT_CPUS].  All configs below are safe on
-    both.
+    runs use local[$SPARK_GRAFT_CPUS], with as many shuffle partitions
+    unless ``shuffle_partitions`` is given.  The variable is read on
+    every call, so a process that builds sessions for several core
+    counts gets each one's partition count.  All configs below are safe
+    on both.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

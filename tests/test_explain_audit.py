@@ -1,9 +1,10 @@
 """Unit tests for the plan-audit detectors (tools/explain_audit.py):
 global-window counting incl. the no-ORDER-BY form, the shrinking-frame
-rule, and the block-join cap gate (inverted-index self-joins must carry
-a bounding operator)."""
+rule, the duplicate-window-expression rule, and the block-join cap gate
+(inverted-index self-joins must carry a bounding operator)."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -19,6 +20,7 @@ sys.path.insert(
 )
 
 from tools.explain_audit import (  # noqa: E402
+    count_duplicate_window_exprs,
     count_global_windows,
     count_shrinking_frames,
     count_uncapped_block_joins,
@@ -75,6 +77,11 @@ def test_shrinking_frame_counts(spark, frame):
     assert count_shrinking_frames(_executed(df)) == 1
 
 
+_ROWS3 = "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW"
+_ROWS5 = "ROWS BETWEEN 5 PRECEDING AND CURRENT ROW"
+_SUM3 = f"sum(id) OVER (PARTITION BY g ORDER BY id {_ROWS3})"
+
+
 @pytest.mark.parametrize(
     "count, window",
     [
@@ -84,19 +91,103 @@ def test_shrinking_frame_counts(spark, frame):
             "first(id) OVER (PARTITION BY g ORDER BY id"
             " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)",
         ),
+        (count_duplicate_window_exprs, f"{_SUM3} - {_SUM3}"),
     ],
-    ids=["global", "shrinking"],
+    ids=["global", "shrinking", "duplicate"],
 )
 def test_repeated_window_subtree_counts_once(spark, count, window):
-    """When AQE does not reuse an exchange, the same Window subtree is
-    printed twice (same expression IDs, another tree prefix): it is
-    still one node."""
+    """A window the query reads twice is printed twice (another tree
+    prefix, and the same expression IDs or, for a self-joined frame,
+    fresh ones), over its own exchange or a ``ReusedExchange`` of the
+    first copy's: it is still one node."""
     df = spark.range(10).selectExpr("id", "id % 2 AS g").selectExpr(
         "id", f"{window} AS w"
     )
     plan = _executed(df)
-    repeated = "\n".join([plan] + [":  " + line for line in plan.splitlines()])
-    assert count(repeated) == 1
+    copy = [":  " + line for line in plan.splitlines()]
+    fresh = [re.sub(r"#(\d+)", lambda m: f"#{int(m.group(1)) + 1000}", c) for c in copy]
+    at = next(i for i, c in enumerate(fresh) if "+- Exchange " in c)
+    cut = fresh[at].index("Exchange ")
+    reused = fresh[:at] + [
+        fresh[at][:cut] + "ReusedExchange [id#1000L], " + fresh[at][cut:]
+    ]
+    assert count(plan) == 1
+    assert count("\n".join([plan] + copy)) == 1
+    assert count("\n".join([plan] + fresh)) == 1
+    assert count("\n".join([plan] + reused)) == 1
+
+
+def _two_refs(over: str, other: str):
+    """sum(id) over ``over`` read twice, and once over ``other``."""
+    return (
+        "id",
+        f"sum(id) OVER (PARTITION BY g ORDER BY id {over}) * 2 AS a",
+        f"sum(id) OVER (PARTITION BY g ORDER BY id {over}) + 1 AS b",
+        f"sum(id) OVER (PARTITION BY g ORDER BY id {other}) AS c",
+    )
+
+
+def test_repeated_window_aggregate_counts(spark):
+    """One aggregate over one frame, referenced twice, is two window
+    expressions in the plan: one duplicate."""
+    df = spark.range(20).selectExpr("id", "id % 2 AS g").selectExpr(
+        *_two_refs(_ROWS3, _ROWS5)
+    )
+    assert count_duplicate_window_exprs(_executed(df)) == 1
+
+
+def test_same_aggregate_over_two_frames_not_counted(spark):
+    df = spark.range(20).selectExpr("id", "id % 2 AS g").selectExpr(
+        "id",
+        f"sum(id) OVER (PARTITION BY g ORDER BY id {_ROWS3}) AS a",
+        f"sum(id) OVER (PARTITION BY g ORDER BY id {_ROWS5}) AS c",
+        "sum(id) OVER (PARTITION BY id ORDER BY g"
+        " ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS d",
+    )
+    assert count_duplicate_window_exprs(_executed(df)) == 0
+
+
+def test_hoisted_window_aggregate_not_counted(spark):
+    """Selecting the aggregate once as a column and reading the column
+    twice leaves no duplicate."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("g").orderBy("id").rowsBetween(-3, 0)
+    df = spark.range(20).selectExpr("id", "id % 2 AS g").withColumn(
+        "__s", F.sum("id").over(w)
+    )
+    s = F.col("__s")
+    out = df.select("id", (s * 2).alias("a"), (s + 1).alias("b"))
+    assert count_duplicate_window_exprs(_executed(out)) == 0
+
+
+def test_same_aggregate_of_two_same_named_columns_not_counted(spark):
+    """sum(value) over both sides of a join reads two attributes that
+    print alike but for their IDs: two aggregates, no duplicate."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    a = spark.range(20).selectExpr("id", "id % 2 AS g", "id AS value")
+    b = spark.range(20).selectExpr("id", "id * 3 AS value")
+    w = Window.partitionBy("g").orderBy("id").rowsBetween(-3, 0)
+    df = a.join(b, "id").select(
+        "id", F.sum(a["value"]).over(w).alias("sa"), F.sum(b["value"]).over(w).alias("sb")
+    )
+    plan = _executed(df)
+    assert len(re.findall(r"sum\(value#\d+L?\) windowspecdefinition", plan)) == 2
+    assert count_duplicate_window_exprs(plan) == 0
+
+
+def test_same_shape_windows_over_different_children_count_each(spark):
+    """Two global windows of one shape over different inputs are two
+    single-task windows, even with their IDs renumbered alike."""
+    rn = "row_number() OVER (ORDER BY id) AS rn"
+    df = (
+        spark.range(10).selectExpr("id", rn)
+        .unionByName(spark.range(20).where("id % 3 = 0").selectExpr("id", rn))
+    )
+    assert count_global_windows(_executed(df)) == 2
 
 
 def test_running_frame_not_counted(spark):

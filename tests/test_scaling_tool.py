@@ -1,5 +1,6 @@
-"""The scaling tool's one flag rule and its measured data ratio
-(tools/scaling.py) — Spark-free."""
+"""The scaling tool's one flag rule, its measured data ratio and its
+untimed warm pass (tools/scaling.py), and the per-call core count of
+the sessions it builds — Spark-free (no JVM is started)."""
 
 import os
 import sys
@@ -62,3 +63,55 @@ def test_data_ratio_is_measured_from_documents_rows(tmp_path):
         )
     assert data_ratio(str(tmp_path / "lo"), str(tmp_path / "hi")) == 2.0
     assert data_ratio(str(tmp_path / "hi"), str(tmp_path / "lo")) == 0.5
+
+
+def test_time_queries_warms_each_query_before_timing(monkeypatch):
+    """Every named query runs once untimed before any timed run, and
+    the warm pass's materializations are dropped before timing."""
+    import bench
+    from kp_crypto_market_analytics_spark.operators import materialize
+    from tools.scaling import time_queries
+
+    calls: list[str] = []
+
+    class _Catalog:
+        def clearCache(self):
+            pass
+
+    class _Spark:
+        catalog = _Catalog()
+
+        def stop(self):
+            calls.append("stop")
+
+    def fake_time_query(spark, name, sf_dir):
+        calls.append(name)
+        # a first run pays warm-up; later runs do not
+        return 10.0 if calls.count(name) == 1 else 1.0
+
+    monkeypatch.setattr(bench, "_bench_session", lambda: _Spark())
+    monkeypatch.setattr(bench, "_time_query", fake_time_query)
+    monkeypatch.setattr(
+        materialize, "clear_session_materializations", lambda s: calls.append("clear")
+    )
+    times: dict = {}
+    time_queries("sf", ["a", "b"], "t", times)
+    assert calls == ["a", "b", "clear", "a", "b", "clear", "stop"]
+    assert times == {"a": {"t": 1.0}, "b": {"t": 1.0}}
+
+
+def test_get_spark_reads_cpus_per_call(monkeypatch):
+    """The shuffle partition count follows SPARK_GRAFT_CPUS at call
+    time, as the core-scaling sessions set it between sessions."""
+    from pyspark.sql import SparkSession
+
+    from kp_crypto_market_analytics_spark.session import get_spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    for cpus in ("32", "8"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        conf = get_spark("t")
+        assert conf["spark.sql.shuffle.partitions"] == cpus
+        assert conf["spark.master"] == f"local[{cpus}]"
+    assert get_spark("t", shuffle_partitions=3)["spark.sql.shuffle.partitions"] == "3"

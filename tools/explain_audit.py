@@ -1,6 +1,8 @@
 """Plan audit: dump executed-plan health for every bench query into
 EXPLAINS.md — pushdown reaching the scan, pruned read schemas, join
-strategies, codegen stages, exchange counts.  Run after plan changes;
+strategies, codegen stages, exchange counts, and gates on global
+windows, shrinking frames, duplicate window expressions and uncapped
+block joins.  Run after plan changes;
 the committed EXPLAINS.md is the reviewed-plan record.
 
 Usage: python tools/explain_audit.py [sf_dir]
@@ -8,6 +10,7 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -55,7 +58,8 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
     "a_quade_test": (
         1,
         "block range-rank window over the complete-day frame (one row "
-        "per calendar day — time-bounded)",
+        "per calendar day — time-bounded); the self-join reads the same "
+        "subtree twice",
     ),
     # r11b regression tests: the shared click daily series is ONE row
     # per calendar day (time-bounded), indexed by a global row_number
@@ -66,14 +70,15 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
         "calendar day — time-bounded)",
     ),
     "a_breusch_pagan": (
-        2,
-        "day-index row_number + n-count over the click daily series "
-        "(one row per calendar day — time-bounded)",
+        1,
+        "day-index row_number over the click daily series (one row per "
+        "calendar day — time-bounded); the cross join reads the same "
+        "subtree twice",
     ),
     "a_dagostino_k2": (
-        2,
-        "day-index row_number + n-count over the click daily series "
-        "(one row per calendar day — time-bounded)",
+        1,
+        "n-count over the click daily series (one row per calendar day "
+        "— time-bounded); the cross join reads the same subtree twice",
     ),
     "a_cramer_von_mises": (
         1,
@@ -89,10 +94,10 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
         "one row per minute of the covered period, not per event)",
     ),
     "a_granger_causality": (
-        4,
+        2,
         "diff + lag windows over the joined minute grid (time-bounded: "
-        "one row per minute, not per event); the two-direction UNION "
-        "duplicates the 2-window subtree, 2 x 2 = 4 WindowExec",
+        "one row per minute, not per event); both directions of the "
+        "UNION read the same 2-window subtree",
     ),
     "t_interleave_schedule": (
         1,
@@ -260,6 +265,27 @@ def _parse_plan_tree(plan: str):
     return roots
 
 
+_PLAN_ID = re.compile(r"\[plan_id=(\d+)\]")
+
+
+def _exchanges_by_plan_id(roots: list[dict]) -> dict[str, dict]:
+    """plan_id → Exchange node, for ``ReusedExchange`` resolution."""
+    exchanges: dict[str, dict] = {}
+
+    def index(node):
+        m = _PLAN_ID.search(node["text"])
+        if m and node["text"].lstrip("*(0123456789) ").startswith(
+            ("Exchange", "BroadcastExchange")
+        ):
+            exchanges[m.group(1)] = node
+        for c in node["children"]:
+            index(c)
+
+    for r in roots:
+        index(r)
+    return exchanges
+
+
 _CAP_MARKERS = re.compile(
     r"WindowGroupLimit|GlobalLimit|LocalLimit|TakeOrdered"
     r"|Filter .*__\w+#\d+L? <= "
@@ -291,21 +317,7 @@ def count_uncapped_block_joins(plan: str) -> tuple[int, int]:
     the quadratic term is gone — and in practice both sides share the
     capped subtree via exchange reuse."""
     roots = _parse_plan_tree(plan)
-
-    # plan_id → Exchange node, for ReusedExchange resolution
-    exchanges: dict[str, dict] = {}
-
-    def index(node):
-        m = re.search(r"\[plan_id=(\d+)\]", node["text"])
-        if m and node["text"].lstrip("*(0123456789) ").startswith(
-            ("Exchange", "BroadcastExchange")
-        ):
-            exchanges[m.group(1)] = node
-        for c in node["children"]:
-            index(c)
-
-    for r in roots:
-        index(r)
+    exchanges = _exchanges_by_plan_id(roots)
 
     def probe(node, seen) -> tuple[bool, bool]:
         """(reaches_explode_agg_free, cap_marker_on_path)."""
@@ -322,7 +334,7 @@ def count_uncapped_block_joins(plan: str) -> tuple[int, int]:
         kids = list(node["children"])
         m = re.match(r"ReusedExchange \[.*\], \w*Exchange .*", name)
         if m:
-            ref = re.search(r"\[plan_id=(\d+)\]", name)
+            ref = _PLAN_ID.search(name)
             if ref and ref.group(1) in exchanges:
                 kids = [exchanges[ref.group(1)]]
         reach = capped = False
@@ -353,20 +365,79 @@ def count_uncapped_block_joins(plan: str) -> tuple[int, int]:
     return block, uncapped
 
 
+def _split_top(text: str) -> list[str]:
+    """``text`` split at the commas outside every bracket and paren
+    (brackets and parens nest inside plan expressions)."""
+    parts, cur, depth = [], [], 0
+    for ch in text:
+        if ch in "[(":
+            depth += 1
+        elif ch in "])":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+            continue
+        cur.append(ch)
+    parts.append("".join(cur))
+    return parts
+
+
 _WINDOW = re.compile(r"\bWindow(?:InPandas)?\s+\[")
+_EXPR_ID = re.compile(r"#\d+L?")
+_PLAN_NUMBER = re.compile(r"^\*\(\d+\) |(?<=plan_id=)\d+|(?<=QueryStage )\d+")
 
 
-def _window_nodes(plan: str) -> set[str]:
-    """Distinct Window node texts in an executed-plan string, each cut
-    from its tree prefix.  A node's text carries its expression IDs
-    (``#NNN``), so the same text printed twice is one node — a subtree
-    repeated because AQE did not reuse its exchange."""
-    nodes = set()
-    for line in plan.splitlines():
-        m = _WINDOW.search(line)
-        if m:
-            nodes.add(line[m.start():])
-    return nodes
+def _subtree_key(node: dict, exchanges: dict[str, dict]) -> str:
+    """A key that two copies of ``node``'s computation share: the
+    subtree's node texts without codegen, stage and plan numbers, with
+    expression IDs renumbered in order of first appearance (a copy of
+    a self-joined frame carries fresh IDs).  An exchange below the top
+    stands in as a digest of its own key, so a ``ReusedExchange`` reads
+    as the exchange it reuses, and so does an unreused copy of it."""
+    texts: list[str] = []
+
+    def walk(n: dict, top: bool) -> None:
+        ref = _PLAN_ID.search(n["text"])
+        if n["text"].startswith("ReusedExchange") and ref:
+            n = exchanges.get(ref.group(1), n)
+        text = _PLAN_NUMBER.sub("", n["text"])
+        if not top and text.startswith(("Exchange", "BroadcastExchange")):
+            key = _subtree_key(n, exchanges).encode()
+            texts.append("exchange " + hashlib.sha1(key).hexdigest())
+            return
+        texts.append(text)
+        for c in n["children"]:
+            walk(c, False)
+
+    walk(node, True)
+    ids: dict[str, int] = {}
+    return _EXPR_ID.sub(
+        lambda m: f"#{ids.setdefault(m.group(), len(ids))}", "\n".join(texts)
+    )
+
+
+def _window_nodes(plan: str) -> list[str]:
+    """The Window node texts of an executed-plan string, expression IDs
+    kept, one per distinct window computation.  The final plan prints
+    a window twice when the query reads it twice (a self-join, both
+    arms of a UNION over one frame) and AQE reuses an exchange below
+    it rather than above, or none; which of these a build gets varies.
+    Copies are matched on :func:`_subtree_key`, so windows of one shape
+    over different inputs stay separate."""
+    roots = _parse_plan_tree(plan)
+    exchanges = _exchanges_by_plan_id(roots)
+    nodes: dict[str, str] = {}
+
+    def walk(n: dict) -> None:
+        if _WINDOW.match(n["text"]):
+            nodes.setdefault(_subtree_key(n, exchanges), n["text"])
+        for c in n["children"]:
+            walk(c)
+
+    for r in roots:
+        walk(r)
+    return list(nodes.values())
 
 
 def count_global_windows(plan: str) -> int:
@@ -380,28 +451,16 @@ def count_global_windows(plan: str) -> int:
     directions, which a partition spec never does).  A SINGLE-group
     node (``Window [exprs]`` — e.g. ``sum(x) OVER ()``, no partition
     and no order) also funnels the whole frame through one task and
-    counts as global.  Bracket groups are counted top-level (brackets
-    nest inside exprs)."""
+    counts as global.  Bracket groups are counted top-level."""
     n = 0
     for node in _window_nodes(plan):
         if "WindowGroupLimit" in node:
             continue
-        rest = node[node.index("["):]
-        depth = 0
-        groups: list[list[str]] = [[]]
-        for ch in rest:
-            if ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                groups.append([])
-                continue
-            groups[-1].append(ch)
+        groups = _split_top(node[node.index("["):])
         if len(groups) == 1:
             n += 1
         elif len(groups) == 2:
-            second = "".join(groups[1]).strip()
+            second = groups[1].strip()
             if " ASC" in second or " DESC" in second or not second:
                 n += 1
     return n
@@ -426,6 +485,35 @@ def count_shrinking_frames(plan: str) -> int:
     return sum(1 for node in _window_nodes(plan) if _SHRINKING_FRAME.search(node))
 
 
+_ALIAS = re.compile(r"\s+AS\s+\S+$")
+
+
+def _window_exprs(node: str) -> list[str]:
+    """The expressions of one Window node text: its first bracket
+    group, split at top-level commas."""
+    first = _split_top(node[node.index("["):])[0].strip()
+    return [e.strip() for e in _split_top(first[1:-1]) if e.strip()]
+
+
+def count_duplicate_window_exprs(plan: str) -> int:
+    """Window expressions in an executed-plan string that repeat
+    another expression of the same Window node: the same function of
+    the same inputs over the same partitioning, ordering and frame.
+
+    A ``.over(w)`` Column referenced N times in one projection becomes
+    N window aggregates (the analyzer aliases each ``_weN`` and never
+    dedupes them), and Spark computes every one on every row.  The
+    comparison ignores only the output alias (``AS _we3#812``): two
+    same-named columns (both sides of a self-join) keep their IDs
+    apart.  A Window subtree printed twice is one node
+    (:func:`_window_nodes`), so it counts once."""
+    n = 0
+    for node in _window_nodes(plan):
+        exprs = [_ALIAS.sub("", e) for e in _window_exprs(node)]
+        n += len(exprs) - len(set(exprs))
+    return n
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from bench import BENCH_QUERIES, _bench_session
@@ -440,8 +528,8 @@ def main() -> None:
         "",
         f"Scale factor dir: `{sf_dir}`.  Regenerate: `python tools/explain_audit.py`.",
         "",
-        "| query | codegen stages | BHJ | SMJ | BNLJ | exchanges | scan filters pushed | pruned columns read | global windows | block joins capped |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "| query | codegen stages | BHJ | SMJ | BNLJ | exchanges | scan filters pushed | pruned columns read | global windows | duplicate window exprs | block joins capped |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     violations: list[str] = []
     for name in BENCH_QUERIES:
@@ -472,6 +560,9 @@ def main() -> None:
         shrinking = count_shrinking_frames(plan)
         if shrinking:
             violations.append(f"{name}: {shrinking} shrinking window frames")
+        dup = count_duplicate_window_exprs(plan)
+        if dup:
+            violations.append(f"{name}: {dup} duplicate window expressions")
         bj, unc = count_uncapped_block_joins(plan)
         bj_allowed, bj_reason = BLOCK_JOIN_ALLOWLIST.get(name, (0, ""))
         if unc > bj_allowed:
@@ -486,7 +577,7 @@ def main() -> None:
         else:
             bj_cell = "-"
         lines.append(
-            f"| {name} | {codegen} | {bhj} | {smj} | {bnlj} | {exch} | {n_pushed} | {n_cols} | {gw_cell} | {bj_cell} |"
+            f"| {name} | {codegen} | {bhj} | {smj} | {bnlj} | {exch} | {n_pushed} | {n_cols} | {gw_cell} | {dup} | {bj_cell} |"
         )
     lines += [
         "",
@@ -520,6 +611,12 @@ def main() -> None:
         "Shrinking window frames (any lower bound other than",
         "unboundedPreceding → unboundedFollowing, quadratic per partition)",
         "are not allowed in any query; the audit exits 1 on one.",
+        "Duplicate window exprs counts window expressions that repeat",
+        "another of the same Window node (same function, inputs, partitioning,",
+        "ordering and frame): Spark computes each copy on every row, and a",
+        "sliding ROWS frame re-aggregates per row.  GATED at 0: select each",
+        "distinct `.over(w)` aggregate once as a named column and build",
+        "formulas from it in a following select.",
     ]
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md")
     with open(out, "w") as f:

@@ -116,23 +116,29 @@ def time_queries(
     sf_dir: str, names: list[str], tag: str, times: dict[str, dict[str, float]]
 ) -> None:
     """Time each named query at ``sf_dir`` in one fresh bench session,
-    keeping the per-query minimum in ``times[name][tag]``.  The
-    session's shared materializations are dropped before it stops, so
-    the next session prices its own builds."""
-    from bench import _bench_session, _time_query
-    from kp_crypto_market_analytics_spark.operators.materialize import (
-        clear_session_materializations,
-    )
+    keeping the per-query minimum in ``times[name][tag]``.
 
-    spark = _bench_session()
+    One untimed pass over the named queries runs first, so no query's
+    time carries its first-run warm-up (the bench session itself warms
+    only on q1_pricing_summary).  Shared materializations are dropped after
+    that pass and again before the session stops, so the timed pass
+    and the next session each price their own builds."""
+    import bench
+    from kp_crypto_market_analytics_spark.operators import materialize
+
+    spark = bench._bench_session()
     for name in names:
-        sec = _time_query(spark, name, sf_dir)
+        bench._time_query(spark, name, sf_dir)
+        spark.catalog.clearCache()
+    materialize.clear_session_materializations(spark)
+    for name in names:
+        sec = bench._time_query(spark, name, sf_dir)
         t = times.setdefault(name, {})
         t[tag] = min(t.get(tag, float("inf")), sec)
         print(f"# {tag} {name}: {sec:.3f}s", file=sys.stderr)
         spark.catalog.clearCache()
         gc.collect()
-    clear_session_materializations(spark)
+    materialize.clear_session_materializations(spark)
     spark.stop()
 
 
